@@ -15,9 +15,9 @@ iterates over the corpus — it iterates over the WORD-FREQUENCY table.
        the driver as ONE row. The merge applies to the symbol arrays via
        an array fold in codegen — no Python in the loop.
     3. The evolving symbol table re-materializes every round (persist ->
-       count -> unpersist predecessor), the same bounded-iteration
-       pattern as operators/dedup.py:connected_canonical, so the plan
-       never grows with the merge count.
+       count -> unpersist predecessor; operators/dedup.py:
+       connected_canonical bounds its rounds the same way with a
+       checkpoint), so the plan never grows with the merge count.
 
 Encoding applies the learned merge ranks greedily per word inside an
 Arrow-batched pandas UDF (the merge table is a broadcast-sized Python

@@ -15,8 +15,8 @@ distance to the selected set. Each of the k rounds is
 — ONE corpus pass per round, no corpus shuffle at all (the per-round
 reduce is a top-1, combined map-side), driver state bounded by k
 center vectors. Re-materialization per round follows the bounded-
-iteration persist/release pattern of bpe_train / connected_canonical,
-so the plan never grows with k.
+iteration persist/release pattern of bpe_train, so the plan never
+grows with k.
 
 Exact-integer arithmetic end-to-end (quantized bigint squared
 distances, deterministic (dist desc, id asc) tie-breaks): the selected

@@ -21,8 +21,8 @@ functions/hashing.py):
 
 ``near_dedup`` composes them: codegen bands for everyone -> candidate
 pairs -> exact shingle sets recomputed for candidate docs only -> verified
-pairs -> canonical = min(doc_id) of the connected component (min-label
-propagation to fixpoint over the verified-pair node set).
+pairs -> canonical = min(doc_id) of the connected component
+(large-star/small-star to fixpoint over the verified-pair edge list).
 """
 
 from __future__ import annotations
@@ -399,21 +399,8 @@ def simhash_pairs(
     )
 
 
-def _cc(algorithm: str):
-    """Connected-components implementation by name — ``"label"`` (min-label
-    propagation, O(diameter) rounds, the default) or ``"star"``
-    (large-star/small-star, O(log n) rounds for adversarial chains). Both
-    return identical (node, canonical) labelings
-    (tests/test_cc_star.py pins equality on randomized graphs)."""
-    if algorithm == "label":
-        return connected_canonical
-    if algorithm == "star":
-        return connected_canonical_star
-    raise ValueError(f"unknown cc_algorithm {algorithm!r} (label|star)")
-
-
 def _lineage_tools(verified: DataFrame, checkpoint_dir: str | None):
-    """(ckpt, blocks, release) helpers shared by the iterative CC variants.
+    """(ckpt, blocks, release) lineage helpers for ``connected_canonical``.
 
     ``ckpt`` truncates lineage per round — RELIABLE ``checkpoint()`` into
     ``checkpoint_dir`` when given (survives executor loss on a cluster),
@@ -455,146 +442,61 @@ def _lineage_tools(verified: DataFrame, checkpoint_dir: str | None):
 
 def connected_canonical(
     verified: DataFrame,
-    max_iter: int = 25,
+    max_iter: int = 40,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(node, canonical) for every node appearing in verified pairs, where
     canonical = min doc_id of the node's CONNECTED COMPONENT (transitive:
     A~B, B~C => one component even when A~C was never verified).
 
-    Iterative min-label propagation to a fixpoint, run only over the
-    verified-pair node set (tiny vs the corpus — pairs above a high Jaccard
-    threshold). Each round shuffles just the edge list; lineage is truncated
-    per round. With ``checkpoint_dir`` set the truncation uses RELIABLE
-    ``checkpoint()`` into that directory (HDFS/object store on a cluster) so
-    an executor loss mid-iteration recovers from stable storage; the default
-    ``localCheckpoint`` keeps blocks on executors — fine for the tiny node
-    set in local mode, not survivable on a real cluster (VERDICT r2 #6).
-
-    Convergence is O(component diameter) rounds — near-dup chains are short
-    in practice; for adversarial long chains at 100 TB switch to
-    large-star/small-star (O(log n) rounds), which this loop structure
-    accommodates. A non-converged exit raises instead of silently returning
-    partial labels (the DuckDB oracle computes a full closure, so partial
-    labels would be wrong, not just approximate).
-
-    Storage is bounded across iterations: each round's checkpoint supersedes
-    the previous round's, whose blocks are released immediately (the eager
-    checkpoint of round i+1 no longer reads them), and the edge-list
-    checkpoint is released once the loop exits. Only the FINAL label
-    checkpoint outlives the call — the caller's join still reads it lazily —
-    so peak executor storage is ~2 label snapshots + the edge list, not
-    max_iter snapshots.
-    """
-
-    _ckpt, _blocks, _release = _lineage_tools(verified, checkpoint_dir)
-
-    edges = verified.select("a", "b")
-    edges = _ckpt(
-        edges.unionByName(
-            edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ),
-        eager=False,
-    )
-    edges_blocks = _blocks(edges)
-    labels = _ckpt(
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-    )
-    labels_blocks = _blocks(labels)
-    def _step(lbls: DataFrame) -> DataFrame:
-        nbr_min = (
-            edges.join(lbls, edges["b"] == lbls["node"])
-            .groupBy(edges["a"].alias("node"))
-            .agg(F.min("lbl").alias("nbr_lbl"))
-        )
-        return lbls.join(nbr_min, on="node", how="left").select(
-            "node",
-            F.least(F.col("lbl"), F.coalesce("nbr_lbl", "lbl")).alias("lbl"),
-        )
-
-    changed = None
-    for _ in range(max_iter):
-        # TWO propagation hops per materialization: the dominant
-        # per-round cost on the tiny node set is the fixed
-        # checkpoint + convergence-count job overhead, not the joins
-        # (measured: ~2 s/round at sf0.1), so doubling hops halves the
-        # rounds for the same diameter coverage. Convergence remains
-        # sound — the loop exits only when a full double-hop changes no
-        # label, which implies the single-hop fixpoint; an extra
-        # half-step at the fixpoint is idempotent.
-        new_labels = _ckpt(_step(_step(labels)))
-        new_blocks = _blocks(new_labels)
-        changed = (
-            new_labels.join(
-                labels.withColumnRenamed("lbl", "old_lbl"), on="node"
-            )
-            .filter(F.col("lbl") != F.col("old_lbl"))
-            .limit(1)
-            .count()
-        )
-        # new_labels is materialized (eager ckpt) and `changed` has read the
-        # old snapshot — its blocks are dead weight from here on
-        _release(labels_blocks)
-        labels, labels_blocks = new_labels, new_blocks
-        if changed == 0:
-            break
-    _release(edges_blocks)
-    if changed is not None and changed != 0:
-        raise RuntimeError(
-            "connected_canonical did not converge within max_iter=%d rounds; "
-            "a duplicate chain longer than twice that diameter exists — raise "
-            "max_iter or switch to large-star/small-star" % max_iter
-        )
-    return labels.select("node", F.col("lbl").alias("canonical"))
-
-
-def connected_canonical_star(
-    verified: DataFrame,
-    max_iter: int = 40,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """(node, canonical) via alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) — same contract as :func:`connected_canonical` (canonical =
-    component min), different convergence law: **O(log n) rounds regardless
-    of component diameter**, vs min-label propagation's O(diameter).
-
-    This is the adversarial-chain path the label-propagation docstring
-    promises: a 10,000-link duplicate chain (pathological but possible at
-    100 TB — think boilerplate-mutated mirror farms) converges in ~a dozen
-    rounds here where propagation would need 5,000 materializations.
-
-    Each round is two groupBy-min + join passes over the edge list only
-    (never the corpus); edges monotonically point larger→smaller node and
-    the edge count never grows beyond the bidirected input, so per-round
-    shuffle volume is bounded by the verified-pair set. Lineage is
-    truncated per round with the same reliable-vs-local checkpoint choice
-    as the propagation variant. Non-convergence raises rather than
-    returning partial labels.
+    Alternating large-star / small-star rounds (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014): **O(log n) rounds
+    regardless of component diameter**, so an adversarial 10,000-link
+    duplicate chain (boilerplate-mutated mirror farms at 100 TB) converges
+    in about a dozen rounds.
 
     large-star(u): connect every neighbor v > u to m = min(N(u) ∪ {u}).
     small-star(u): over larger→smaller edges, connect u and all its
     neighbors except the minimum to that minimum. Fixpoint = forest of
     stars, every node directly attached to its component min.
+
+    Each round is two groupBy-min + join passes over the edge list only
+    (never the corpus); edges point larger→smaller and never outnumber the
+    input pairs, so per-round shuffle volume is bounded by the verified-pair
+    set. A round costs ONE eager checkpoint action: the fixpoint test is a
+    full outer join of the round's edges against the previous round's,
+    whose one-sided rows are counted through ``DataFrame.observe`` while
+    the checkpoint materializes — exact, so a non-converged exit raises
+    instead of silently returning partial labels (the DuckDB oracle
+    computes a full closure, so partial labels would be wrong).
+
+    Lineage is truncated per round. With ``checkpoint_dir`` set the
+    truncation uses RELIABLE ``checkpoint()`` into that directory
+    (HDFS/object store on a cluster) so an executor loss mid-iteration
+    recovers from stable storage; the default ``localCheckpoint`` keeps
+    blocks on executors — fine for the small node set in local mode.
+    Each round's checkpoint supersedes the previous one, whose blocks are
+    released immediately; only the final edge list outlives the call (the
+    caller's join still reads it lazily).
     """
+    from pyspark.sql import Observation
+
     _ckpt, _blocks, _release = _lineage_tools(verified, checkpoint_dir)
 
-    # canonical larger→smaller direction, self-pairs dropped
+    # larger→smaller orientation. Self-pairs (x, x) ride through every
+    # round unchanged, so a node seen only in one still gets its label
     edges = _ckpt(
         verified.select(
             F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
+        ).distinct()
     )
     edges_blocks = _blocks(edges)
     converged = False
     for _ in range(max_iter):
+        links = edges.filter(F.col("u") != F.col("v"))
         # large-star over the bidirected neighborhood
-        bid = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        bid = links.unionByName(
+            links.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
         m_of = (
             bid.groupBy("u")
@@ -616,34 +518,43 @@ def connected_canonical_star(
             .filter(F.col("n") != F.col("m"))
             .select(F.col("n").alias("u"), F.col("m").alias("v"))
             .distinct()
+            .unionByName(edges.filter(F.col("u") == F.col("v")))
         )
-        new_edges = _ckpt(small)
-        new_blocks = _blocks(new_edges)
-        # fixpoint test: symmetric difference empty (both frames are
-        # checkpointed, so each except scans materialized rows only)
-        changed = (
-            new_edges.exceptAll(edges)
-            .unionByName(edges.exceptAll(new_edges))
-            .limit(1)
-            .count()
+        # fixpoint test rides the checkpoint job: an edge present on only
+        # one side of the full outer join means the round changed the graph
+        diff = Observation()
+        new_edges = _ckpt(
+            small.withColumn("_new", F.lit(True))
+            .join(edges.withColumn("_old", F.lit(True)), ["u", "v"], "full")
+            .observe(
+                diff,
+                F.count(
+                    F.when(F.col("_new").isNull() | F.col("_old").isNull(), 1)
+                ).alias("changed"),
+            )
+            .filter(F.col("_new").isNotNull())
+            .select("u", "v")
         )
+        changed = diff.get["changed"]
         _release(edges_blocks)
-        edges, edges_blocks = new_edges, new_blocks
+        edges, edges_blocks = new_edges, _blocks(new_edges)
         if changed == 0:
             converged = True
             break
     if not converged:
         raise RuntimeError(
-            "connected_canonical_star did not converge within max_iter=%d "
+            "connected_canonical did not converge within max_iter=%d "
             "rounds (expected O(log n)); the edge set is still changing"
             % max_iter
         )
-    # star fixpoint: every non-root has exactly one edge to its component
-    # min; roots never appear on the larger side
-    roots = edges.select(F.col("v").alias("node")).distinct()
+    # star fixpoint: every non-root has exactly one link, to its component
+    # min; roots appear only on the smaller side and label themselves. A
+    # self-pair row only offers a node its own id, which never beats the
+    # component min, and labels a self-pair-only node as itself
     return (
-        edges.select(F.col("u").alias("node"), F.col("v").alias("canonical"))
-        .unionByName(roots.select("node", F.col("node").alias("canonical")))
+        edges.unionByName(edges.select(F.col("v").alias("u"), "v"))
+        .groupBy(F.col("u").alias("node"))
+        .agg(F.min("v").alias("canonical"))
     )
 
 
@@ -743,7 +654,6 @@ def near_dedup(
     max_bucket_size: int | None = None,
     shingle_width: int = 3,
     candidate_tier: str = "bands",
-    cc_algorithm: str = "label",
 ) -> DataFrame:
     """End-to-end near-dup marking: docs keep ``canonical_doc_id`` =
     min(doc_id) of their connected component in the verified near-duplicate
@@ -788,10 +698,10 @@ def near_dedup(
         candidate_tier=candidate_tier,
     )
     try:
-        # connected_canonical checkpoints eagerly and iterates to a
-        # fixpoint with driver-side counts, so by the time it returns
-        # every job reading `pairs` has run and its lineage is truncated
-        labels = _cc(cc_algorithm)(verified).withColumnRenamed("node", id_col)
+        # connected_canonical checkpoints its input eagerly and iterates
+        # to a fixpoint, so by the time it returns every job reading
+        # `pairs` has run and its lineage is truncated
+        labels = connected_canonical(verified).withColumnRenamed("node", id_col)
     finally:
         if pairs is not None:
             pairs.unpersist()
@@ -1699,7 +1609,6 @@ def near_dedup_incremental(
     id_col: str = "doc_id",
     threshold_micros: int = 500_000,
     max_bucket_size: int | None = None,
-    cc_algorithm: str = "label",
     base_bands: DataFrame | None = None,
     prune: str = "broadcast",
     base_bands_long: DataFrame | None = None,
@@ -1796,7 +1705,7 @@ def near_dedup_incremental(
             )
         )
         verified = jaccard_verify(sigs, pairs, id_col, threshold_micros)
-        labels = _cc(cc_algorithm)(verified).withColumnRenamed(
+        labels = connected_canonical(verified).withColumnRenamed(
             "node", id_col
         )
     finally:

@@ -111,7 +111,9 @@ def resume_pending(input_df: DataFrame, output_path: str) -> DataFrame:
     with_input_hash), rows hashed under a DIFFERENT framing version make
     this raise instead of classifying the whole corpus as modified and
     appending a duplicate of every row — the loud form of the migration
-    hazard in the module docstring. One bounded aggregate (distinct over
+    hazard in the module docstring. A null version (a partially stamped
+    output) is an unknown version and raises too: its rows would
+    otherwise be re-appended as duplicates. One bounded aggregate (distinct over
     a <= handful-of-versions column) pays for the guard.
     """
     from pyspark.errors import AnalysisException
@@ -134,12 +136,13 @@ def resume_pending(input_df: DataFrame, output_path: str) -> DataFrame:
         stale = [
             r[0]
             for r in out.select("input_hash_ver").distinct().collect()
-            if r[0] is not None and r[0] != INPUT_HASH_VERSION
+            if r[0] != INPUT_HASH_VERSION
         ]
         if stale:
             raise ValueError(
                 f"output at {output_path!r} carries input_hash framing "
-                f"version(s) {sorted(stale)} but this build computes "
+                f"version(s) {sorted(stale, key=str)} (None = unstamped "
+                f"rows) but this build computes "
                 f"version {INPUT_HASH_VERSION}: resuming would re-append "
                 "every row. Rebuild the output once from scratch (see "
                 "operators/manifest.py migration note)."

@@ -672,7 +672,8 @@ def shuffled_shard_assign(
         raise ValueError(f"n_buckets must be positive, got {n_buckets}")
     bucket_width = -(-SHUFFLE_KEY_SPACE // n_buckets)
     base = df.withColumn(
-        "n_tokens", F.size(_tokens(text_col)).cast("bigint")
+        "n_tokens",
+        F.coalesce(F.size(_tokens(text_col)), F.lit(0)).cast("bigint"),
     ).withColumn("_hm", shuffle_key_col(id_col, salt)).withColumn(
         "_bucket", F.expr(f"_hm div CAST({bucket_width} AS BIGINT)")
     )

@@ -34,7 +34,8 @@ def test_narrow_fronts_match_family_query_construction(spark):
     fronts = near_dedup_family_fronts(spark, SF_DIR)
     (v_narrow, p_narrow), (v_chain, p_chain) = fronts[0], fronts[1]
     try:
-        # exactly how spark_near_dedup / _star / _best build their front
+        # exactly how spark_near_dedup (q_near_dedup, q_near_dedup_star)
+        # and spark_near_dedup_best build their front
         docs = _family_docs(spark)
         v_q, p_q = near_dup_verified_pairs(
             docs, threshold_micros=500_000, n_bands=1, band_rows=2

@@ -118,7 +118,8 @@ def test_connected_canonical_nonconvergence_raises(spark):
         connected_canonical,
     )
 
-    # a path graph of diameter 9 cannot converge in 2 min-label rounds
+    # a path graph of diameter 9 needs more than 2 large-star/small-star
+    # rounds (the last round only confirms the fixpoint)
     chain = [("n%02d" % i, "n%02d" % (i + 1)) for i in range(9)]
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_canonical(_pairs_df(spark, chain), max_iter=2)

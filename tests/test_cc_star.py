@@ -1,7 +1,7 @@
-"""Large-star/small-star connected components (Kiveris et al., SoCC 2014):
-equality with min-label propagation, O(log n) round convergence on chains
-where propagation times out, pure-Python union-find ground truth, reliable
-checkpointing, and the near_dedup cc_algorithm switch."""
+"""Large-star/small-star connected components (Kiveris et al., SoCC 2014)
+in ``connected_canonical``: pure-Python union-find ground truth on random
+graphs (self-pair-only nodes included), O(log n) round convergence on a
+long chain, the non-convergence raise, and reliable checkpointing."""
 
 import random
 
@@ -9,7 +9,6 @@ import pytest
 
 from modern_document_converter_for_ai_library_spark.operators.dedup import (
     connected_canonical,
-    connected_canonical_star,
 )
 
 
@@ -47,7 +46,7 @@ def _union_find_truth(pairs):
     return out
 
 
-def test_star_equals_label_and_truth_on_random_graphs(spark):
+def test_star_equals_union_find_truth_on_random_graphs(spark):
     rng = random.Random(20260819)
     for trial in range(4):
         n = rng.choice([12, 30, 60])
@@ -56,22 +55,22 @@ def test_star_equals_label_and_truth_on_random_graphs(spark):
         for _ in range(n_edges):
             a, b = rng.sample(range(n), 2)
             pairs.append(("n%03d" % a, "n%03d" % b))
-        df = _pairs_df(spark, pairs)
+        # node-set contract: a node seen only in a self-pair (x, x) is
+        # still labelled, as its own canonical
+        pairs.append(("s%03d" % trial, "s%03d" % trial))
+        # a self-pair on a node that also has real edges changes nothing
+        pairs.append((pairs[0][0], pairs[0][0]))
         truth = _union_find_truth(pairs)
-        star = _labels(connected_canonical_star(df))
-        label = _labels(connected_canonical(df, max_iter=60))
-        assert star == label == truth, f"trial {trial} diverged"
+        assert _labels(connected_canonical(_pairs_df(spark, pairs))) == truth, (
+            f"trial {trial} diverged"
+        )
 
 
 def test_star_converges_logarithmically_on_long_chain(spark):
-    # a 60-node path has diameter 59: min-label propagation (2 hops/round)
-    # needs ~30 materializations and RAISES at max_iter=8; the star
-    # alternation halves tree heights per round and finishes well inside 8
+    # a 60-node path has diameter 59; the star alternation halves tree
+    # heights per round and finishes well inside 8 rounds
     chain = [("n%03d" % i, "n%03d" % (i + 1)) for i in range(59)]
-    df = _pairs_df(spark, chain)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_canonical(df, max_iter=8)
-    labels = _labels(connected_canonical_star(df, max_iter=8))
+    labels = _labels(connected_canonical(_pairs_df(spark, chain), max_iter=8))
     assert set(labels) == {"n%03d" % i for i in range(60)}
     assert set(labels.values()) == {"n000"}
 
@@ -79,48 +78,20 @@ def test_star_converges_logarithmically_on_long_chain(spark):
 def test_star_nonconvergence_raises_instead_of_partial(spark):
     chain = [("n%03d" % i, "n%03d" % (i + 1)) for i in range(59)]
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_canonical_star(_pairs_df(spark, chain), max_iter=1)
+        connected_canonical(_pairs_df(spark, chain), max_iter=1)
 
 
 def test_star_reliable_checkpoint_writes_stable_storage(spark, tmp_path):
     verified = _pairs_df(spark, [("b", "c"), ("a", "b"), ("x", "y")])
     labels = _labels(
-        connected_canonical_star(verified, checkpoint_dir=str(tmp_path / "ck"))
+        connected_canonical(verified, checkpoint_dir=str(tmp_path / "ck"))
     )
     assert labels == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
     assert any((tmp_path / "ck").rglob("*"))
 
 
-def test_near_dedup_star_algorithm_matches_label(spark):
-    from modern_document_converter_for_ai_library_spark.operators.dedup import (
-        near_dedup,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again and again "
-    rows = [
-        ("d1", base * 4),
-        ("d2", base * 4 + "tail one"),          # near-dup of d1
-        ("d3", base * 4 + "tail one more"),     # chains to d2
-        ("d4", "completely different content about spark partitions " * 5),
-        ("d5", "another unrelated document on tokenizers and vocabularies " * 5),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out_label = {
-        r["doc_id"]: (r["canonical_doc_id"], r["is_near_duplicate"])
-        for r in near_dedup(df, threshold_micros=300_000).collect()
-    }
-    out_star = {
-        r["doc_id"]: (r["canonical_doc_id"], r["is_near_duplicate"])
-        for r in near_dedup(
-            df, threshold_micros=300_000, cc_algorithm="star"
-        ).collect()
-    }
-    assert out_label == out_star
-    assert out_star["d1"] == ("d1", False)
-
-
 def test_star_empty_and_single_pair(spark):
     empty = spark.createDataFrame([], "a: string, b: string")
-    assert connected_canonical_star(empty).count() == 0
-    one = _labels(connected_canonical_star(_pairs_df(spark, [("q", "p")])))
+    assert connected_canonical(empty).count() == 0
+    one = _labels(connected_canonical(_pairs_df(spark, [("q", "p")])))
     assert one == {"p": "p", "q": "p"}

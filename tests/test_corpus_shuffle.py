@@ -148,7 +148,7 @@ def _twin_shuffled_shards(rows, shard_tokens, salt=""):
     order = sorted(rows, key=lambda r: (_hk60(r[0], salt), r[0]))
     out, cum = {}, 0
     for rank, (i, text) in enumerate(order):
-        n = len([t for t in text.split(" ") if t])
+        n = len([t for t in (text or "").split(" ") if t])
         cum += n
         out[i] = (n, rank, cum, (cum - n) // shard_tokens)
     return out
@@ -157,7 +157,9 @@ def _twin_shuffled_shards(rows, shard_tokens, salt=""):
 @pytest.fixture(scope="module")
 def token_docs(spark):
     rows = [(i, " ".join(f"w{i}_{j}" for j in range(1 + i % 7))) for i in range(N)]
-    return rows, spark.createDataFrame(rows, ["doc_id", "text"])
+    # a null text counts 0 tokens; it must not null its cum_tokens/shard_id
+    rows[5] = (5, None)
+    return rows, spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
 def test_shuffled_shards_match_python_twin(spark, token_docs):

@@ -141,3 +141,14 @@ def test_hash_version_stamp_and_guard(spark, corpus, tmp_path):
     stamped.withColumn("input_hash_ver", F.lit(1)).write.parquet(out_stale)
     with pytest.raises(ValueError, match="framing"):
         resume_pending(with_input_hash(corpus), out_stale)
+
+    # partially stamped output (null version on some rows): an unknown
+    # version is refused too, not waved through to re-append its rows
+    out_partial = str(tmp_path / "partial_run")
+    unstamped_id = stamped.select("doc_id").first()[0]
+    stamped.withColumn(
+        "input_hash_ver",
+        F.when(F.col("doc_id") != unstamped_id, F.col("input_hash_ver")),
+    ).write.parquet(out_partial)
+    with pytest.raises(ValueError, match="framing"):
+        resume_pending(with_input_hash(corpus), out_partial)
