@@ -21,20 +21,15 @@ columns so a DuckDB oracle reproduces identical rows:
 All ratios are integer micros (x * 1_000_000 // denom) — float division
 would make pass/fail flags engine-dependent at the thresholds.
 
-Scale notes: the quality signals are map-only (higher-order array
-functions over the token array — no shuffle, no Python). The repetition
-stats default to a map-only Arrow kernel — per-document Counter counting
-is O(tokens) time and O(that doc's distinct grams) memory, so the stage
-carries no shuffle at any corpus size and per-doc memory is bounded by
-the document's own length (3.3x faster than the columnar chains at sf0.1,
-fresh-JVM A/B). The columnar explode+groupBy variant (two shuffles of
-O(total tokens) keys, no Python) is retained under ``mode="columnar"``
-for Python-worker-constrained clusters and asserted byte-identical.
+Scale notes: the quality signals and the repetition stats are both
+map-only JVM expressions over the token array — no shuffle, no Python.
+Repetition sorts each document's own grams and folds the runs
+(:func:`repetition_exprs`), so per-document memory is bounded by that
+document's length at any corpus size.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -50,9 +45,10 @@ def micros_ratio(num, den) -> F.Column:
     multi-GB single document) — flipping a threshold flag in one engine
     but not the other. Route through DECIMAL(38,0): subtract the exact
     remainder first so the final division is integer-valued, hence
-    exact at any decimal scale."""
+    exact at any decimal scale. A zero denominator yields null, as
+    DuckDB's ``x // 0`` does (ANSI mode would raise on ``% 0``)."""
     n6 = num.cast("decimal(38,0)") * MICRO
-    d = den.cast("decimal(38,0)")
+    d = F.nullif(den.cast("decimal(38,0)"), F.lit(0))
     return ((n6 - n6 % d) / d).cast("bigint")
 
 # Gopher's stopword-presence list (Rae et al. 2021 A1.1: "contains at
@@ -136,6 +132,10 @@ def gopher_quality_signals(
 
 
 def _grams(toks, width: int):
+    """Word ``width``-grams of the token array ``toks``.
+
+    Materialize ``toks`` first (withColumn): lambdas re-evaluate inline exprs.
+    """
     n = F.size(toks)
     grams = F.transform(
         F.sequence(F.lit(1), n - (width - 1)),
@@ -149,157 +149,89 @@ def _grams(toks, width: int):
     )
 
 
-def _gram_frac(
-    df: DataFrame, id_col: str, toks, width: int, dup_only: bool
-) -> DataFrame:
-    """(id, frac_micros): characters in the top gram (dup_only=False) or in
-    all duplicated grams (dup_only=True), over total gram-occurrence chars.
-    Ties for the top gram break (count desc, gram asc) — deterministic."""
-    ex = df.select(F.col(id_col), F.explode(_grams(toks, width)).alias("g"))
-    counts = ex.groupBy(id_col, "g").agg(F.count("*").alias("n"))
-    chars = (F.col("n") * F.length("g")).cast("bigint")
-    if dup_only:
-        per_doc = counts.groupBy(id_col).agg(
-            F.sum(chars).alias("_total"),
-            F.sum(F.when(F.col("n") >= 2, chars).otherwise(0)).alias("_hit"),
-        )
-    else:
-        # min over the (negated count, gram) ordering key = highest count,
-        # lexicographically-first gram among ties
-        per_doc = counts.groupBy(id_col).agg(
-            F.sum(chars).alias("_total"),
-            F.min_by(
-                chars, F.struct((-F.col("n")).alias("negn"), F.col("g"))
-            ).alias("_hit"),
-        )
-    return per_doc.select(
-        F.col(id_col),
-        micros_ratio(
-            F.col("_hit"), F.greatest(F.col("_total"), F.lit(1))
-        ).alias("frac_micros"),
-    )
+def repetition_exprs(toks_col: str) -> dict:
+    """The Gopher repetition family as named Column expressions over an
+    existing token-array column — ``top2_frac_micros`` (chars in the
+    most frequent word 2-gram) and ``dup5_frac_micros`` (chars in
+    duplicated word 5-grams), each over all gram-occurrence chars.
 
+    One map-only JVM fold per width: the grams are sorted so equal
+    grams form runs, and one ``aggregate`` pass carries (prev, run,
+    total, best, hit). Top 2-gram: a run replaces the best only on a
+    strictly higher count, so a tie keeps the lexicographically first
+    gram (the oracle's ``ORDER BY n DESC, g ASC``); hit = best count *
+    its length. Duplicated 5-grams: a gram adds both copies' chars on
+    its second occurrence and one copy per further repeat. Gram-less
+    docs fold nothing and yield 0."""
+    zero, one = F.lit(0).cast("bigint"), F.lit(1).cast("bigint")
 
-def _rep_frac_pair(text) -> tuple:
-    """Exact-integer (top2_frac_micros, dup5_frac_micros) for ONE document.
-
-    Mirrors the columnar chains verbatim: single-space tokenization
-    dropping empties, gram chars = count * len(gram), top-2-gram ties
-    break (count desc, gram asc), fractions are integer micros with
-    floor division (the oracle's `//`), gram-less widths yield 0.
-    """
-    from collections import Counter
-
-    # null text arrives as None or NaN depending on the Arrow->pandas path;
-    # both count as token-less (the columnar chains' left-join-fillna(0))
-    toks = [t for t in text.split(" ") if t] if isinstance(text, str) else []
-    n = len(toks)
-    if n >= 2:
-        c2 = Counter(a + " " + b for a, b in zip(toks, toks[1:]))
-        total = 0
-        best_key = None
-        best_chars = 0
-        for g, k in c2.items():
-            ch = k * len(g)
-            total += ch
-            key = (-k, g)
-            if best_key is None or key < best_key:
-                best_key, best_chars = key, ch
-        top2 = (best_chars * MICRO) // max(total, 1)
-    else:
-        top2 = 0
-    if n >= 5:
-        c5 = Counter(" ".join(toks[i : i + 5]) for i in range(n - 4))
-        total = 0
-        hit = 0
-        for g, k in c5.items():
-            ch = k * len(g)
-            total += ch
-            if k >= 2:
-                hit += ch
-        dup5 = (hit * MICRO) // max(total, 1)
-    else:
-        dup5 = 0
-    return top2, dup5
-
-
-def repetition_struct_udf():
-    """Arrow-batched scalar UDF: text -> struct(top2/dup5 frac micros).
-
-    The map-only alternative to the explode+groupBy chains: per-doc
-    Counter counting is O(tokens) time and O(distinct grams) memory for
-    a single document at a time, so it carries no shuffle and no
-    token-scale key exchange. Composes as a plain column — the quality
-    funnel stacks it next to the (already map-only) gopher and langid
-    expressions for a zero-Exchange plan.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("top2_frac_micros bigint, dup5_frac_micros bigint")
-    def _k(text: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame(
-            [_rep_frac_pair(t) for t in text],
-            columns=["top2_frac_micros", "dup5_frac_micros"],
+    def fold(width: int, top: bool) -> F.Column:
+        init = F.struct(
+            F.lit(None).cast("string").alias("prev"),
+            zero.alias("run"),
+            zero.alias("total"),
+            zero.alias("best"),
+            zero.alias("hit"),
         )
 
-    return _k
+        def step(a, x):
+            ln = F.length(x).cast("bigint")
+
+            def state(run, best, hit):
+                return F.struct(
+                    x.alias("prev"),
+                    run.alias("run"),
+                    (a["total"] + ln).alias("total"),
+                    best.alias("best"),
+                    hit.alias("hit"),
+                )
+
+            run = a["run"] + 1
+            if top:
+                more = run > a["best"]
+                same = state(
+                    run,
+                    F.when(more, run).otherwise(a["best"]),
+                    F.when(more, run * ln).otherwise(a["hit"]),
+                )
+                new = state(
+                    one,
+                    F.greatest(a["best"], one),
+                    F.when(a["best"] == 0, ln).otherwise(a["hit"]),
+                )
+            else:
+                dup = F.when(run == 2, 2 * ln).otherwise(ln)
+                same = state(run, a["best"], a["hit"] + dup)
+                new = state(one, a["best"], a["hit"])
+            return F.when(x == a["prev"], same).otherwise(new)
+
+        return F.aggregate(
+            F.sort_array(_grams(F.col(toks_col), width)),
+            init,
+            step,
+            lambda a: micros_ratio(a["hit"], F.greatest(a["total"], one)),
+        )
+
+    return {
+        "top2_frac_micros": fold(2, top=True),
+        "dup5_frac_micros": fold(5, top=False),
+    }
 
 
 def ngram_repetition_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    mode: str = "kernel",
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, top2_frac_micros, dup5_frac_micros, repetition_pass).
 
-    Docs too short to form a gram of the given width contribute no
-    exploded rows; they rejoin with fraction 0 (nothing repeated).
-
-    Two modes, asserted equal in tests (test_quality_urls.py):
-
-    - ``kernel`` (default): one Arrow stage computing both widths per
-      document with a Python Counter — map-only, ZERO Exchange. The
-      per-doc state is O(distinct grams) for one document at a time, so
-      book-sized docs cost memory proportional to their own length only.
-      A/B at sf0.1 (fresh JVM per variant): 3.8 s vs 12.7 s columnar
-      cold; ~0.4-0.9 s vs ~9-12 s with warm Python workers.
-    - ``columnar``: explode + (doc, gram) groupBy + per-doc aggregate,
-      twice. Key cardinality O(total tokens) hashed across the cluster —
-      four shuffles, but no Python. Kept for clusters where Python
-      workers are the bottleneck.
-
-    Plan note (columnar mode): the two widths run as SEPARATE
-    explode+groupBy chains on purpose. A fused single-explode variant
-    (one scan, width-tagged grams, one combined aggregate) measured 2.5x
-    SLOWER at sf0.1 (~24 s vs ~9-15 s, interleaved A/B): the independent
-    chains are disjoint plan subtrees Spark schedules CONCURRENTLY, so
-    wall time is max(chain2, chain5) and the cluster stays saturated,
-    while the fused plan serializes everything through one wider shuffle.
+    Map-only: the :func:`repetition_exprs` folds over one tokenized
+    column — no Exchange, no Python. Per-document work is a sort of that
+    document's own grams, so memory is bounded by the longest document,
+    not the corpus. Docs too short to form a gram of a width get
+    fraction 0 for it (nothing repeated).
     """
-    if mode == "kernel":
-        s = repetition_struct_udf()(F.col(text_col))
-        return df.select(F.col(id_col), s.alias("_r")).select(
-            F.col(id_col),
-            F.col("_r.top2_frac_micros").alias("top2_frac_micros"),
-            F.col("_r.dup5_frac_micros").alias("dup5_frac_micros"),
-            (
-                (F.col("_r.top2_frac_micros") <= TOP2_MAX_FRAC_MICROS)
-                & (F.col("_r.dup5_frac_micros") <= DUP5_MAX_FRAC_MICROS)
-            ).alias("repetition_pass"),
-        )
-    toks = _tokens(text_col)
-    base = df.select(F.col(id_col))
-    top2 = _gram_frac(df, id_col, toks, 2, dup_only=False).withColumnRenamed(
-        "frac_micros", "top2_frac_micros"
-    )
-    dup5 = _gram_frac(df, id_col, toks, 5, dup_only=True).withColumnRenamed(
-        "frac_micros", "dup5_frac_micros"
-    )
-    out = (
-        base.join(top2, on=id_col, how="left")
-        .join(dup5, on=id_col, how="left")
-        .fillna(0, subset=["top2_frac_micros", "dup5_frac_micros"])
+    out = df.withColumn("_toks", _tokens(text_col)).select(
+        F.col(id_col),
+        *[c.alias(name) for name, c in repetition_exprs("_toks").items()],
     )
     return out.select(
         id_col,
@@ -324,12 +256,12 @@ def quality_funnel(
     language gates with first-failed-rule attribution (priority order
     gopher → repetition → langid) — stacked as columns on ONE scan.
 
-    Zero Exchange, zero joins, one Arrow stage (the repetition kernel):
-    every family is a per-document function, so the funnel is map-only at
-    any corpus size. ``langid_stopwords`` is the caller's language-ID
-    stopword list (queries.py:STOPWORDS for the oracled query); a zero
-    token count makes the stopword ratio null => not-English, matching
-    the standalone langid query's 'unknown' bucket.
+    Zero Exchange, zero joins, no Python: every family is a per-document
+    JVM expression over one shared token column, so the funnel is
+    map-only at any corpus size. ``langid_stopwords`` is the caller's
+    language-ID stopword list (queries.py:STOPWORDS for the oracled
+    query); a zero token count makes the stopword ratio null =>
+    not-English, matching the standalone langid query's 'unknown' bucket.
 
     ``carry`` names input columns to pass through alongside the verdict
     columns, so a funnel consumer can take survivors with
@@ -340,13 +272,12 @@ def quality_funnel(
     the join-back quality stage scaled ~2.4x at 4x cores because the
     shuffle, not the map work, was the marginal cost).
     """
-    base = df.withColumn("_toks", _tokens(text_col)).withColumn(
-        "_rep", repetition_struct_udf()(F.col(text_col))
-    )
+    base = df.withColumn("_toks", _tokens(text_col))
     gopher_pass = gopher_signal_exprs(text_col, "_toks")["gopher_pass"]
-    rep_pass = (
-        F.col("_rep.top2_frac_micros") <= TOP2_MAX_FRAC_MICROS
-    ) & (F.col("_rep.dup5_frac_micros") <= DUP5_MAX_FRAC_MICROS)
+    rep = repetition_exprs("_toks")
+    rep_pass = (rep["top2_frac_micros"] <= TOP2_MAX_FRAC_MICROS) & (
+        rep["dup5_frac_micros"] <= DUP5_MAX_FRAC_MICROS
+    )
     n = F.size("_toks").cast("bigint")
     stop_arr = F.array(*[F.lit(s) for s in langid_stopwords])
     n_stop = F.size(

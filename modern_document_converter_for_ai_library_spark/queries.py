@@ -769,9 +769,8 @@ FROM r
 # q_repetition_stats — Gopher repetition filters: fraction of characters in
 # the most frequent word-2-gram (tie-break count desc, gram asc) and in
 # duplicated word-5-grams (operators/quality.py:ngram_repetition_stats).
-# Scale shape: map-only Arrow kernel (per-doc Counter, O(tokens) time and
-# O(one doc's distinct grams) memory) — zero Exchange; the columnar
-# explode+groupBy variant is retained and asserted identical in tests.
+# Scale shape: map-only JVM fold over each doc's sorted grams
+# (operators/quality.py:repetition_exprs) — zero Exchange, no Python.
 # ---------------------------------------------------------------------------
 
 def spark_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1484,7 +1483,7 @@ _SHUF_SHARD_MANIFEST_SQL = (
 
 def spark_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All three rule families stacked as columns on ONE scan — zero
-    Exchange, one Arrow stage (the repetition kernel), no joins. Each
+    Exchange, no Python, no joins. Each
     family's expression builder is the same one its standalone oracled
     query uses, so parity on the families transfers to the funnel."""
     from .operators.quality import quality_funnel

@@ -42,8 +42,8 @@ SHOWCASE = [
     ("q_group_sample", "mergeable bottom-k group sample: two-phase salted windows"),
     ("q_hll_distinct", "HyperLogLog registers: two partial-aggregated groupBys, bounded state"),
     ("q_token_budget_mix", "token-budget mix: two-phase bucketed cumsum — per-(source, bucket) windows only, offsets from the tiny per-bucket frame"),
-    ("q_repetition_stats", "Gopher repetition via the map-only Arrow kernel: ONE ArrowEvalPython, ZERO exchanges"),
-    ("q_quality_funnel", "fused three-family funnel on one scan: zero joins, zero exchanges, one Python stage"),
+    ("q_repetition_stats", "Gopher repetition as a map-only JVM fold over each doc's sorted grams: ZERO exchanges, no Python"),
+    ("q_quality_funnel", "fused three-family funnel on one scan: zero joins, zero exchanges, no Python"),
     ("q_dsir_select", "DSIR importance: four broadcast model joins over the shared gram pyramid, two data-scale partial aggregates"),
     ("q_substr_removal", "ExactSubstr excision: codegen position-explode gram keys (no higher-order lambda), ONE partial-aggregated gram groupBy + occurrence join, per-doc interval fold in an array expression"),
     ("q_bpe_pair_counts", "BPE training round: corpus-scale word-frequency groupBy, then pair explode over the BOUNDED vocab only"),

@@ -82,44 +82,56 @@ def test_repetition_tie_break_lexicographic(spark):
     assert out[1]["top2_frac_micros"] == (6 * 1_000_000) // total
 
 
-def test_repetition_modes_identical(spark):
-    """The map-only Arrow kernel and the explode+groupBy columnar chains
-    must produce byte-identical rows — including gram-less docs, exact
-    tie-breaks, empty/whitespace texts, and repeated-run docs."""
+def _python_stage_free(df):
+    """The executed plan has no Exchange and no Python evaluation node."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for node in ("Exchange", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, node
+
+
+def test_repetition_matches_oracle_sql(spark):
+    """The JVM fold equals the DuckDB oracle (queries._REPETITION_SQL) row
+    for row — gram-less docs, exact top-2 tie-breaks between grams of
+    different lengths, unicode tokens, runs of spaces, empty/whitespace
+    and null texts, repeated-run docs — and plans map-only, no Python."""
     import random
 
+    import duckdb
+
+    from modern_document_converter_for_ai_library_spark.queries import (
+        _REPETITION_SQL,
+    )
+
     rng = random.Random(7)
-    vocab = ["a", "bb", "ccc", "zz", "the", "of", "and", "x"]
+    vocab = ["a", "bb", "ccc", "zz", "the", "of", "x", "é", "日本", "👍🏽", "Zz"]
     rows = [
+        (0, None),
         (1, ""),
         (2, "   "),
         (3, "lonely"),
         (4, "a b a b a b"),
-        (5, "a a a zz zz zz"),
-        (0, None),  # null text: NaN on the Arrow->pandas path, token-less
+        (5, "a a a zz zz zz"),  # tie 'a a' (3 chars) vs 'zz zz' (5)
+        (6, "日本 日本 日本 é é é"),  # tie 'é é' vs '日本 日本'
+        (7, "  zz   zz  zz a  a a   "),  # runs of spaces around a tie
     ]
-    for i in range(6, 60):
-        n = rng.randrange(0, 40)
+    for i in range(8, 80):
+        n = rng.randrange(0, 60)
         toks = [rng.choice(vocab) for _ in range(n)]
         if rng.random() < 0.5 and n >= 5:  # plant a repeated 5-gram run
             run = toks[:5]
             toks = run + toks + run
-        rows.append((i, " ".join(toks)))
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    a = ngram_repetition_stats(df, mode="kernel").orderBy("doc_id").collect()
-    b = ngram_repetition_stats(df, mode="columnar").orderBy("doc_id").collect()
-    assert a == b
+        sep = " " * rng.choice([1, 1, 2, 3])
+        rows.append((i, sep.join(toks)))
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = sorted(tuple(r) for r in ngram_repetition_stats(df).collect())
 
-    # kernel mode is the default and plans with no Exchange and no join
-    plan = (
-        ngram_repetition_stats(df)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-        .split("+- == Initial Plan ==")[0]
-    )
-    assert "Exchange" not in plan
-    assert plan.count("ArrowEvalPython") == 1
+    con = duckdb.connect()
+    con.register("documents", df.toPandas())
+    want = sorted(con.execute(_REPETITION_SQL).fetchall())
+    con.close()
+    assert got == want
+
+    _python_stage_free(ngram_repetition_stats(df))
 
 
 def test_url_normalize_hand_cases(spark):
@@ -623,6 +635,8 @@ def test_quality_funnel_carry_is_map_only(spark):
         (1, "a", "the quick brown fox of the barn and some to words in here "
                  "the quick brown fox of the barn and some to words in here"),
         (2, "b", "@@ ##"),
+        (3, "c", ""),  # zero tokens: null stopword ratio, not a crash
+        (4, "d", "   "),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "source", "text"])
     plain = {
@@ -632,10 +646,50 @@ def test_quality_funnel_carry_is_map_only(spark):
     carried = quality_funnel(df, STOPWORDS, carry=["source", "text"])
     got = carried.collect()
     assert {r["doc_id"]: (r["keep"], r["first_failed_rule"]) for r in got} == plain
-    assert {r["doc_id"]: r["source"] for r in got} == {1: "a", 2: "b"}
-    # map-only: no Exchange anywhere in the survivor-selection plan
+    assert {r["doc_id"]: r["source"] for r in got} == {
+        1: "a", 2: "b", 3: "c", 4: "d"
+    }
+    assert plain[3] == plain[4] == (False, "gopher")
+    # map-only, no Python: no Exchange anywhere in the survivor-selection
+    # plan and no Python evaluation node
     survivors = carried.filter("keep").select("doc_id", "source", "text")
-    phys = survivors._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in phys
+    _python_stage_free(survivors)
     # carry=[id_col] duplicates nothing
     assert quality_funnel(df, STOPWORDS, carry=["doc_id"]).columns.count("doc_id") == 1
+
+
+def test_quality_langid_zero_token_docs_match_oracle(spark, tmp_path):
+    """Empty and whitespace-only documents have zero tokens: the stopword
+    ratio is null (DuckDB's ``x // 0``) and the language 'unknown' —
+    under ANSI mode a ``% 0`` would fail the whole query instead."""
+    import duckdb
+
+    from modern_document_converter_for_ai_library_spark.queries import (
+        _QUALITY_SQL,
+        spark_quality_langid,
+    )
+
+    rows = [
+        (1, "the cat and the dog of the house sat with them " * 3),
+        (2, "lorem ipsum"),
+        (3, ""),
+        (4, "   "),
+        (5, None),
+    ]
+    spark.createDataFrame(rows, "doc_id bigint, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    got = sorted(
+        tuple(r) for r in spark_quality_langid(spark, str(tmp_path)).collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM read_parquet('%s/*.parquet')"
+        % (tmp_path / "documents.parquet")
+    )
+    want = sorted(con.execute(_QUALITY_SQL).fetchall())
+    con.close()
+    assert got == want
+    by_id = {r[0]: r for r in got}
+    assert by_id[3][3] is None and by_id[3][4] == "unknown"
+    assert by_id[4][3] is None and by_id[4][4] == "unknown"
