@@ -14,7 +14,9 @@ via a noop-sink write.
 
 Warm-share protocol (VERDICT r3 item 5 / r4 item 4): two query families
 rebuild identical deterministic front ends — the q_near_dedup family's
-LSH->verify frames and the q_ivf/pq/ivfpq codebook builds. Those fronts
+LSH->verify frames (q_lsh_jaccard_pairs, q_minhash128_pairs and
+q_split_leakage build the same frames through the same operator, so
+they read them from cache too) and the q_ivf/pq/ivfpq codebook builds. Those fronts
 are built ONCE before timing, persisted, and their cost is reported
 separately in ``warm_shared_fronts_sec`` (added into ``value``, never
 hidden). Per-query timings for those families therefore measure the

@@ -1,7 +1,6 @@
 from .hashing import (
     tokens_col,
     shingle_hashes_col,
-    minhash_col,
     lsh_plane_signs,
 )
 from .spans import (
@@ -14,7 +13,6 @@ from .spans import (
 __all__ = [
     "tokens_col",
     "shingle_hashes_col",
-    "minhash_col",
     "lsh_plane_signs",
     "multizone_spans",
     "limit_spans",

@@ -21,8 +21,8 @@ def tokens_col(text_col: str = "text") -> Column:
 
 
 def shingle_hashes_col(tokens: Column, width: int = 3) -> Column:
-    """md5 of each ``width``-word shingle. One digest per shingle — the
-    minhash permutations slice this digest rather than re-hashing."""
+    """md5 of each ``width``-word shingle — the exact-Jaccard verify sets
+    (``operators/dedup.py:jaccard_verify``)."""
     n = F.size(tokens)
     shingles = F.transform(
         F.sequence(F.lit(1), n - (width - 1)),
@@ -31,16 +31,6 @@ def shingle_hashes_col(tokens: Column, width: int = 3) -> Column:
         ),
     )
     return F.transform(shingles, lambda s: F.md5(s))
-
-
-def minhash_col(hashes: Column, k: int) -> Column:
-    """k-th minhash: min over the k-th disjoint 8-hex-char slice of the
-    per-shingle digests (md5 bits are independent => valid permutations)."""
-
-    def _slice(h: Column) -> Column:
-        return F.substring(h, 1 + 8 * k, 8)
-
-    return F.array_min(F.transform(hashes, _slice))
 
 
 def simhash_col(tokens: Column, n_bits: int = 64) -> Column:

@@ -1,6 +1,6 @@
 """Deduplication operators for training-data pipelines.
 
-Four tiers, cheapest to richest (all engine-deterministic, see
+The building blocks, cheapest to richest (all engine-deterministic, see
 functions/hashing.py):
 
   exact_dedup          md5 content grouping; one shuffle on the hash
@@ -11,13 +11,11 @@ functions/hashing.py):
                        2-universal integer family over one base hash,
                        banded 16x8 (the steep S-curve real dedup recipes
                        use); same codegen explode+MIN plan shape
-  minhash_signatures   k=4 sliced-md5 minhashes over word 3-shingles with
-                       the shingle-hash array carried alongside (verify
-                       tier / fused single-frame path)
   lsh_candidate_pairs  bucket-local banded pairs: docs colliding on ANY
                        band — the 100 TB scale path (fan-out is per-band
                        bucket, never all-pairs)
-  jaccard_verify       exact shingle-set Jaccard on the candidates only
+  jaccard_verify       exact shingle-set Jaccard on the candidates only;
+                       builds the shingle sets itself, for candidate docs
 
 ``near_dedup`` composes them: codegen bands for everyone -> candidate
 pairs -> exact shingle sets recomputed for candidate docs only -> verified
@@ -30,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import minhash_col, shingle_hashes_col, tokens_col
+from ..functions.hashing import shingle_hashes_col, tokens_col
 from ..plans.caching import CacheScope, scoped_persist
 
 MICRO = 1_000_000
@@ -54,45 +52,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
         .withColumn("is_duplicate", F.col(id_col) != F.col("canonical_doc_id"))
         .drop("_text_hash")
     )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_bands: int = 4,
-    shingle_width: int = 3,
-    band_rows: int = 1,
-) -> DataFrame:
-    """(id, band_0..band_{k-1}, shingle_hashes) for docs with enough tokens.
-
-    ``band_rows`` is the classic LSH ``r``: each band value concatenates
-    ``r`` minhash permutations, so two docs collide on a band with
-    probability ~J^r. r=1 maximizes recall but degenerates on low-entropy
-    corpora (everything sharing the globally-smallest shingle lands in one
-    bucket); r=2 keeps buckets proportional to true near-duplicate density —
-    the 100 TB default. Requires ``n_bands * band_rows <= 4`` (one md5 per
-    shingle, 4 disjoint 8-hex slices).
-    """
-    if n_bands * band_rows > 4:
-        raise ValueError("n_bands * band_rows must be <= 4 (md5 slice budget)")
-    toks = tokens_col(text_col)
-    with_tokens = df.withColumn("_tokens", toks).filter(
-        F.size("_tokens") >= shingle_width
-    )
-    hashed = with_tokens.withColumn(
-        "shingle_hashes", shingle_hashes_col(F.col("_tokens"), shingle_width)
-    )
-    bands = [
-        F.concat(
-            *[
-                minhash_col(F.col("shingle_hashes"), k * band_rows + j)
-                for j in range(band_rows)
-            ]
-        ).alias(f"band_{k}")
-        for k in range(n_bands)
-    ]
-    return hashed.select(F.col(id_col), *bands, "shingle_hashes")
 
 
 def _bucket_local_pairs(
@@ -187,11 +146,10 @@ def _bucket_local_pairs(
 
 
 def lsh_candidate_pairs(
-    sigs: DataFrame,
+    bands: DataFrame,
     id_col: str = "doc_id",
     n_bands: int = 4,
     max_bucket_size: int | None = None,
-    pre_aggregated: bool = False,
 ) -> DataFrame:
     """Distinct (a, b) pairs (a < b) sharing at least one band value.
 
@@ -199,6 +157,14 @@ def lsh_candidate_pairs(
     aggregate into per-bucket id lists and pairs are emitted within each
     bucket — at scale the shuffle is keyed by band value, so cost tracks
     bucket sizes, not the quadratic all-pairs space.
+
+    Precondition: the ``band_0..band_{n_bands-1}`` columns of ``bands``
+    sit behind an Aggregate node, as ``minhash_bands``' groupBy-MIN output
+    does. Over computed band columns Catalyst infers ``isnotnull(band_k)``
+    predicates and inlines the whole shingle/md5 expression tree into them
+    and into the parquet scan's DataFilters, re-evaluating it several
+    times per row (measured 13x slower at sf0.1); an Aggregate is a
+    barrier predicates cannot be pushed through.
 
     ``max_bucket_size`` is the skew guard for the quadratic term: buckets
     larger than the cap are dropped from candidate generation (a bucket of
@@ -208,26 +174,7 @@ def lsh_candidate_pairs(
     compared through their other bands. Callers wanting an audit trail can
     count them via ``oversized_buckets``.
     """
-    # Aggregate barrier: joining directly on the computed band columns makes
-    # Catalyst infer `isnotnull(band_k)` join-key predicates and inline the
-    # FULL minhash expression tree into them (and into the parquet scan's
-    # DataFilters), re-evaluating the whole shingle/md5 chain several times
-    # per row — measured 13x slower at sf0.1. A trivial first() aggregate on
-    # the unique id materializes the bands behind an Aggregate node that
-    # predicates cannot be pushed through; partial aggregation keeps the
-    # extra shuffle at one slim (id, bands) row per doc.
     band_cols = [f"band_{k}" for k in range(n_bands)]
-    if pre_aggregated:
-        # caller guarantees the band columns already sit behind an Aggregate
-        # node (e.g. minhash_bands' groupBy-MIN output) — re-aggregating
-        # would add a second full-corpus slim shuffle for nothing
-        slim = sigs.select(F.col(id_col), *band_cols)
-    else:
-        slim = (
-            sigs.select(F.col(id_col), *band_cols)
-            .groupBy(id_col)
-            .agg(*[F.first(c).alias(c) for c in band_cols])
-        )
     # bucket-local pair generation (same shape as minhash_wide_pairs, and
     # for the same reasons): one posexplode to (band_idx, band_value) rows,
     # skew cap as a count window on the SAME key, per-bucket id lists,
@@ -237,7 +184,7 @@ def lsh_candidate_pairs(
     # for the wide tier's bucket-local plan on the 200k candidate-dilution
     # corpus (scripts/dedup_tier_ab.py); this rewrite closes that gap with
     # identical output (pinned by the tier-equality and parity tests).
-    long = slim.select(
+    long = bands.select(
         F.col(id_col),
         F.posexplode(F.array(*[F.col(c) for c in band_cols])).alias(
             "band_idx", "band_value"
@@ -247,14 +194,14 @@ def lsh_candidate_pairs(
 
 
 def oversized_buckets(
-    sigs: DataFrame, n_bands: int, max_bucket_size: int
+    bands: DataFrame, n_bands: int, max_bucket_size: int
 ) -> DataFrame:
     """(band_idx, band_value, n_docs) for buckets the cap would drop —
     the audit/metrics companion to ``lsh_candidate_pairs(max_bucket_size=)``."""
     out = None
     for k in range(n_bands):
         g = (
-            sigs.groupBy(F.col(f"band_{k}").alias("band_value"))
+            bands.groupBy(F.col(f"band_{k}").alias("band_value"))
             .agg(F.count("*").alias("n_docs"))
             .filter(F.col("n_docs") > max_bucket_size)
             .withColumn("band_idx", F.lit(k))
@@ -265,21 +212,43 @@ def oversized_buckets(
 
 
 def jaccard_verify(
-    sigs: DataFrame,
+    docs: DataFrame,
     pairs: DataFrame,
+    text_col: str = "text",
     id_col: str = "doc_id",
     threshold_micros: int = 500_000,
+    shingle_width: int = 3,
 ) -> DataFrame:
     """Exact shingle-set Jaccard on candidate pairs; integer-quantized.
+
+    ``docs`` is the (id, text) corpus the ``pairs`` ids come from. The
+    shingle-hash sets are built here, only for the docs that appear in a
+    pair (a leftsemi on the candidate node set), so candidates << corpus
+    keeps the per-doc array materialization off the full corpus. Docs
+    shorter than ``shingle_width`` tokens have no shingles and drop out.
+
+    ``pairs`` is read twice (node set + verify join): callers persist it.
 
     intersection/union computed over DISTINCT shingle hashes via the
     hash-based array_intersect (O(n+m); the naive filter+contains variant is
     O(n*m) and dominated the bench at corpus scale). DuckDB's list_intersect
     has the same distinct-count semantics (verified in the parity test).
     """
-    sets_df = sigs.select(
-        F.col(id_col).alias("_sid"),
-        F.array_distinct("shingle_hashes").alias("_sset"),
+    nodes = (
+        pairs.select(F.col("a").alias(id_col))
+        .unionByName(pairs.select(F.col("b").alias(id_col)))
+        .distinct()
+    )
+    sets_df = (
+        docs.join(nodes, on=id_col, how="leftsemi")
+        .withColumn("_tokens", tokens_col(text_col))
+        .filter(F.size("_tokens") >= shingle_width)
+        .select(
+            F.col(id_col).alias("_sid"),
+            F.array_distinct(
+                shingle_hashes_col(F.col("_tokens"), shingle_width)
+            ).alias("_sset"),
+        )
     )
     a = pairs.join(sets_df.withColumnRenamed("_sid", "a").withColumnRenamed("_sset", "set_a"), on="a")
     ab = a.join(sets_df.withColumnRenamed("_sid", "b").withColumnRenamed("_sset", "set_b"), on="b")
@@ -568,80 +537,60 @@ def near_dup_verified_pairs(
     max_bucket_size: int | None = None,
     shingle_width: int = 3,
     candidate_tier: str = "bands",
-) -> tuple[DataFrame, DataFrame | None]:
+) -> tuple[DataFrame, DataFrame]:
     """The shared LSH -> exact-Jaccard VERIFY front end of ``near_dedup``:
-    returns ``(verified, pairs)`` where ``verified`` is the (a, b) frame
-    of pairs passing the threshold and ``pairs`` is the persisted
-    candidate-pair frame backing it (``None`` for the fused tier, which
-    does not persist). The caller owns the ``pairs`` lifetime — unpersist
+    returns ``(verified, pairs)`` where ``verified`` is the (a, b,
+    jaccard_micros) frame of pairs passing the threshold and ``pairs`` is
+    the persisted candidate-pair frame backing it (``jaccard_verify``
+    reads it twice). The caller owns the ``pairs`` lifetime — unpersist
     it once every consumer of ``verified`` has run.
 
     Factored out so consumers that only need the verified-pair graph
     (bench warm-sharing across the q_near_dedup family — VERDICT r3
-    item 5 — split-leakage-style audits, custom CC variants) build the
-    EXACT same logical plan ``near_dedup`` builds internally: persisting
-    this frame lets Spark's CacheManager substitute the canonical-equal
-    fragment inside every downstream family query automatically.
+    item 5 — the q_lsh_jaccard_pairs / q_minhash128_pairs /
+    q_split_leakage queries, custom CC variants) build the EXACT same
+    logical plan ``near_dedup`` builds internally: persisting this frame
+    lets Spark's CacheManager substitute the canonical-equal fragment
+    inside every downstream family query automatically.
 
-    Tier envelopes: ``bands``/``wide`` are the corpus-scale paths (pair
-    candidates stay bucket-local, the skew guard bounds degenerate
-    buckets). ``fused`` verifies candidates against per-doc SHINGLE
-    ARRAYS materialized through the join — the right trade only when the
-    candidate set is small relative to the corpus and docs are short
-    (benchmark/eval-set dedup, unit-scale studies); at 100 TB the array
-    materialization is the blowup the bands tiers exist to avoid, which
-    is why an invalid tier raises instead of falling through."""
-    if candidate_tier not in ("bands", "wide", "fused"):
-        # fail loudly: silently falling through to the fused tier would
-        # materialize per-doc shingle arrays for the WHOLE corpus — the
-        # exact corpus-scale blowup the bands tiers exist to avoid
+    ``candidate_tier`` picks the LSH curve; both are corpus-scale paths
+    (pair candidates stay bucket-local, the skew guard bounds degenerate
+    buckets) and share the verify tail:
+
+      "bands" (default): ``minhash_bands`` (``n_bands`` x ``band_rows``
+        md5 slices, collision probability 1-(1-J^r)^b) +
+        ``lsh_candidate_pairs``.
+      "wide": PRODUCTION-width candidates — ``minhash_wide_bands`` (128
+        permutations, 16x8 banding; ``n_bands``/``band_rows`` are ignored
+        in favor of the wide defaults) + ``minhash_wide_pairs``. Higher
+        precision at high-J thresholds (the steep 1-(1-J^8)^16 S-curve)
+        at the cost of the 128-aggregate shuffle.
+
+    Any other value raises."""
+    if candidate_tier == "wide":
+        wide_bands = minhash_wide_bands(
+            df, text_col, id_col, shingle_width=shingle_width
+        )
+        pairs = minhash_wide_pairs(
+            wide_bands, id_col, max_bucket_size=max_bucket_size
+        ).persist()
+    elif candidate_tier == "bands":
+        bands = minhash_bands(
+            df, text_col, id_col,
+            n_bands=n_bands, shingle_width=shingle_width,
+            band_rows=band_rows,
+        )
+        pairs = lsh_candidate_pairs(
+            bands, id_col, n_bands=n_bands, max_bucket_size=max_bucket_size,
+        ).persist()
+    else:
         raise ValueError(
-            "candidate_tier must be one of 'bands', 'wide', 'fused' — "
-            f"got {candidate_tier!r}"
+            f"candidate_tier must be 'bands' or 'wide' — got {candidate_tier!r}"
         )
-    if candidate_tier in ("bands", "wide"):
-        if candidate_tier == "wide":
-            wide_bands = minhash_wide_bands(
-                df, text_col, id_col, shingle_width=shingle_width
-            )
-            pairs = minhash_wide_pairs(
-                wide_bands, id_col, max_bucket_size=max_bucket_size
-            ).persist()
-        else:
-            bands = minhash_bands(
-                df, text_col, id_col,
-                n_bands=n_bands, shingle_width=shingle_width,
-                band_rows=band_rows,
-            )
-            pairs = lsh_candidate_pairs(
-                bands, id_col, n_bands=n_bands,
-                max_bucket_size=max_bucket_size, pre_aggregated=True,
-            ).persist()
-        nodes = (
-            pairs.select(F.col("a").alias(id_col))
-            .unionByName(pairs.select(F.col("b").alias(id_col)))
-            .distinct()
-        )
-        cand = df.join(nodes, on=id_col, how="leftsemi")
-        sigs = (
-            cand.withColumn("_tokens", tokens_col(text_col))
-            .filter(F.size("_tokens") >= shingle_width)
-            .select(
-                F.col(id_col),
-                shingle_hashes_col(
-                    F.col("_tokens"), shingle_width
-                ).alias("shingle_hashes"),
-            )
-        )
-        return jaccard_verify(sigs, pairs, id_col, threshold_micros), pairs
-    sigs = minhash_signatures(
-        df, text_col, id_col,
-        n_bands=n_bands, shingle_width=shingle_width, band_rows=band_rows,
+    verified = jaccard_verify(
+        df, pairs, text_col, id_col, threshold_micros, shingle_width
     )
-    pairs = lsh_candidate_pairs(
-        sigs, id_col, n_bands=n_bands, max_bucket_size=max_bucket_size
-    )
-    return jaccard_verify(sigs, pairs, id_col, threshold_micros), None
+    return verified, pairs
 
 
 def near_dedup(
@@ -664,27 +613,14 @@ def near_dedup(
     so the corpus-wide cost is one equi-join against the (small) label
     table, broadcastable by AQE at scale.
 
-    ``candidate_tier`` picks how band values are produced (identical values
-    either way — pinned by test_minhash_bands_equals_signatures):
-
-      "bands" (default, the 100 TB path): codegen ``minhash_bands`` for
-        everyone (explode -> md5 -> partial-MIN aggregate, no per-doc
-        shingle arrays), then exact shingle SETS are recomputed only for
-        docs that actually appear in a candidate pair — candidates <<
-        corpus at production duplicate densities, so the expensive array
-        materialization never touches the full corpus. The candidate-pair
-        frame is persisted across its two consumers (node set + verify
-        join) and unpersisted once ``connected_canonical`` has eagerly
-        truncated all upstream lineage.
-      "wide": PRODUCTION-width candidates — ``minhash_wide_bands`` (128
-        permutations, 16x8 banding; ``n_bands``/``band_rows`` are ignored
-        in favor of the wide defaults) + bucket-local pair generation.
-        Higher precision at high-J thresholds (the steep 1-(1-J^8)^16
-        S-curve) at the cost of the 128-aggregate shuffle; the verify and
-        connected-component tail is identical.
-      "fused": the original single-frame path (``minhash_signatures``
-        carries bands + shingle arrays together) — kept for A/B reference;
-        per-1M-doc numbers in BENCH/BASELINE.md.
+    The verified pairs come from ``near_dup_verified_pairs`` (see there for
+    the ``candidate_tier`` curves): bands for everyone, then exact shingle
+    SETS recomputed only for docs that actually appear in a candidate pair
+    — candidates << corpus at production duplicate densities, so the
+    expensive array materialization never touches the full corpus. The
+    candidate-pair frame is persisted across its two consumers (node set +
+    verify join) and unpersisted once ``connected_canonical`` has eagerly
+    truncated all upstream lineage.
     """
     verified, pairs = near_dup_verified_pairs(
         df,
@@ -703,8 +639,7 @@ def near_dedup(
         # `pairs` has run and its lineage is truncated
         labels = connected_canonical(verified).withColumnRenamed("node", id_col)
     finally:
-        if pairs is not None:
-            pairs.unpersist()
+        pairs.unpersist()
     return (
         df.join(labels, on=id_col, how="left")
         .withColumn("canonical_doc_id", F.coalesce("canonical", F.col(id_col)))
@@ -1251,20 +1186,28 @@ def minhash_bands(
     shingle_width: int = 3,
     band_rows: int = 1,
 ) -> DataFrame:
-    """(id, band_0..band_{k-1}) — identical band values to
-    ``minhash_signatures`` but with the md5 + min work moved from
-    per-shingle higher-order folds (which Spark evaluates interpretively)
-    to exploded rows aggregated by codegen MIN: shingle STRINGS are still
-    built map-side by a cheap concat transform, then explode -> md5
-    (whole-stage codegen) -> groupBy(id) with map-side partial MIN
-    combine, so the only shuffle carries one slim (id, minima) row per
-    doc per partition. No ``shingle_hashes`` array: this is the
-    CANDIDATE-GENERATION tier for corpus scale — compute bands for
-    everyone cheaply, then recompute exact shingle sets only for the docs
-    that actually appear in candidate pairs (candidates << corpus at
-    production duplicate densities). Band equality with
-    minhash_signatures is pinned by test; the 1M-doc A/B is in
-    BENCH/BASELINE.md.
+    """(id, band_0..band_{k-1}) for docs with >= ``shingle_width`` tokens.
+
+    One md5 per word shingle; permutation i is the i-th disjoint 8-hex
+    slice of the digests (md5 bits are independent), so band k is the
+    concat over j < ``band_rows`` of the min of slice ``k*band_rows + j``.
+    ``band_rows`` is the classic LSH ``r``: two docs collide on a band
+    with probability ~J^r. r=1 maximizes recall but degenerates on
+    low-entropy corpora (everything sharing the globally-smallest shingle
+    lands in one bucket); r=2 keeps buckets proportional to true
+    near-duplicate density. Requires ``n_bands * band_rows <= 4``.
+
+    The md5 + min work runs on exploded rows aggregated by codegen MIN
+    rather than in per-shingle higher-order folds (which Spark evaluates
+    interpretively): shingle STRINGS are built map-side by a cheap concat
+    transform, then explode -> md5 (whole-stage codegen) -> groupBy(id)
+    with map-side partial MIN combine, so the only shuffle carries one
+    slim (id, minima) row per doc per partition. No ``shingle_hashes``
+    array: this is the CANDIDATE-GENERATION tier for corpus scale —
+    ``jaccard_verify`` recomputes exact shingle sets only for the docs
+    that appear in candidate pairs. The output sits behind the Aggregate
+    ``lsh_candidate_pairs`` requires. Values are pinned against a
+    hashlib reference by test.
     """
     if n_bands * band_rows > 4:
         raise ValueError("n_bands * band_rows must be <= 4 (md5 slice budget)")
@@ -1685,26 +1628,12 @@ def near_dedup_incremental(
     )
     pairs = pairs.persist()
     try:
-        nodes = (
-            pairs.select(F.col("a").alias(id_col))
-            .unionByName(pairs.select(F.col("b").alias(id_col)))
-            .distinct()
-        )
         corpus = new_df.select(F.col(id_col), F.col(text_col)).unionByName(
             base_df.select(F.col(id_col), F.col(text_col))
         )
-        cand = corpus.join(nodes, on=id_col, how="leftsemi")
-        sigs = (
-            cand.withColumn("_tokens", tokens_col(text_col))
-            .filter(F.size("_tokens") >= 3)
-            .select(
-                F.col(id_col),
-                shingle_hashes_col(F.col("_tokens"), 3).alias(
-                    "shingle_hashes"
-                ),
-            )
+        verified = jaccard_verify(
+            corpus, pairs, text_col, id_col, threshold_micros
         )
-        verified = jaccard_verify(sigs, pairs, id_col, threshold_micros)
         labels = connected_canonical(verified).withColumnRenamed(
             "node", id_col
         )

@@ -1567,31 +1567,16 @@ _MINHASH_K = 4
 
 
 def spark_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tokens = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
-    df = _docs(spark, sf_dir).withColumn("tokens", tokens)
-    df = df.filter(F.size("tokens") >= 3)
-    n = F.size("tokens")
-    shingles = F.transform(
-        F.sequence(F.lit(1), n - 2),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at("tokens", i),
-            F.element_at("tokens", i + 1),
-            F.element_at("tokens", i + 2),
-        ),
-    )
-    df = df.withColumn("hashes", F.transform(shingles, lambda s: F.md5(s)))
-    def _slice_min(k: int):
-        # closure factory: the transform lambda must stay single-arg
-        # (a 2-arg callable is treated by pyspark as an (element, index)
-        # lambda and would receive the array index as its 2nd param)
-        return F.array_min(
-            F.transform("hashes", lambda h: F.substring(h, 1 + 8 * k, 8))
-        )
+    from .operators.dedup import minhash_bands
 
-    mins = [_slice_min(k).alias("minhash_%d" % k) for k in range(_MINHASH_K)]
-    out = df.select(F.col("doc_id").cast("bigint").alias("doc_id"), *mins)
-    return out.withColumn(
+    docs = _docs(spark, sf_dir).select(
+        F.col("doc_id").cast("bigint").alias("doc_id"), "text"
+    )
+    bands = minhash_bands(docs, n_bands=_MINHASH_K, band_rows=1)
+    mins = [
+        F.col("band_%d" % k).alias("minhash_%d" % k) for k in range(_MINHASH_K)
+    ]
+    return bands.select("doc_id", *mins).withColumn(
         "signature",
         F.md5(F.concat(*[F.col("minhash_%d" % k) for k in range(_MINHASH_K)])),
     )
@@ -1720,30 +1705,17 @@ _MINHASH128_SQL = _minhash128_sql()
 
 
 def spark_minhash128_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.hashing import shingle_hashes_col, tokens_col
-    from .operators.dedup import (
-        jaccard_verify,
-        minhash_wide_bands,
-        minhash_wide_pairs,
-    )
+    from .operators.dedup import near_dup_verified_pairs
 
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "text"
     )
-    bands = minhash_wide_bands(
-        docs, n_perms=_MINHASH_WIDE_PERMS, n_bands=_MINHASH_WIDE_BANDS
-    )
-    pairs = minhash_wide_pairs(bands, n_bands=_MINHASH_WIDE_BANDS)
-    # exact-Jaccard verify tier: shingle sets recomputed from text for the
-    # docs the candidate join touches (candidates << corpus at production
-    # duplicate densities; at query scale the projection covers all docs)
-    sets_df = docs.withColumn("_tokens", tokens_col("text")).filter(
-        F.size("_tokens") >= 3
-    ).select(
-        "doc_id",
-        shingle_hashes_col(F.col("_tokens"), 3).alias("shingle_hashes"),
-    )
-    return jaccard_verify(sets_df, pairs, threshold_micros=0).select(
+    # the wide tier's defaults are the 128-perm / 16-band constants the
+    # oracle inlines (pinned by tests/test_bench_fronts.py)
+    verified = near_dup_verified_pairs(
+        docs, threshold_micros=0, candidate_tier="wide"
+    )[0]
+    return verified.select(
         F.col("a").cast("bigint").alias("a"),
         F.col("b").cast("bigint").alias("b"),
         "jaccard_micros",
@@ -2000,14 +1972,15 @@ _SIMHASH64_PAIRS_SQL = _simhash64_sql()
 # ---------------------------------------------------------------------------
 
 def spark_lsh_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import jaccard_verify, lsh_candidate_pairs, minhash_signatures
+    from .operators.dedup import near_dup_verified_pairs
 
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "text"
     )
-    sigs = minhash_signatures(docs, n_bands=1, band_rows=2)
-    pairs = lsh_candidate_pairs(sigs, n_bands=1)
-    return jaccard_verify(sigs, pairs, threshold_micros=0).select(
+    verified = near_dup_verified_pairs(
+        docs, n_bands=1, band_rows=2, threshold_micros=0
+    )[0]
+    return verified.select(
         F.col("a").cast("bigint").alias("a"),
         F.col("b").cast("bigint").alias("b"),
         "jaccard_micros",
@@ -3416,10 +3389,10 @@ def near_dedup_family_fronts(
     Also returns the production-width (128-perm) front shared by
     q_minhash128 / q_minhash128_pairs / q_near_dedup_wide: the per-doc
     minima frame (q_minhash128's scan; the banding inside the other two
-    reads it from cache) and the wide candidate-pair frame (identical
-    construction in q_minhash128_pairs and near_dedup's wide tier —
-    defaults 128/16 match the queries' explicit constants, pinned by
-    tests/test_bench_fronts.py)."""
+    reads it from cache) and the wide candidate-pair frame (the one
+    near_dup_verified_pairs' wide tier builds for q_minhash128_pairs and
+    q_near_dedup_wide — defaults 128/16 match the oracle's constants,
+    pinned by tests/test_bench_fronts.py)."""
     from .operators.dedup import (
         minhash_wide_bands,
         minhash_wide_minima,
@@ -7209,24 +7182,22 @@ GROUP BY source_a, source_b
 
 
 def spark_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import (
-        jaccard_verify,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
+    from .operators.dedup import near_dup_verified_pairs
     from .operators.sampling import group_split
 
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "text", "source"
     )
-    sigs = minhash_signatures(docs, n_bands=1, band_rows=2)
-    pairs = lsh_candidate_pairs(sigs, n_bands=1)
     # both policy branches join against the same verified pairs — persist
     # the slim (a, b) set so the LSH front end runs once, not per policy
-    # (measured 8.6 -> 7.2 s at sf0.1; GC-managed lifetime, the queries()
-    # convention)
+    # (measured 8.6 -> 7.2 s at sf0.1). It and the candidate pairs stay
+    # cached until unpersisted or the session stops; the CacheManager
+    # keeps one entry per canonical plan, so rebuilding the query reuses
+    # them rather than adding entries.
     verified = (
-        jaccard_verify(sigs, pairs, threshold_micros=500_000)
+        near_dup_verified_pairs(
+            docs, n_bands=1, band_rows=2, threshold_micros=500_000
+        )[0]
         .select("a", "b")
         .persist()
     )

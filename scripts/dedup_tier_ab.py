@@ -74,10 +74,6 @@ def main() -> None:
         minhash_wide_bands,
         minhash_wide_pairs,
     )
-    from modern_document_converter_for_ai_library_spark.functions.hashing import (
-        shingle_hashes_col,
-        tokens_col,
-    )
     from modern_document_converter_for_ai_library_spark.plans import get_spark
 
     spark = get_spark(
@@ -127,26 +123,21 @@ def main() -> None:
     )
     n_planted = planted.count()
 
-    def verify(pairs, label):
-        sets_df = docs.withColumn("_tokens", tokens_col("text")).select(
-            "doc_id", shingle_hashes_col(F.col("_tokens"), 3).alias("shingle_hashes")
-        )
-        v = jaccard_verify(sets_df, pairs, threshold_micros=args.threshold_micros)
-        return v
-
     results = {}
     for label in ([args.tier] if args.tier != "both" else ["narrow", "wide"]):
         t0 = time.perf_counter()
         if label == "narrow":
             bands = minhash_bands(docs, n_bands=2, band_rows=2)
             pairs = lsh_candidate_pairs(
-                bands, n_bands=2, max_bucket_size=64, pre_aggregated=True
+                bands, n_bands=2, max_bucket_size=64
             ).persist()
         else:
             bands = minhash_wide_bands(docs)
             pairs = minhash_wide_pairs(bands, max_bucket_size=64).persist()
         n_cand = pairs.count()
-        verified = verify(pairs, label).persist()
+        verified = jaccard_verify(
+            docs, pairs, threshold_micros=args.threshold_micros
+        ).persist()
         n_ver = verified.count()
         hit = verified.join(
             planted,

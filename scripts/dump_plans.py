@@ -19,7 +19,7 @@ SHOWCASE = [
     ("q_convert_pipeline", "flagship: map-only scan -> one Arrow kernel stage"),
     ("q_classify_scores", "pure-JVM rule compilation inside WholeStageCodegen"),
     ("q_docs_events_join", "broadcast hash join + partial aggregation"),
-    ("q_lsh_jaccard_pairs", "banded LSH self-join behind the aggregate barrier"),
+    ("q_lsh_jaccard_pairs", "banded LSH: codegen partial-MIN bands, bucket-local pair generation, exact Jaccard over candidate docs only"),
     ("q_exact_dedup", "single-shuffle hash grouping"),
     ("q_events_topk", "ranking window after one exchange"),
     ("q_rename_pipeline", "kernel + broadcast-only contested-code resolution (no claim window)"),

@@ -212,7 +212,7 @@ def _write_chunk(args: tuple) -> int:
                 ]
             ),
         )
-    elif job in ("html", "dedup", "minhash", "minhash_fast", "minhash_wide", "lm", "quality", "substr", "perceptron", "cdc", "shuffle"):
+    elif job in ("html", "dedup", "minhash", "minhash_wide", "lm", "quality", "substr", "perceptron", "cdc", "shuffle"):
         from modern_document_converter_for_ai_library_spark.sources.synth import (
             _make_html_doc,
         )
@@ -302,9 +302,10 @@ def run_job(d, balance=None):
         return exact_dedup(d, text_col="html").select(
             "doc_id", "canonical_doc_id", "is_duplicate")
     if "{job}" == "minhash":
-        # shuffle-operator probe 2: the minhash LSH candidate DAG — shingle
-        # hashing map-side, the aggregate-barrier shuffle, per-band
-        # equi-joins, distinct. A genuinely multi-shuffle plan.
+        # shuffle-operator probe 2: the minhash LSH candidate DAG — the
+        # codegen band builder (explode + md5 + partial-MIN aggregate),
+        # bucket-local pair generation, distinct. A genuinely
+        # multi-shuffle plan.
         # max_bucket_size is MANDATORY on this corpus: every synthetic page
         # shares nav/header boilerplate tokens, so the min-shingle is a
         # boilerplate shingle for most docs and one band bucket holds ~the
@@ -313,17 +314,9 @@ def run_job(d, balance=None):
         # This is exactly the degenerate-bucket shape the guard exists for
         # at 100 TB; the probe exercises it at production settings.
         from modern_document_converter_for_ai_library_spark.operators.dedup import (
-            lsh_candidate_pairs, minhash_signatures)
-        sigs = minhash_signatures(d, text_col="html", n_bands=2, band_rows=2)
-        return lsh_candidate_pairs(sigs, n_bands=2, max_bucket_size=64)
-    if "{job}" == "minhash_fast":
-        # same DAG with the codegen band builder (explode + partial-MIN
-        # aggregate) replacing the interpreted per-shingle md5 folds
-        from modern_document_converter_for_ai_library_spark.operators.dedup import (
             lsh_candidate_pairs, minhash_bands)
-        sigs = minhash_bands(d, text_col="html", n_bands=2, band_rows=2)
-        return lsh_candidate_pairs(
-            sigs, n_bands=2, max_bucket_size=64, pre_aggregated=True)
+        bands = minhash_bands(d, text_col="html", n_bands=2, band_rows=2)
+        return lsh_candidate_pairs(bands, n_bands=2, max_bucket_size=64)
     if "{job}" == "minhash_wide":
         # production-width tier: 128 permutations via the 2-universal
         # integer family, banded 16x8, bucket-local pair generation. The
@@ -604,7 +597,7 @@ def main() -> None:
     ap.add_argument("--md", default=None, help="write/refresh this markdown report")
     ap.add_argument(
         "--job",
-        choices=["convert", "html", "warc", "dedup", "minhash", "minhash_fast", "minhash_wide", "lm", "quality", "substr", "substr_sparse", "substr_bloom", "substr_sparse_bloom", "perceptron", "pagerank", "pq", "cdc", "shuffle", "curate", "near"],
+        choices=["convert", "html", "warc", "dedup", "minhash", "minhash_wide", "lm", "quality", "substr", "substr_sparse", "substr_bloom", "substr_sparse_bloom", "perceptron", "pagerank", "pq", "cdc", "shuffle", "curate", "near"],
         default="convert",
         help="which end-to-end kernel job to measure (html = "
         "strip_boilerplate_html over the synthetic web-page corpus; warc = "
@@ -628,9 +621,9 @@ def main() -> None:
         legacy = os.path.join(args.corpus, f".complete_{args.docs}")
         if os.path.exists(legacy):
             marker = legacy
-    if args.job in ("html", "dedup", "minhash", "minhash_fast", "minhash_wide", "lm", "quality", "substr", "substr_bloom", "perceptron", "cdc", "shuffle") and not os.path.exists(marker):
+    if args.job in ("html", "dedup", "minhash", "minhash_wide", "lm", "quality", "substr", "substr_bloom", "perceptron", "cdc", "shuffle") and not os.path.exists(marker):
         # these jobs share identical corpus content — reuse any sibling
-        for sib in ("html", "dedup", "minhash", "minhash_fast", "minhash_wide", "lm", "quality", "substr", "substr_bloom", "perceptron", "cdc", "shuffle"):
+        for sib in ("html", "dedup", "minhash", "minhash_wide", "lm", "quality", "substr", "substr_bloom", "perceptron", "cdc", "shuffle"):
             sib_marker = os.path.join(args.corpus, f".complete_{sib}_{args.docs}")
             if os.path.exists(sib_marker):
                 marker = sib_marker

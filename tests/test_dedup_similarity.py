@@ -1,5 +1,7 @@
 """Dedup + similarity operators on planted data."""
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -7,8 +9,9 @@ from modern_document_converter_for_ai_library_spark.operators.dedup import (
     exact_dedup,
     jaccard_verify,
     lsh_candidate_pairs,
-    minhash_signatures,
+    minhash_bands,
     near_dedup,
+    near_dup_verified_pairs,
     oversized_buckets,
 )
 from modern_document_converter_for_ai_library_spark.operators.similarity import (
@@ -45,18 +48,17 @@ def test_exact_dedup(spark, docs):
 
 
 def test_lsh_finds_planted_near_dup(spark, docs):
-    sigs = minhash_signatures(docs)
-    pairs = {(r["a"], r["b"]) for r in lsh_candidate_pairs(sigs).collect()}
+    bands = minhash_bands(docs)
+    pairs = {(r["a"], r["b"]) for r in lsh_candidate_pairs(bands).collect()}
     assert (1, 2) in pairs  # identical docs always collide
     assert (1, 3) in pairs or (2, 3) in pairs  # near-dup shares most shingles
     assert (4, 5) not in pairs  # unrelated docs must not pair
 
 
 def test_jaccard_verify_scores(spark, docs):
-    sigs = minhash_signatures(docs)
-    pairs = lsh_candidate_pairs(sigs)
+    pairs = lsh_candidate_pairs(minhash_bands(docs))
     verified = {(r["a"], r["b"]): r["jaccard_micros"] for r in
-                jaccard_verify(sigs, pairs, threshold_micros=0).collect()}
+                jaccard_verify(docs, pairs, threshold_micros=0).collect()}
     assert verified[(1, 2)] == 1_000_000  # identical -> jaccard 1.0
     if (1, 3) in verified:
         assert 500_000 < verified[(1, 3)] < 1_000_000
@@ -65,29 +67,29 @@ def test_jaccard_verify_scores(spark, docs):
 def test_banded_rows_still_finds_dups_and_prunes(spark, docs):
     # r=2 banding: identical docs still collide (J=1 -> J^2=1); the band
     # value is the concat of two 8-hex minhash slices
-    sigs = minhash_signatures(docs, n_bands=2, band_rows=2)
-    row = sigs.filter(F.col("doc_id") == 1).collect()[0]
+    bands = minhash_bands(docs, n_bands=2, band_rows=2)
+    row = bands.filter(F.col("doc_id") == 1).collect()[0]
     assert len(row["band_0"]) == 16 and len(row["band_1"]) == 16
-    pairs = {(r["a"], r["b"]) for r in lsh_candidate_pairs(sigs, n_bands=2).collect()}
+    pairs = {(r["a"], r["b"]) for r in lsh_candidate_pairs(bands, n_bands=2).collect()}
     assert (1, 2) in pairs
     assert (4, 5) not in pairs
     with pytest.raises(ValueError):
-        minhash_signatures(docs, n_bands=4, band_rows=2)  # slice budget
+        minhash_bands(docs, n_bands=4, band_rows=2)  # slice budget
 
 
 def test_bucket_size_cap_drops_degenerate_bucket(spark, docs):
-    sigs = minhash_signatures(docs, n_bands=1)
+    bands = minhash_bands(docs, n_bands=1)
     # docs 1,2 share band_0 (bucket of 2) -> cap=1 drops that bucket
     capped = {
         (r["a"], r["b"])
-        for r in lsh_candidate_pairs(sigs, n_bands=1, max_bucket_size=1).collect()
+        for r in lsh_candidate_pairs(bands, n_bands=1, max_bucket_size=1).collect()
     }
     assert (1, 2) not in capped
-    audit = oversized_buckets(sigs, n_bands=1, max_bucket_size=1).collect()
+    audit = oversized_buckets(bands, n_bands=1, max_bucket_size=1).collect()
     assert len(audit) >= 1 and all(r["n_docs"] > 1 for r in audit)
     # without the cap the pairs are present
     uncapped = {
-        (r["a"], r["b"]) for r in lsh_candidate_pairs(sigs, n_bands=1).collect()
+        (r["a"], r["b"]) for r in lsh_candidate_pairs(bands, n_bands=1).collect()
     }
     assert (1, 2) in uncapped
 
@@ -389,38 +391,70 @@ def test_decontaminate_planted(spark):
     assert out[3]["n_contaminated_grams"] == 0
 
 
-def test_minhash_bands_equals_signatures(spark):
-    """The codegen explode+groupBy band builder must produce identical
-    band values to minhash_signatures for every doc (both parameterizations
-    used by the queries)."""
-    from modern_document_converter_for_ai_library_spark.operators.dedup import (
-        minhash_bands,
+def _hashlib_bands(text, n_bands, band_rows, width=3):
+    """Reference MinHash bands: band k is the concat over j of the min of
+    8-hex slice k*r+j of md5(shingle), over the word 3-shingles."""
+    toks = [t for t in (text or "").split(" ") if t != ""]
+    if len(toks) < width:
+        return None
+    digests = [
+        hashlib.md5(" ".join(toks[i:i + width]).encode()).hexdigest()
+        for i in range(len(toks) - width + 1)
+    ]
+    return tuple(
+        "".join(
+            min(d[8 * (k * band_rows + j):8 * (k * band_rows + j) + 8]
+                for d in digests)
+            for j in range(band_rows)
+        )
+        for k in range(n_bands)
     )
 
+
+def test_minhash_bands_match_hashlib_reference(spark):
+    """minhash_bands equals a plain-hashlib MinHash on every sf0.01 doc,
+    for every (n_bands, band_rows) the queries and jobs use."""
     df = spark.read.parquet("/root/testdata/sf0.01/documents.parquet").select(
         "doc_id", "text"
     )
-    for n_bands, band_rows in ((4, 1), (2, 2)):
+    rows = df.collect()
+    for n_bands, band_rows in ((4, 1), (2, 2), (1, 2)):
+        want = {}
+        for r in rows:
+            ref = _hashlib_bands(r["text"], n_bands, band_rows)
+            if ref is not None:
+                want[r["doc_id"]] = ref
         cols = [f"band_{k}" for k in range(n_bands)]
-        slow = {
-            r["doc_id"]: tuple(r[c] for c in cols)
-            for r in minhash_signatures(
-                df, n_bands=n_bands, band_rows=band_rows
-            ).select("doc_id", *cols).collect()
-        }
-        fast = {
+        got = {
             r["doc_id"]: tuple(r[c] for c in cols)
             for r in minhash_bands(
                 df, n_bands=n_bands, band_rows=band_rows
             ).collect()
         }
-        assert fast == slow and len(fast) > 0
+        assert got == want and len(got) > 0
+
+
+def _union_find_canonical(ids, pairs):
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {i: find(i) for i in ids}
 
 
 def test_near_dedup_tiers_identical(spark):
-    """The two-tier bands path (default) must mark exactly the same
-    canonical ids as the fused single-frame path, including under a
-    bucket-size cap, and must not leak its candidate-pair cache."""
+    """The bands path under a bucket-size cap marks each doc with the min
+    id of its component in the verified-pair graph (checked against a
+    driver-side union-find over the same front's verified pairs), does
+    not leak its candidate-pair cache, and rejects an unknown tier."""
     df = spark.read.parquet("/root/testdata/sf0.01/documents.parquet").select(
         "doc_id", "text"
     )
@@ -429,18 +463,24 @@ def test_near_dedup_tiers_identical(spark):
     cols = ["doc_id", "canonical_doc_id", "is_near_duplicate"]
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()
-    fast = {r["doc_id"]: (r["canonical_doc_id"], r["is_near_duplicate"])
-            for r in near_dedup(df, candidate_tier="bands", **kw)
-            .select(*cols).collect()}
+    marks = {r["doc_id"]: (r["canonical_doc_id"], r["is_near_duplicate"])
+             for r in near_dedup(df, candidate_tier="bands", **kw)
+             .select(*cols).collect()}
     # the pairs cache and every superseded CC-iteration checkpoint are
     # released inside the call; only the final component-labels checkpoint
     # (which the returned frame reads lazily) may outlive it
     assert jsc.getPersistentRDDs().size() - before <= 1
-    fused = {r["doc_id"]: (r["canonical_doc_id"], r["is_near_duplicate"])
-             for r in near_dedup(df, candidate_tier="fused", **kw)
-             .select(*cols).collect()}
-    assert fast == fused and len(fast) > 0
-    assert any(v[1] for v in fast.values())  # corpus has planted near-dups
+    verified, pairs = near_dup_verified_pairs(df, **kw)
+    try:
+        edges = [(r["a"], r["b"]) for r in verified.collect()]
+    finally:
+        pairs.unpersist()
+    truth = _union_find_canonical(list(marks), edges)
+    assert marks == {i: (c, i != c) for i, c in truth.items()}
+    assert len(marks) > 0
+    assert any(v[1] for v in marks.values())  # corpus has planted near-dups
+    with pytest.raises(ValueError):
+        near_dedup(df, candidate_tier="fused", **kw)
 
 
 # ---------------------------------------------------------------------------
