@@ -20,21 +20,25 @@ in the canonical order a DataComp/RefinedWeb-style pipeline runs them:
                  --shuffle-salt is given (sampling.py:corpus_shuffle) —
                  without it, shard interiors are single-source
                  sampler-order runs: correlated adjacent training
-                 batches. With sharding enabled the shuffle and the
-                 token cumsum fuse into ONE bucketed pass
-                 (sampling.py:shuffled_shard_assign) and shards become
-                 prefixes of the shuffled order
-    shard        fixed-token-mass training-shard layout + manifest when
-                 --shard-tokens > 0 (sampling.py:shard_assign/manifest;
-                 shuffled_shard_assign/manifest when --shuffle-salt is
-                 also given)
+                 batches
+    shard        fixed-token-mass training shards + manifest when
+                 --shard-tokens > 0 (sampling.py:shard_assign/manifest,
+                 partitioned by (key, shard_id)); with --shuffle-salt
+                 too, the shuffle and the token cumsum fuse into ONE
+                 bucketed pass (sampling.py:shuffled_shard_assign/
+                 manifest) written as computed, partitioned by shard_id:
+                 shards are prefixes of the shuffled order
 
 Every stage is deterministic (pure function of row values + salt), so
 the whole funnel is reproducible on any cluster size or partitioning.
-Stages are individually skippable; each enabled stage persists its
-survivor frame, counts it for the accounting line, and unpersists its
-predecessor — peak executor storage is two adjacent stage frames, never
-the whole chain.
+Stages are individually skippable; each enabled stage up to mix
+persists its survivor frame, counts it for the accounting line, and
+unpersists its predecessor — peak executor storage is two adjacent stage
+frames, never the whole chain. shuffle and shard are the terminal
+layout: one call to sampling.py:write_training_layout writes the output
+(and manifest) from the last persisted frame and returns the token and
+shard accounting from one aggregate (over the manifest when sharded),
+not from another pass over the corpus.
 
 Usage (cluster):
 
@@ -141,23 +145,14 @@ def main(argv: list[str] | None = None) -> int:
     )
     from modern_document_converter_for_ai_library_spark.operators.sampling import (
         budget_sample,
-        shard_assign,
-        shard_manifest,
+        parse_spec,
+        write_training_layout,
     )
     from modern_document_converter_for_ai_library_spark.plans import get_spark
     from modern_document_converter_for_ai_library_spark.queries import STOPWORDS
     from modern_document_converter_for_ai_library_spark.sources.catalog import (
         read_documents,
-        write_documents,
     )
-
-    try:  # module form (tests) and plain-script form (spark-submit)
-        from jobs.mix_job import parse_spec
-    except ImportError:
-        import os as _os
-
-        sys.path.insert(0, _os.path.dirname(_os.path.abspath(__file__)))
-        from mix_job import parse_spec
 
     id_col, text_col, key_col = args.id_col, args.text_col, args.key_col
     mix_spec = parse_spec(args.mix_spec)
@@ -373,103 +368,39 @@ def main(argv: list[str] | None = None) -> int:
             )
             advance("mix", nxt)
 
-        manifest_target = None
-        if args.shard_tokens > 0 and args.shuffle_salt is not None:
-            from modern_document_converter_for_ai_library_spark.operators.sampling import (  # noqa: E501
-                shuffled_shard_assign,
-                shuffled_shard_manifest,
-            )
-
-            assigned = shuffled_shard_assign(
-                cur,
-                args.shard_tokens,
-                id_col=id_col,
-                text_col=text_col,
-                salt=args.shuffle_salt,
-                n_rows=n_cur,  # the stage accounting just counted cur
-            ).persist()
-            sharded = cur.drop("shard_id", "shuffle_rank").join(
-                assigned.select(id_col, "shuffle_rank", "shard_id"),
-                on=id_col,
-                how="inner",
-            )
-            write_documents(
-                sharded, args.output, mode="overwrite",
-                partition_by=["shard_id"],
-            )
-            man = shuffled_shard_manifest(assigned)
-            manifest_target = args.manifest or (args.output + "_manifest")
-            write_documents(man, manifest_target, mode="overwrite")
-            stages["shuffle_shard"] = {
-                "n_in": n_cur,
-                "n_out": n_cur,
-                "n_shards": man.count(),
-                "shuffle_salt": args.shuffle_salt,
-            }
-            assigned.unpersist()
-        elif args.shard_tokens > 0:
-            assigned = shard_assign(
-                cur,
-                args.shard_tokens,
-                key_col=key_col,
-                id_col=id_col,
-                text_col=text_col,
-                salt=args.salt,
-            ).persist()
-            sharded = cur.drop("shard_id").join(
-                assigned.select(id_col, "shard_id"), on=id_col, how="inner"
-            )
-            write_documents(
-                sharded, args.output, mode="overwrite",
-                partition_by=[key_col, "shard_id"],
-            )
-            man = shard_manifest(assigned, key_col=key_col)
-            manifest_target = args.manifest or (args.output + "_manifest")
-            write_documents(man, manifest_target, mode="overwrite")
-            stages["shard"] = {
-                "n_in": n_cur,
-                "n_out": n_cur,
-                "n_shards": man.count(),
-            }
-            assigned.unpersist()
-        elif args.shuffle_salt is not None:
-            from modern_document_converter_for_ai_library_spark.operators.sampling import (  # noqa: E501
-                corpus_shuffle,
-            )
-
-            shuffled = corpus_shuffle(
-                cur.drop("shuffle_rank"),
-                id_col=id_col,
-                salt=args.shuffle_salt,
-                n_rows=n_cur,
-            )
-            write_documents(shuffled, args.output, mode="overwrite")
-            stages["shuffle"] = {
-                "n_in": n_cur,
-                "n_out": n_cur,
-                "shuffle_salt": args.shuffle_salt,
-            }
-        else:
-            write_documents(cur, args.output, mode="overwrite")
-
-        tokens_out = int(
-            cur.agg(
-                F.coalesce(
-                    F.sum(F.size(_tokens(text_col)).cast("bigint")),
-                    F.lit(0),
-                )
-            ).collect()[0][0]
+        sharded = args.shard_tokens > 0
+        shuffled = args.shuffle_salt is not None
+        layout = write_training_layout(
+            cur,
+            args.output,
+            shard_tokens=args.shard_tokens,
+            shuffle_salt=args.shuffle_salt,
+            key_col=key_col,
+            id_col=id_col,
+            text_col=text_col,
+            salt=args.salt,
+            manifest=args.manifest,
+            n_rows=n_cur,  # the stage accounting just counted cur
         )
+        stage = "_".join(
+            n for n, on in (("shuffle", shuffled), ("shard", sharded)) if on
+        )
+        if stage:
+            stages[stage] = {"n_in": n_cur, "n_out": layout["n_docs"]}
+            if sharded:
+                stages[stage]["n_shards"] = layout["n_shards"]
+            if shuffled:
+                stages[stage]["shuffle_salt"] = args.shuffle_salt
         cur.unpersist()
         print(
             json.dumps(
                 {
                     "n_input": n_input,
                     "n_output": n_cur,
-                    "tokens_out": tokens_out,
+                    "tokens_out": layout["tokens_out"],
                     "stages": stages,
                     "output": args.output,
-                    "manifest": manifest_target,
+                    "manifest": layout.get("manifest"),
                 }
             )
         )

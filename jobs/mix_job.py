@@ -32,10 +32,17 @@ Modes (operators/sampling.py — all deterministic pure functions of
     shard   terminal storage layout: assign every document to a fixed-
             token-mass shard (--shard-tokens) by start offset in the
             canonical hash-priority order and write the corpus
-            PARTITIONED BY (key, shard_id) — shard ids are per key, so
-            the key must be part of the physical layout or one directory
-            would pool shard 0 of every source — plus a per-shard
-            manifest table at --manifest (default <output>_manifest)
+            PARTITIONED BY (key, shard_id), one file per directory —
+            shard ids are per key, so the key must be part of the
+            physical layout or one directory would pool shard 0 of every
+            source — plus a per-shard manifest table at --manifest
+            (default <output>_manifest); a pre-existing shard_id column
+            is replaced
+
+Every mode writes through operators/sampling.py:write_training_layout:
+shuffle and shard are its layouts of the whole input (the curate_job
+terminal stage run alone), the sampling modes its plain write. The
+accounting is one aggregate (over the manifest for shard).
 
 Input/output targets accept Iceberg identifiers or parquet paths
 (sources/catalog.py). The job prints one JSON line with document/token
@@ -48,16 +55,9 @@ import argparse
 import json
 import sys
 
-
-def parse_spec(spec: str) -> dict[str, int]:
-    """'src0=3500,src1=0' -> {'src0': 3500, 'src1': 0} (empty spec ok)."""
-    out: dict[str, int] = {}
-    for part in filter(None, (p.strip() for p in (spec or "").split(","))):
-        key, _, val = part.partition("=")
-        if not _:
-            raise ValueError(f"spec entry {part!r} is not key=value")
-        out[key.strip()] = int(val)
-    return out
+from modern_document_converter_for_ai_library_spark.operators.sampling import (
+    parse_spec,
+)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -95,6 +95,8 @@ def main(argv: list[str] | None = None) -> int:
     spec = parse_spec(args.spec)
     if args.mode == "temperature" and args.target_total <= 0:
         raise SystemExit("--mode temperature requires --target-total > 0")
+    if args.mode == "shard" and args.shard_tokens <= 0:
+        raise SystemExit("--mode shard requires --shard-tokens > 0")
 
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
@@ -102,14 +104,12 @@ def main(argv: list[str] | None = None) -> int:
     from modern_document_converter_for_ai_library_spark.operators.sampling import (
         budget_sample,
         epoch_budget_sample,
-        shard_assign,
-        shard_manifest,
         stratified_sample,
+        write_training_layout,
     )
     from modern_document_converter_for_ai_library_spark.plans import get_spark
     from modern_document_converter_for_ai_library_spark.sources.catalog import (
         read_documents,
-        write_documents,
     )
 
     pre_existing = SparkSession.getActiveSession() is not None
@@ -119,74 +119,6 @@ def main(argv: list[str] | None = None) -> int:
         common = dict(
             key_col=args.key_col, id_col=args.id_col, salt=args.salt
         )
-        if args.mode == "shuffle":
-            from modern_document_converter_for_ai_library_spark.operators.sampling import (
-                corpus_shuffle,
-            )
-
-            shuffled = corpus_shuffle(
-                docs.drop("shuffle_rank"), id_col=args.id_col, salt=args.salt
-            ).persist()
-            write_documents(shuffled, args.output, mode="overwrite")
-            n = shuffled.count()
-            print(
-                json.dumps(
-                    {
-                        "mode": "shuffle",
-                        "n_docs": n,
-                        "salt": args.salt,
-                        "max_rank": n - 1,
-                    }
-                )
-            )
-            shuffled.unpersist()
-            return 0
-        if args.mode == "shard":
-            if args.shard_tokens <= 0:
-                raise SystemExit("--mode shard requires --shard-tokens > 0")
-            assigned = shard_assign(
-                docs, args.shard_tokens, text_col=args.text_col, **common
-            )
-            # only shard_id is grafted on (token counts live in the
-            # manifest) — and a pre-existing shard_id column is replaced,
-            # so re-sharding an already-sharded corpus works
-            sharded = docs.drop("shard_id").join(
-                assigned.select(args.id_col, "shard_id"),
-                on=args.id_col,
-                how="inner",
-            ).persist()
-            write_documents(
-                sharded, args.output, mode="overwrite",
-                partition_by=[args.key_col, "shard_id"],
-            )
-            man = shard_manifest(
-                assigned, key_col=args.key_col
-            ).persist()
-            manifest_target = args.manifest or (args.output + "_manifest")
-            write_documents(man, manifest_target, mode="overwrite")
-            stats = man.agg(
-                F.count("*").alias("n_shards"),
-                F.sum("shard_token_count").alias("tokens_out"),
-                F.max("shard_token_count").alias("max_shard_tokens"),
-            ).collect()[0]
-            print(
-                json.dumps(
-                    {
-                        "mode": "shard",
-                        "n_docs_in": docs.count(),
-                        "n_rows_out": sharded.count(),
-                        "tokens_out": int(stats["tokens_out"] or 0),
-                        "n_shards": int(stats["n_shards"]),
-                        "max_shard_tokens": int(
-                            stats["max_shard_tokens"] or 0
-                        ),
-                        "manifest": manifest_target,
-                    }
-                )
-            )
-            sharded.unpersist()
-            man.unpersist()
-            return 0
         if args.mode == "temperature":
             from modern_document_converter_for_ai_library_spark.operators.sampling import (
                 temperature_sample,
@@ -227,7 +159,7 @@ def main(argv: list[str] | None = None) -> int:
             kept = docs.join(
                 sel.select(args.id_col), on=args.id_col, how="leftsemi"
             )
-        else:  # epochs — one output row per emitted COPY, epoch-tagged
+        elif args.mode == "epochs":  # one output row per emitted COPY
             sel = epoch_budget_sample(
                 docs, spec, text_col=args.text_col,
                 default_budget=args.default, **common
@@ -235,29 +167,30 @@ def main(argv: list[str] | None = None) -> int:
             kept = docs.join(
                 sel.select(args.id_col, "epoch"), on=args.id_col, how="inner"
             )
+        else:  # shuffle / shard: the terminal layout of the whole input
+            kept = docs
         kept = kept.persist()
-        write_documents(kept, args.output, mode="overwrite")
-
-        from modern_document_converter_for_ai_library_spark.operators.quality import (
-            _tokens,
+        layout = write_training_layout(
+            kept,
+            args.output,
+            shard_tokens=args.shard_tokens if args.mode == "shard" else 0,
+            shuffle_salt=args.salt if args.mode == "shuffle" else None,
+            text_col=args.text_col,
+            manifest=args.manifest,
+            **common,
         )
-
-        toks = _tokens(args.text_col)
-        n_in = docs.count()
-        n_out = kept.count()
-        tokens_out = (
-            kept.select(F.sum(F.size(toks)).alias("t")).collect()[0]["t"] or 0
-        )
-        print(
-            json.dumps(
-                {
-                    "mode": args.mode,
-                    "n_docs_in": n_in,
-                    "n_rows_out": n_out,
-                    "tokens_out": int(tokens_out),
-                }
-            )
-        )
+        n_out = layout["n_docs"]
+        rep = {
+            "mode": args.mode,
+            "n_docs_in": (
+                n_out if args.mode in ("shuffle", "shard") else docs.count()
+            ),
+            "n_rows_out": n_out,
+            **layout,
+        }
+        if args.mode == "shuffle":
+            rep.update(salt=args.salt, max_rank=n_out - 1)
+        print(json.dumps(rep))
         kept.unpersist()
         return 0
     finally:

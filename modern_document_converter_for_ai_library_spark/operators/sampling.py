@@ -33,6 +33,18 @@ def hash_micros_col(id_col: str = "doc_id", salt: str = "") -> F.Column:
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % MICRO
 
 
+def parse_spec(spec: str) -> dict[str, int]:
+    """'src0=3500,src1=0' -> {'src0': 3500, 'src1': 0} (empty spec ok):
+    the per-source rate/budget table of the mixing jobs' CLI flags."""
+    out: dict[str, int] = {}
+    for part in filter(None, (p.strip() for p in (spec or "").split(","))):
+        key, _, val = part.partition("=")
+        if not _:
+            raise ValueError(f"spec entry {part!r} is not key=value")
+        out[key.strip()] = int(val)
+    return out
+
+
 def stratified_sample(
     df: DataFrame,
     rates_micros: dict[str, int],
@@ -493,6 +505,54 @@ def _auto_buckets(df: DataFrame, n_rows: int | None) -> int:
     return max(32, min(1 << 20, want))
 
 
+def _bucketed_rank(
+    df: DataFrame,
+    id_col: str,
+    salt: str,
+    n_buckets: int | None,
+    n_rows: int | None,
+    tokens_col: str | None = None,
+) -> DataFrame:
+    """The bucketed rank body shared by :func:`corpus_shuffle` and
+    :func:`shuffled_shard_assign` (scale shape: see corpus_shuffle).
+    Adds ``shuffle_rank`` and, with ``tokens_col``, ``cum_tokens``: the
+    running sum of ``tokens_col`` in rank order, current row included."""
+    from pyspark.sql import Window
+
+    if n_buckets is None:
+        n_buckets = _auto_buckets(df, n_rows)
+    if n_buckets <= 0:
+        raise ValueError(f"n_buckets must be positive, got {n_buckets}")
+    bucket_width = -(-SHUFFLE_KEY_SPACE // n_buckets)  # ceil: bucket < n_buckets
+    base = df.withColumn("_hm", shuffle_key_col(id_col, salt)).withColumn(
+        "_bucket", F.expr(f"_hm div CAST({bucket_width} AS BIGINT)")
+    )
+    w_off = Window.orderBy("_bucket").rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    # the rank offset keeps each operator's historic alias so the
+    # optimized plans recorded in BENCH/PLANS.md stay byte-identical
+    roff = "_offset" if tokens_col is None else "_roff"
+    aggs = [F.count("*").alias("_n")]
+    offs = [F.coalesce(F.sum("_n").over(w_off), F.lit(0)).alias(roff)]
+    if tokens_col is not None:
+        aggs.append(F.sum(tokens_col).alias("_t"))
+        offs.append(F.coalesce(F.sum("_t").over(w_off), F.lit(0)).alias("_toff"))
+    offsets = base.groupBy("_bucket").agg(*aggs).select("_bucket", *offs)
+    w_local = Window.partitionBy("_bucket").orderBy("_hm", id_col)
+    ranked = base.join(F.broadcast(offsets), "_bucket", "left").withColumn(
+        "shuffle_rank",
+        (F.col(roff) + F.row_number().over(w_local) - 1).cast("bigint"),
+    )
+    if tokens_col is not None:
+        w_run = w_local.rowsBetween(Window.unboundedPreceding, 0)
+        ranked = ranked.withColumn(
+            "cum_tokens",
+            (F.col("_toff") + F.sum(tokens_col).over(w_run)).cast("bigint"),
+        )
+    return ranked.drop("_hm", "_bucket", roff, "_toff")
+
+
 def corpus_shuffle(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -528,10 +588,10 @@ def corpus_shuffle(
     BOUNDED window (<= n_buckets rows — the ivf seed-ranking class, not
     a corpus reducer); the within-bucket rank is a row_number window
     partitioned by bucket. ``n_buckets=None`` (default) sizes the
-    decomposition from one corpus count: ceil(n / 4e6) buckets (floor
-    32, cap 2^20), so a 10^12-doc corpus auto-spreads over ~250k
-    bucket partitions of ~4M rows each instead of silently funnelling
-    10^7-row windows through a fixed default. Pass an explicit
+    decomposition from one corpus count (:func:`_auto_buckets`), so a
+    10^12-doc corpus auto-spreads over ~250k bucket partitions of ~4M
+    rows each instead of silently funnelling 10^7-row windows through a
+    fixed default. Pass an explicit
     ``n_buckets`` to skip the count job (the permutation itself is
     bucket-count-invariant — only the window partitioning changes), or
     ``n_rows`` when the caller just counted the frame (curate_job's
@@ -544,35 +604,7 @@ def corpus_shuffle(
     ranks would fall to row_number's arbitrary order — nondeterministic
     across partitionings. Run exact_dedup/assign ids upstream first.
     """
-    from pyspark.sql import Window
-
-    if n_buckets is None:
-        n_buckets = _auto_buckets(df, n_rows)
-    if n_buckets <= 0:
-        raise ValueError(f"n_buckets must be positive, got {n_buckets}")
-    bucket_width = -(-SHUFFLE_KEY_SPACE // n_buckets)  # ceil: bucket < n_buckets
-    base = df.withColumn("_hm", shuffle_key_col(id_col, salt)).withColumn(
-        "_bucket", F.expr(f"_hm div CAST({bucket_width} AS BIGINT)")
-    )
-    per_bucket = base.groupBy("_bucket").agg(F.count("*").alias("_n"))
-    w_off = Window.orderBy("_bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = per_bucket.select(
-        "_bucket",
-        F.coalesce(F.sum("_n").over(w_off), F.lit(0)).alias("_offset"),
-    )
-    w_local = Window.partitionBy("_bucket").orderBy("_hm", id_col)
-    return (
-        base.join(F.broadcast(offsets), "_bucket", "left")
-        .withColumn(
-            "shuffle_rank",
-            (F.col("_offset") + F.row_number().over(w_local) - 1).cast(
-                "bigint"
-            ),
-        )
-        .drop("_hm", "_bucket", "_offset")
-    )
+    return _bucketed_rank(df, id_col, salt, n_buckets, n_rows)
 
 
 def shard_assign(
@@ -660,54 +692,21 @@ def shuffled_shard_assign(
     like :func:`corpus_shuffle` (same ``n_rows`` caller-knows-the-count
     shortcut).
     """
-    from pyspark.sql import Window
-
     from .quality import _tokens
 
     if shard_tokens <= 0:
         raise ValueError(f"shard_tokens must be positive, got {shard_tokens}")
-    if n_buckets is None:
-        n_buckets = _auto_buckets(df, n_rows)
-    if n_buckets <= 0:
-        raise ValueError(f"n_buckets must be positive, got {n_buckets}")
-    bucket_width = -(-SHUFFLE_KEY_SPACE // n_buckets)
-    base = df.withColumn(
+    with_tokens = df.withColumn(
         "n_tokens",
         F.coalesce(F.size(_tokens(text_col)), F.lit(0)).cast("bigint"),
-    ).withColumn("_hm", shuffle_key_col(id_col, salt)).withColumn(
-        "_bucket", F.expr(f"_hm div CAST({bucket_width} AS BIGINT)")
     )
-    per_bucket = base.groupBy("_bucket").agg(
-        F.count("*").alias("_n"), F.sum("n_tokens").alias("_t")
-    )
-    w_off = Window.orderBy("_bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = per_bucket.select(
-        "_bucket",
-        F.coalesce(F.sum("_n").over(w_off), F.lit(0)).alias("_roff"),
-        F.coalesce(F.sum("_t").over(w_off), F.lit(0)).alias("_toff"),
-    )
-    w_local = Window.partitionBy("_bucket").orderBy("_hm", id_col)
-    w_run = w_local.rowsBetween(Window.unboundedPreceding, 0)
-    cum = F.col("_toff") + F.sum("n_tokens").over(w_run)
-    return (
-        base.join(F.broadcast(offsets), "_bucket", "left")
-        .withColumn(
-            "shuffle_rank",
-            (F.col("_roff") + F.row_number().over(w_local) - 1).cast(
-                "bigint"
-            ),
-        )
-        .withColumn("cum_tokens", cum.cast("bigint"))
-        .withColumn(
-            "shard_id",
-            F.expr(
-                "(cum_tokens - n_tokens) div CAST(%d AS BIGINT)"
-                % shard_tokens
-            ).cast("bigint"),
-        )
-        .drop("_hm", "_bucket", "_roff", "_toff")
+    return _bucketed_rank(
+        with_tokens, id_col, salt, n_buckets, n_rows, tokens_col="n_tokens"
+    ).withColumn(
+        "shard_id",
+        F.expr(
+            "(cum_tokens - n_tokens) div CAST(%d AS BIGINT)" % shard_tokens
+        ).cast("bigint"),
     )
 
 
@@ -741,3 +740,104 @@ def shard_manifest(
         F.min("hash_micros").cast("bigint").alias("min_hash_micros"),
         F.max("hash_micros").cast("bigint").alias("max_hash_micros"),
     )
+
+
+def write_training_layout(
+    df: DataFrame,
+    output: str,
+    *,
+    shard_tokens: int = 0,
+    shuffle_salt: str | None = None,
+    key_col: str,
+    id_col: str,
+    text_col: str,
+    salt: str,
+    manifest: str | None = None,
+    n_rows: int | None = None,
+) -> dict:
+    """Write ``df`` (overwrite) as the terminal training layout and return
+    its accounting: ``n_docs``, ``tokens_out``, plus ``n_shards``,
+    ``max_shard_tokens`` and ``manifest`` when sharded (``shard_tokens >
+    0``). Stale ``shard_id``/``shuffle_rank`` columns are replaced.
+
+      - shard + shuffle: :func:`shuffled_shard_assign`'s frame written as
+        computed, PARTITIONED BY shard_id. Its partitions hold buckets of
+        contiguous ranks, so the data files are at most n_shards +
+        n_buckets; an id join-back would scatter every shard over every
+        task.
+      - shard: :func:`shard_assign` joined back by id, repartitioned and
+        PARTITIONED BY (key_col, shard_id) — one file per directory.
+      - shuffle: :func:`corpus_shuffle`; neither: ``df`` as is.
+
+    The manifest (default ``<output>_manifest``) is the matching
+    ``*_manifest`` operator. The accounting is one aggregate: over the
+    manifest when sharded, else a count + token sum over ``df`` (the
+    written rows). ``n_rows`` is the bucket-sizing hint of
+    :func:`corpus_shuffle`.
+
+    Precondition: ``df`` is read twice (write + accounting), so the
+    caller persists it.
+    """
+    from ..sources.catalog import write_documents
+    from .quality import _tokens
+
+    # the operators are called through the module globals, which the
+    # perfbench tracer patches to attribute their time
+    sharded = shard_tokens > 0
+    parts = None
+    if sharded and shuffle_salt is not None:
+        assigned = shuffled_shard_assign(
+            df.drop("shard_id", "shuffle_rank"),
+            shard_tokens,
+            id_col=id_col,
+            text_col=text_col,
+            salt=shuffle_salt,
+            n_rows=n_rows,
+        ).persist()
+        parts = ["shard_id"]
+        out = assigned.drop("n_tokens", "cum_tokens")
+        man = shuffled_shard_manifest(assigned)
+    elif sharded:
+        assigned = shard_assign(
+            df,
+            shard_tokens,
+            key_col=key_col,
+            id_col=id_col,
+            text_col=text_col,
+            salt=salt,
+        ).persist()
+        parts = [key_col, "shard_id"]
+        out = (
+            df.drop("shard_id")
+            .join(assigned.select(id_col, "shard_id"), on=id_col, how="inner")
+            .repartition(*parts)
+        )
+        man = shard_manifest(assigned, key_col=key_col)
+    elif shuffle_salt is not None:
+        out = corpus_shuffle(
+            df.drop("shuffle_rank"), id_col=id_col, salt=shuffle_salt,
+            n_rows=n_rows,
+        )
+    else:
+        out = df
+    write_documents(out, output, mode="overwrite", partition_by=parts)
+    if not sharded:
+        row = df.agg(
+            F.count("*").alias("n_docs"),
+            F.coalesce(
+                F.sum(F.size(_tokens(text_col)).cast("bigint")), F.lit(0)
+            ).alias("tokens_out"),
+        ).collect()[0]
+        return row.asDict()
+    target = manifest or (output + "_manifest")
+    write_documents(man, target, mode="overwrite")
+    row = man.agg(
+        F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n_docs"),
+        F.coalesce(F.sum("shard_token_count"), F.lit(0)).alias("tokens_out"),
+        F.count("*").alias("n_shards"),
+        F.coalesce(F.max("shard_token_count"), F.lit(0)).alias(
+            "max_shard_tokens"
+        ),
+    ).collect()[0]
+    assigned.unpersist()
+    return {**row.asDict(), "manifest": target}

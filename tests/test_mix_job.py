@@ -121,6 +121,15 @@ def test_mix_job_shard(spark, corpus, tmp_path, capsys):
         d.startswith("shard_id=")
         for d in os.listdir(os.path.join(out, srcdirs[0]))
     )
+    # the write is repartitioned on (key, shard_id): one data file per
+    # shard directory, not one per write task that held a row of it
+    for src in srcdirs:
+        for shard in os.listdir(os.path.join(out, src)):
+            files = [
+                f for f in os.listdir(os.path.join(out, src, shard))
+                if not f.startswith(("_", "."))
+            ]
+            assert len(files) == 1, (src, shard, files)
     # manifest written next to the output, mass accounting consistent
     man = spark.read.parquet(stats["manifest"])
     assert set(man.columns) == {
