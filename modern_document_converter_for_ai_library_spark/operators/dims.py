@@ -93,7 +93,8 @@ def resolve_courts(
     resolve to the most specific court. Plan: four regexp_extracts (JVM,
     codegen) + one broadcast hash join on the matched literal — no per-row
     Python, no shuffle of ``df``. Differential coverage vs the ACTUAL
-    legacy extractor: tests/test_dims.py.
+    legacy extractor: tests/test_dims.py, where the reference checkout is
+    present; the federal-before-state priority is checked everywhere.
     """
     spark = spark or df.sparkSession
     dim = courts_dim(spark)

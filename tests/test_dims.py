@@ -1,8 +1,11 @@
 """Broadcast court/reporter dimension joins (J1/J2)."""
 
+import os
+
 import pytest
 
 from modern_document_converter_for_ai_library_spark.operators.dims import (
+    _load_dims,
     courts_dim,
     reporters_dim,
     resolve_courts,
@@ -84,12 +87,25 @@ def test_resolve_reporters_header_first(spark):
 # (zOld-Code/step1…/court_extractor.py) over the full 202-court table
 # ---------------------------------------------------------------------------
 
+_ZOLD_COURT_EXTRACTOR = (
+    "/root/reference/zOld-Code/step1--Base_FILENAME--a-caselaw/"
+    "src/extractors/court_extractor.py"
+)
+_needs_zold = pytest.mark.skipif(
+    not os.path.exists(_ZOLD_COURT_EXTRACTOR),
+    reason="legacy court extractor (reference checkout) absent",
+)
+
+
 def _zold_extractor():
+    """The legacy CourtExtractor, or None where the reference checkout is
+    absent. A present-but-broken reference still raises."""
     import importlib.util
 
+    if not os.path.exists(_ZOLD_COURT_EXTRACTOR):
+        return None
     spec = importlib.util.spec_from_file_location(
-        "zold_court_extractor",
-        "/root/reference/zOld-Code/step1--Base_FILENAME--a-caselaw/src/extractors/court_extractor.py",
+        "zold_court_extractor", _ZOLD_COURT_EXTRACTOR
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -149,15 +165,10 @@ _KNOWN_DIVERGENT_TEXTS = {
 }
 
 
+@_needs_zold
 def test_resolve_courts_differential_full_table(spark):
-    import json
-
     ref = _zold_extractor()
-    dims = json.load(
-        open(
-            "modern_document_converter_for_ai_library_spark/data/legal_dims.json"
-        )
-    )["courts"]
+    dims = _load_dims()["courts"]
     cases = []
     for c in dims:
         k = c["court_key"]
@@ -208,22 +219,25 @@ def test_resolve_courts_differential_full_table(spark):
 def test_resolve_courts_federal_beats_state_regardless_of_position(spark):
     """court_extractor.py:58-80 tries federal categories before state courts
     no matter where they occur in the text — leftmost-match would get this
-    wrong."""
+    wrong. The assertions on the legacy extractor itself run where the
+    reference checkout is present."""
     ref = _zold_extractor()
     text = "Supreme Court of Georgia\nOn writ to the SUPREME COURT OF THE UNITED STATES\n"
-    assert ref.extract_from_pdf(text) == "US"
+    if ref is not None:
+        assert ref.extract_from_pdf(text) == "US"
     df = spark.createDataFrame([(0, text)], ["i", "text"])
     row = resolve_courts(df).collect()[0]
     assert row["court_key"] == "federal/supreme_court"
 
     text2 = "Court of Appeals of Georgia\nAppeal from the Eleventh Circuit\n"
-    ref_code = ref.extract_from_pdf(text2)
+    if ref is not None:
+        assert ref.extract_from_pdf(text2) == "Cir_11"
     df2 = spark.createDataFrame([(0, text2)], ["i", "text"])
     row2 = resolve_courts(df2).collect()[0]
-    assert ref_code == "Cir_11"
     assert row2["court_key"] == "federal/courts_of_appeals/11th"
 
 
+@_needs_zold
 def test_reference_state_pattern_collapse(spark):
     """Pin the reference bug behind _KNOWN_DIVERGENT_TEXTS: its generated
     state patterns ignore the criminal/civil qualifier, so the plain Texas
