@@ -112,14 +112,11 @@ def test_curate_job_full_funnel(spark, planted, tmp_path, capsys):
     assert len(got[5].split(" ")) == 60
 
 
-def test_curate_job_shuffled_shards(
-    spark, planted, tmp_path, capsys, monkeypatch
-):
+def test_curate_job_shuffled_shards(spark, planted, tmp_path, capsys):
     """--shuffle-salt turns the terminal layout into the q_training_layout
     shape: shard contents equal the composed corpus_shuffle +
     token-cumsum result (VERDICT r4 item 2), with the accounting line."""
     import jobs.curate_job as job
-    from modern_document_converter_for_ai_library_spark import plans
     from modern_document_converter_for_ai_library_spark.operators.sampling import (
         _auto_buckets,
         shuffled_shard_assign,
@@ -206,17 +203,10 @@ def test_curate_job_shuffled_shards(
         "spark.sql.adaptive.coalescePartitions.enabled": "false",
     }
     saved = {k: spark.conf.get(k) for k in conf}
-    get_spark = plans.get_spark
-
-    def corpus_scale_spark(**kw):
-        session = get_spark(**kw)  # re-applies the session defaults
-        for k, v in conf.items():
-            session.conf.set(k, v)
-        return session
-
-    monkeypatch.setattr(plans, "get_spark", corpus_scale_spark)
     many = str(tmp_path / "train_many")
     try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
         rc = job.main(
             [
                 "--input", raw, "--output", many, "--skip-quality",
@@ -237,6 +227,43 @@ def test_curate_job_shuffled_shards(
         if not f.startswith(("_", "."))
     ]
     assert len(files) <= n_shards + n_buckets
+
+
+def test_curate_job_leaves_caller_session_as_found(
+    spark, planted, tmp_path, capsys
+):
+    """A job called in-process runs on its caller's session as is:
+    get_spark hands back that session without re-applying any conf, so
+    values set on the session survive the job, and the report does not
+    depend on them."""
+    import jobs.curate_job as job
+    from modern_document_converter_for_ai_library_spark.plans import get_spark
+
+    inp, _, _ = planted
+    argv = ["--input", inp, "--output", str(tmp_path / "train_s"),
+            "--skip-near", "--mix-spec", "a=1000000000", "--shard-tokens", "200"]
+
+    def report():
+        assert job.main(argv) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    before = report()
+    sentinels = {
+        "spark.sql.shuffle.partitions": "5",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "17",
+    }
+    saved = {k: spark.conf.get(k) for k in sentinels}
+    try:
+        for k, v in sentinels.items():
+            spark.conf.set(k, v)
+        assert get_spark() is spark
+        after = report()
+        assert get_spark() is spark
+        assert {k: spark.conf.get(k) for k in sentinels} == sentinels
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert after == before
 
 
 def test_curate_job_shuffle_without_shards(spark, tmp_path, capsys):
