@@ -7,40 +7,41 @@ matches the reference's alphabetical processing order, orchestrator.py:96)
 without a global single-reducer window:
 
   1. freeze range-boundary keys ON THE DRIVER (seeded sample, collected and
-     sorted once, then broadcast as literals);
-  2. derive an explicit ``_pid`` column from those bounds — a pure function
-     of the row, monotone in the order key;
-  3. count rows per pid (tiny result: P rows to the driver) and compute an
-     exclusive prefix-sum => each pid's starting index;
-  4. hash-repartition by ``_pid`` (all rows of a pid land in one task,
-     deterministically), sort within partitions by (pid, key), and assign
-     ``offset[pid] + local_rank`` in one mapInPandas pass.
+     sorted once) and derive an explicit ``_pid`` column from them as a
+     ``CASE WHEN`` chain of literals — a pure function of the row, monotone
+     in the order key;
+  2. count the code-taking rows per pid (tiny result: P rows to the driver)
+     and prefix-sum them there => each pid's starting index;
+  3. give every row its pid's starting index (a literal) plus a running
+     count of the code-taking rows before it, in a window partitioned by
+     ``_pid`` and ordered by the key.
 
 Unlike ``repartitionByRange`` — whose bounds come from an internal sample
 re-drawn with a lineage-dependent seed on every recompute — the bounds here
-are frozen driver-side literals, so the count pass and the assign pass see
+are frozen driver-side literals, so the count pass and the window see
 identical splits BY CONSTRUCTION, no matter how many times Spark recomputes
-the lineage (VERDICT r2 "What's wrong #1"). The only data-wide movement is
-the single hash shuffle on ``_pid``.
+the lineage (VERDICT r2 "What's wrong #1"). After the driver collects the
+plan is column expressions only: one hash shuffle on ``_pid`` for the
+window, no Python.
 
-The pid derivation is an O(P) array scan per row (``size(filter(bounds,
-b -> key >= b))``), fine for the few-hundred-partition range this job uses;
-at many thousands of output partitions swap it for a binary search inside
-the assign kernel.
+The running count uses a ROWS frame, so rows with equal keys still get
+distinct indexes, but in an unspecified order: the order key must be a
+total order (``doc_id`` is unique; the indexer's key ends with the path).
+The pid derivation is an O(P) comparison chain per row, fine for the
+few-hundred-partition range this job uses.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from itertools import accumulate
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..reference_semantics.codes import ALPHABET, CODE_LENGTH
 
 _PID = "__cg_pid"
+_TAKES = "__cg_takes"
 
 
 def code_from_index_col(idx_col):
@@ -55,13 +56,23 @@ def code_from_index_col(idx_col):
     return F.concat(*digits)
 
 
+def index_from_code_col(code_col: str) -> Column:
+    """Columnar base-25 decode (C1), the inverse of :func:`code_from_index_col`
+    on valid codes."""
+    return sum(
+        (F.expr("instr('%s', substring(%s, %d, 1))" % (ALPHABET, code_col, k + 1)) - 1)
+        * 25 ** (CODE_LENGTH - 1 - k)
+        for k in range(CODE_LENGTH)
+    )
+
+
 def _frozen_bounds(
     df: DataFrame, order_col: str, num_partitions: int, n_rows: int
 ) -> list:
     """P-1 sorted boundary keys, sampled once and frozen on the driver.
 
-    Returned values are plain Python strings — they become broadcast
-    literals in the pid expression, immune to lineage recomputation.
+    Returned values are plain Python values — they become literals in the
+    pid expression, immune to lineage recomputation.
     """
     if num_partitions <= 1 or n_rows == 0:
         return []
@@ -81,18 +92,39 @@ def _frozen_bounds(
     return bounds
 
 
+def _pid_col(order_col: str, bounds: list) -> Column:
+    """The number of bounds <= key, as a CASE WHEN chain over the sorted
+    bounds (an array-filter lambda here fails analysis once an aggregate
+    sits above it)."""
+    if not bounds:
+        return F.lit(0)
+    key = F.col(order_col)
+    pid = F.when(key < F.lit(bounds[0]), 0)
+    for i, b in enumerate(bounds[1:], start=1):
+        pid = pid.when(key < F.lit(b), i)
+    return pid.otherwise(len(bounds))
+
+
 def assign_codes(
     df: DataFrame,
     order_col: str = "doc_id",
     start_index: int = 0,
     index_col: str = "code_index",
     num_partitions: int | None = None,
+    allocate: Column | None = None,
 ) -> DataFrame:
     """Add ``code_index`` (bigint) and ``unique_code`` columns.
 
+    ``allocate`` (a boolean column; default: every row) names the rows that
+    take a code. Every row's ``code_index`` is ``start_index`` plus the
+    number of code-taking rows before it in ``order_col`` order: a taking
+    row's own index, and for any other row the index of the next taking
+    row after it. ``unique_code`` is set on taking rows only.
+
     ``start_index`` continues a previous batch's allocation (recorded in the
     manifest table) — the distributed analogue of the registry's
-    ``next_code_index`` row.
+    ``next_code_index`` row. ``num_partitions`` (default: the context's
+    ``defaultParallelism``) is the number of range buckets.
 
     Deterministic under recompute: two materializations of the returned
     DataFrame produce identical (row, code_index) assignments even if no
@@ -100,60 +132,31 @@ def assign_codes(
     literals and every downstream step is a pure function of row values
     (tests/test_codes_rename.py::test_assign_codes_recompute_stability).
     """
-    spark = df.sparkSession
     if num_partitions is None:
-        num_partitions = max(df.rdd.getNumPartitions(), 1)
+        num_partitions = df.sparkSession.sparkContext.defaultParallelism
 
     n_rows = df.count()
     bounds = _frozen_bounds(df, order_col, num_partitions, n_rows)
+    takes = F.lit(True) if allocate is None else F.coalesce(allocate, F.lit(False))
+    with_pid = df.withColumn(_PID, _pid_col(order_col, bounds)).withColumn(
+        _TAKES, takes.cast("int")
+    )
 
-    if bounds:
-        pid_expr = F.size(
-            F.filter(
-                F.array(*[F.lit(b) for b in bounds]),
-                lambda b: F.col(order_col) >= b,
-            )
+    counts = dict(with_pid.groupBy(_PID).agg(F.sum(_TAKES)).collect())
+    offsets = accumulate(
+        (counts.get(pid) or 0 for pid in range(len(bounds))), initial=start_index
+    )
+
+    running = F.sum(_TAKES).over(
+        Window.partitionBy(_PID)
+        .orderBy(order_col)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    offset = F.element_at(F.array(*[F.lit(o) for o in offsets]), F.col(_PID) + 1)
+    return (
+        with_pid.withColumn(index_col, (offset + running - F.col(_TAKES)).cast("long"))
+        .withColumn(
+            "unique_code", F.when(F.col(_TAKES) == 1, code_from_index_col(index_col))
         )
-    else:
-        pid_expr = F.lit(0)
-    with_pid = df.withColumn(_PID, pid_expr.cast("int"))
-
-    counts = {
-        r[_PID]: r["cnt"]
-        for r in with_pid.groupBy(_PID).agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets = {}
-    acc = start_index
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    offsets_bc = spark.sparkContext.broadcast(offsets)
-
-    out_schema = T.StructType(
-        with_pid.schema.fields + [T.StructField(index_col, T.LongType(), False)]
+        .drop(_PID, _TAKES)
     )
-
-    def _assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Rows arrive sorted by (pid, key); a partition may hold several
-        # pids (hash partitioning), so keep one running counter per pid.
-        local: dict = {}
-        offs = offsets_bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.assign(**{index_col: pd.Series([], dtype="int64")})
-                continue
-            idx = []
-            for pid in pdf[_PID]:
-                pid = int(pid)
-                c = local.get(pid, 0)
-                idx.append(offs[pid] + c)
-                local[pid] = c + 1
-            out = pdf.copy()
-            out[index_col] = pd.Series(idx, dtype="int64").values
-            yield out
-
-    parted = with_pid.repartition(num_partitions, _PID).sortWithinPartitions(
-        _PID, order_col
-    )
-    assigned = parted.mapInPandas(_assign, schema=out_schema).drop(_PID)
-    return assigned.withColumn("unique_code", code_from_index_col(index_col))

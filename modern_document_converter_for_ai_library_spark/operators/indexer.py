@@ -9,9 +9,16 @@ column expressions plus the two-phase frozen-bounds allocation from
 (itself differentially tested against the actual module).
 
 Scale shape: classification is map-only (regex on the filename leaf);
-allocation is the single hash shuffle of ``assign_codes``; the optional
-conflict probe is one equi-join on the exact destination string against
-the (small) pre-existing-destinations table, broadcastable by AQE.
+allocation is ``assign_codes``' window over driver-frozen range buckets (one
+hash shuffle, no Python); the optional conflict probe is one equi-join on
+the exact destination string against the (small) pre-existing-destinations
+table, broadcastable by AQE.
+
+Divergence, documented: paths that differ only in case tie in the
+reference's sort key, so the reference numbers them in its filesystem glob
+order. Here the tie is broken by the path itself (code point order, so
+``d/Case.pdf`` before ``d/case.pdf``), which keeps the numbering a pure
+function of the input set under any partitioning.
 
 Divergence, documented: the reference resolves destination conflicts
 sequentially (rollback → the NEXT candidate reuses the index), which is
@@ -109,12 +116,16 @@ def index_filenames(
         F.filter(F.split(F.col(path_col), "/"), lambda x: x != "")
     ) + F.when(F.col(path_col).startswith("/"), F.lit(1)).otherwise(F.lit(0))
     # deepest-first, then case-insensitive (filename_indexer.py:271):
-    # lexicographic key = zero-padded descending depth, then lower(path)
+    # lexicographic key = zero-padded descending depth, then lower(path),
+    # then path itself to break case ties. NUL sorts below every other
+    # character, so the key orders exactly as the pair (lower(path), path).
     cands = cands.withColumn(
         "_ixkey",
         F.concat(
             F.lpad((F.lit(100000) - depth).cast("string"), 6, "0"),
             F.lower(F.col(path_col)),
+            F.lit("\u0000"),
+            F.col(path_col),
         ),
     )
     assigned = assign_codes(

@@ -1,17 +1,16 @@
 """Distributed rename flow (SURVEY.md §3.2): classify -> extract metadata ->
 discover-or-allocate code -> canonical filename.
 
-Plan shape:
+Plan shape — one pass over the persisted kernel output:
 
     scan (doc_id, source_file, spans)
-      -> ArrowEvalPython: rename kernel (classification + metadata regexes +
+      -> MapInPandas: rename kernel (classification + metadata regexes +
          filename template with a {code} placeholder + legacy-code discovery,
-         plus the reference's STEP-3 metadata gate)
-      -> split: metadata-eligible docs with a discovered code vs docs that
-         need the two-phase sequential allocation (operators/codes.py) vs
-         ineligible docs (no code consumed — rename_step.py:183-196)
-      -> code-uniqueness resolution on the CONTESTED subset only (broadcast)
-      -> unionByName + placeholder substitution (pure column exprs)
+         plus the reference's STEP-3 metadata gate), persisted
+      -> assign_codes (operators/codes.py) over every row, counting fresh
+         allocations only
+      -> broadcast left join of ``claim_min`` on the code each row holds
+      -> claim settlement + placeholder substitution (pure column exprs)
 
 Code-uniqueness semantics are bug-for-bug with the reference registry
 (differentially tested against the actual Registrar/CodeGenerator in
@@ -32,11 +31,21 @@ tests/test_codes_rename.py):
   (increment_code_index commits before allocate_code raises), so dense
   ranks over the needs-code subset reproduce the reference's numbering.
 
-Scale notes: the kernel output (slim metadata rows, no spans) is persisted
-once and read by the three branches; claim resolution touches only docs
-that carry a discovered code plus fresh allocations colliding with one —
-both rare — so every resolution join is a broadcast and the only data-wide
-shuffle is assign_codes' range partition.
+Settlement, derived from ``reference_semantics.codes.registry_replay``.
+``before`` = start_index + the fresh allocations (metadata-eligible, no
+discovered code) with a smaller doc_id; it is a fresh row's index.
+``claim_min[c]`` = the smallest doc_id among the claimants of code c.
+
+- a fresh row with index ``i`` fails with ``DUP_ALLOC_ERR`` (keeping ``i``)
+  iff ``claim_min[index_to_code(i)] < doc_id``;
+- a claimant of ``c`` fails with ``DUP_CLAIM_ERR`` iff ``doc_id !=
+  claim_min[c]``, or ``start_index <= code_to_index(c) < before`` (a fresh
+  allocation took ``c`` earlier);
+- rows without ``metadata_ok`` pass through with no code.
+
+The kernel output (slim metadata rows, no spans) is read by the code
+assignment and the claim aggregate; the only data-wide shuffle is
+assign_codes' window.
 """
 
 from __future__ import annotations
@@ -51,7 +60,7 @@ from pyspark.storagelevel import StorageLevel
 
 from ..reference_semantics.codes import DUP_ALLOC_ERR, DUP_CLAIM_ERR
 from ..reference_semantics.convert import rename_doc
-from .codes import assign_codes
+from .codes import assign_codes, index_from_code_col
 from .convert import _as_span_dicts
 
 RENAME_KERNEL_SCHEMA = T.StructType(
@@ -97,11 +106,12 @@ def rename_documents(
 
     Deterministic: output equals ``reference_semantics.convert.
     rename_corpus_sequential`` over the same (doc_id, spans, source_file)
-    rows, for any partitioning. The kernel output is persisted (read by
-    three branches + winner resolution); pass a ``plans.caching.CacheScope``
-    to own its lifetime — release it after materializing the result
-    (tests/test_cache_hygiene.py). Recompute is safe either way (the kernel
-    is pure per row); the persist is a performance choice only.
+    rows, for any partitioning. The kernel output is persisted (read by the
+    code assignment and the claim aggregate); pass a
+    ``plans.caching.CacheScope`` to own its lifetime — release it after
+    materializing the result (tests/test_cache_hygiene.py). Recompute is
+    safe either way (the kernel is pure per row); the persist is a
+    performance choice only.
     """
     from ..plans.caching import scoped_persist
 
@@ -112,83 +122,49 @@ def rename_documents(
         cache_scope,
         StorageLevel.MEMORY_AND_DISK,
     )
+    claimant = F.col("metadata_ok") & F.col("discovered_code").isNotNull()
+    fresh = F.col("metadata_ok") & F.col("discovered_code").isNull()
 
-    claimants = base.filter(F.col("discovered_code").isNotNull())
-    needs_code = base.filter(F.col("metadata_ok") & F.col("discovered_code").isNull())
-    ineligible = base.filter(~F.col("metadata_ok"))
-
-    allocated = assign_codes(
-        needs_code,
+    claim_min = (
+        base.filter(claimant)
+        .groupBy(F.col("discovered_code").alias("_code"))
+        .agg(F.min("doc_id").alias("_claim_min"))
+    )
+    # code_index = ``before`` on every row
+    counted = assign_codes(
+        base,
         order_col="doc_id",
         start_index=start_index,
         num_partitions=num_partitions,
+        allocate=fresh,
     )
-
-    # --- contested-code resolution (small data only) ---------------------
-    # holders of each discovered code: its claimants + any fresh allocation
-    # that landed on it. Per code, min(doc_id) (the reference's sequential
-    # processing order) wins; all later holders fail.
-    disc_codes = claimants.select("doc_id", F.col("discovered_code").alias("_code"))
-    fresh_hits = allocated.join(
-        F.broadcast(disc_codes.select("_code").distinct()),
-        allocated["unique_code"] == F.col("_code"),
-    ).select("doc_id", F.col("unique_code").alias("_code"))
-    winners = (
-        disc_codes.unionByName(fresh_hits)
-        .groupBy("_code")
-        .agg(F.min("doc_id").alias("_winner"))
-    )
-
-    is_winner = F.col("doc_id") == F.col("_winner")
-    disc_out = (
-        claimants.join(
-            F.broadcast(winners),
-            claimants["discovered_code"] == winners["_code"],
-            "left",
-        )
-        .withColumn("code_index", F.lit(None).cast("long"))
-        .withColumn("unique_code", F.when(is_winner, F.col("discovered_code")))
-        .withColumn(
-            "error_message",
-            F.when(is_winner, F.col("error_message")).otherwise(
-                F.lit(DUP_CLAIM_ERR)
-            ),
-        )
-        .drop("_code", "_winner")
-    )
-
-    lost = F.col("_winner").isNotNull() & (F.col("_winner") != F.col("doc_id"))
-    fresh_out = (
-        allocated.join(
-            F.broadcast(winners),
-            allocated["unique_code"] == winners["_code"],
-            "left",
-        )
-        # the losing fresh allocation burned its index but holds no code
-        .withColumn("unique_code", F.when(~lost, F.col("unique_code")))
-        .withColumn(
-            "error_message",
-            F.when(~lost, F.col("error_message")).otherwise(F.lit(DUP_ALLOC_ERR)),
-        )
-        .drop("_code", "_winner")
-    )
-
-    no_meta = ineligible.withColumn(
-        "code_index", F.lit(None).cast("long")
-    ).withColumn("unique_code", F.lit(None).cast("string"))
-
-    merged = (
-        disc_out.unionByName(fresh_out)
-        .unionByName(no_meta)
-        .withColumn(
-            "rename_success",
-            F.col("rename_success") & F.col("unique_code").isNotNull(),
-        )
-    )
-    new_filename = F.when(
-        F.col("filename_template").isNotNull() & F.col("unique_code").isNotNull(),
-        F.replace(
-            F.col("filename_template"), F.lit("{code}"), F.col("unique_code")
+    code_idx = index_from_code_col("discovered_code")
+    taken_before = (code_idx >= start_index) & (code_idx < F.col("code_index"))
+    lost = F.coalesce(
+        F.when(fresh, F.col("_claim_min") < F.col("doc_id")).when(
+            claimant, (F.col("doc_id") != F.col("_claim_min")) | taken_before
         ),
+        F.lit(False),
     )
-    return merged.withColumn("new_filename", new_filename)
+    held = (
+        counted.withColumn(
+            "_code", F.coalesce(F.col("discovered_code"), F.col("unique_code"))
+        )
+        .join(F.broadcast(claim_min), "_code", "left")
+        .withColumn("_lost", lost)
+    )
+    unique_code = F.when(~F.col("_lost"), F.col("_code"))
+    return held.withColumns(
+        {
+            "code_index": F.when(fresh, F.col("code_index")),
+            "unique_code": unique_code,
+            "rename_success": F.col("rename_success") & unique_code.isNotNull(),
+            "error_message": F.when(F.col("_lost") & fresh, F.lit(DUP_ALLOC_ERR))
+            .when(F.col("_lost"), F.lit(DUP_CLAIM_ERR))
+            .otherwise(F.col("error_message")),
+            # null when either the template or the code is
+            "new_filename": F.replace(
+                F.col("filename_template"), F.lit("{code}"), unique_code
+            ),
+        }
+    ).drop("_code", "_claim_min", "_lost")

@@ -2216,11 +2216,12 @@ GROUP BY d.doc_id, d.n_chars
 # ---------------------------------------------------------------------------
 
 def spark_code_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Two-phase allocation (operators/codes.py): range-partition by doc_id,
-    # per-partition counts -> driver prefix-sum -> streaming local ranks.
-    # Same deterministic output as a global `row_number() over (order by
-    # doc_id)` (the oracle below) WITHOUT the single-reducer window that
-    # funnels the whole corpus through one task at scale.
+    # Two-phase allocation (operators/codes.py): driver-frozen range buckets
+    # on doc_id, per-bucket counts -> driver prefix-sum -> a running count in
+    # a bucket-partitioned window. Same deterministic output as a global
+    # `row_number() over (order by doc_id)` (the oracle below) WITHOUT the
+    # single-reducer window that funnels the whole corpus through one task
+    # at scale.
     from .operators.codes import assign_codes
 
     df = _docs(spark, sf_dir).select(F.col("doc_id").cast("bigint").alias("doc_id"))
@@ -4604,7 +4605,7 @@ WITH t AS (
   FROM w
 ), r AS (
   SELECT doc_id, w1, path, status,
-    CAST(row_number() OVER (ORDER BY depth DESC, lower(path)) - 1 AS BIGINT) AS code_index
+    CAST(row_number() OVER (ORDER BY depth DESC, lower(path), path) - 1 AS BIGINT) AS code_index
   FROM p WHERE status = 'renamed'
 ), rc AS (
   SELECT doc_id, w1, path, status, code_index,

@@ -22,10 +22,10 @@ SHOWCASE = [
     ("q_lsh_jaccard_pairs", "banded LSH: codegen partial-MIN bands, bucket-local pair generation, exact Jaccard over candidate docs only"),
     ("q_exact_dedup", "single-shuffle hash grouping"),
     ("q_events_topk", "ranking window after one exchange"),
-    ("q_rename_pipeline", "kernel + broadcast-only contested-code resolution (no claim window)"),
+    ("q_rename_pipeline", "one pass over the persisted kernel output: running count of fresh allocations in a pid-partitioned window + one broadcast claim_min join (no branch union, one Python stage)"),
     ("q_embed_neardup", "sign-LSH-bucket-blocked self-join behind the aggregate barrier"),
     ("q_boilerplate", "Boilerpipe tree: per-doc lag/lead window, integer link-density"),
-    ("q_code_assign", "two-phase sequential allocation (no unpartitioned window)"),
+    ("q_code_assign", "frozen-bounds allocation: driver-literal pid offsets + a pid-partitioned running count (no unpartitioned window, no Python)"),
     ("q_simhash64_pairs", "production SimHash: single exploded-band-key self-join behind the aggregate barrier, packed-word XOR bit_count verify"),
     ("q_passage_dedup", "cross-doc passage dedup: one window shuffle on chunk hash + reassembly groupBy"),
     ("q_decontaminate", "benchmark gram set broadcast semi-join"),

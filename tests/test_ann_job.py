@@ -3,13 +3,11 @@ against them, self-query recovers itself at distance 0 with exact rescored
 distances."""
 
 import json
-import sys
 
 import duckdb
 
 
 def test_ann_job_build_then_query(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo")
     import jobs.ann_job as job
 
     src = "/root/testdata/sf0.001/embeddings.parquet"
@@ -62,7 +60,6 @@ def test_ann_job_query_requires_meta(spark, tmp_path):
     garbage neighbors)."""
     import shutil
 
-    sys.path.insert(0, "/root/repo")
     import jobs.ann_job as job
     import pytest
 
@@ -83,7 +80,6 @@ def test_ann_job_query_requires_meta(spark, tmp_path):
 
 
 def test_ann_job_query_requires_io(spark):
-    sys.path.insert(0, "/root/repo")
     import jobs.ann_job as job
     import pytest
 

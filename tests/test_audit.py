@@ -75,9 +75,6 @@ def test_audit_partitioning_invariance(spark):
 
 def test_audit_job_end_to_end(spark, tmp_path, capsys):
     import json
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import jobs.audit_job as job
 
     inp = str(tmp_path / "in")

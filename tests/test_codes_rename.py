@@ -340,7 +340,7 @@ def test_rename_claimant_after_fresh_allocation_fails(spark):
 def test_rename_flow(spark, corpus_df):
     out = rename_documents(corpus_df, start_index=0).collect()
     by_id = {r["doc_id"]: r for r in out}
-    assert len(by_id) == 150  # no docs lost across the three-way split
+    assert len(by_id) == 150  # every input doc comes out once
 
     # legacy codes: claimants are metadata-eligible docs only; the first
     # (min doc_id) keeps ABXCD, later claimants FAIL their rename exactly
@@ -397,3 +397,59 @@ def test_rename_matches_sequential_randomized(spark, seed):
         for r in rename_documents(df, start_index=7).collect()
     }
     assert got == expected
+
+
+@pytest.mark.parametrize("num_partitions", [1, 3, 8])
+@pytest.mark.parametrize("start_index", [0, 7])
+def test_rename_dense_collisions_match_sequential(spark, start_index, num_partitions):
+    """Claimed codes drawn densely around the fresh range: claimants land
+    before, inside and after ``[start_index, start_index + n)``, so fresh
+    allocations and claims collide in both orders, duplicate claims stack
+    up, and ineligible rows sit between them."""
+    import random
+
+    rnd = random.Random(start_index * 100 + num_partitions)
+    n = 60
+    lo = max(0, start_index - 5)
+    docs = []
+    for i, k in enumerate(rnd.sample(range(1000), n)):
+        doc_id = "d%03d" % k
+        r = rnd.random()
+        if r < 0.45:
+            code = index_to_code(rnd.randrange(lo, start_index + n))
+            docs.append(_caselaw_doc(doc_id, "f%d----%s.pdf" % (i, code)))
+        elif r < 0.9:
+            docs.append(_caselaw_doc(doc_id, "f%d.pdf" % i))
+        else:
+            spans = [{"kind": "text", "text": "plain notes", "media_ref": "", "offset": 0}]
+            docs.append((doc_id, "f%d----%s.pdf" % (i, index_to_code(lo)), spans))
+    expected = {
+        row["doc_id"]: tuple(row[c] for c in _OUT_COLS)
+        for row in rename_corpus_sequential(
+            [(d, s, f) for d, f, s in docs], start_index=start_index
+        )
+    }
+    errors = {e[_OUT_COLS.index("error_message")] for e in expected.values()}
+    assert {DUP_CLAIM_ERR, DUP_ALLOC_ERR} <= errors  # both collision kinds occur
+    df = spark.createDataFrame(docs, schema=DOCS_SCHEMA).repartition(5)
+    got = {
+        r["doc_id"]: tuple(r[c] for c in _OUT_COLS)
+        for r in rename_documents(
+            df, start_index=start_index, num_partitions=num_partitions
+        ).collect()
+    }
+    assert got == expected
+
+
+def test_rename_plans_one_python_stage_and_no_union(spark, corpus_df):
+    """The kernel is the only Python in the rename plan (it prints once per
+    read of its cached relation) and the claim settlement is one pass: no
+    branch union. Code assignment alone plans no Python at all."""
+    import re
+
+    plan = rename_documents(corpus_df)._jdf.queryExecution().executedPlan().toString()
+    assert len(set(re.findall(r"MapInPandas [^\n]*", plan))) == 1
+    assert "Union" not in plan
+    df = spark.range(0, 50).select(F.format_string("d%03d", "id").alias("doc_id"))
+    plan = assign_codes(df, num_partitions=3)._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan

@@ -5,12 +5,9 @@ one victim each, so the accounting line is fully predictable."""
 
 import json
 import os
-import sys
 
 import duckdb
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 STOP_CYCLE = ["the", "of", "and", "to", "in"]
 

@@ -2,13 +2,11 @@
 duplicate map over a corpus with planted exact and near duplicates."""
 
 import json
-import sys
 
 import duckdb
 
 
 def test_dedup_job_end_to_end(spark, tmp_path, capsys, monkeypatch):
-    sys.path.insert(0, "/root/repo")
     import jobs.dedup_job as job
 
     rows = [
@@ -49,7 +47,6 @@ def test_dedup_job_end_to_end(spark, tmp_path, capsys, monkeypatch):
 
 
 def test_dedup_job_exact_tier(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo")
     import jobs.dedup_job as job
 
     rows = [(1, "same text"), (2, "same text"), (3, "other text")]
@@ -65,7 +62,6 @@ def test_dedup_job_exact_tier(spark, tmp_path, capsys):
 def test_dedup_job_semantic_tier(spark, tmp_path, capsys):
     import math
 
-    sys.path.insert(0, "/root/repo")
     import jobs.dedup_job as job
 
     def unit(vs):
@@ -120,7 +116,6 @@ def test_dedup_job_semantic_tier(spark, tmp_path, capsys):
 def test_dedup_job_semantic_partial_embeddings(spark, tmp_path, capsys):
     import math
 
-    sys.path.insert(0, "/root/repo")
     import jobs.dedup_job as job
 
     def unit(vs):
@@ -173,7 +168,6 @@ def test_dedup_job_semantic_partial_embeddings(spark, tmp_path, capsys):
 def test_dedup_job_semantic_oversized_cells_audited(spark, tmp_path, capsys):
     import math
 
-    sys.path.insert(0, "/root/repo")
     import jobs.dedup_job as job
 
     def unit(vs):
@@ -206,7 +200,6 @@ def test_dedup_job_semantic_oversized_cells_audited(spark, tmp_path, capsys):
 
 
 def test_dedup_job_keep_best_col(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo")
     import jobs.dedup_job as job
 
     # docs 1/2/3 are one near-dup cluster; doc 3 carries the best score,
@@ -251,7 +244,6 @@ def test_dedup_job_keep_best_col(spark, tmp_path, capsys):
 
 
 def test_dedup_job_keep_best_requires_near(spark, tmp_path):
-    sys.path.insert(0, "/root/repo")
     import jobs.dedup_job as job
     import pytest
 
@@ -267,7 +259,6 @@ def test_dedup_job_incremental_band_index_cycle(spark, tmp_path, capsys):
     bootstraps the index from --base, run 2 reads it back (never
     re-shingling the base) and appends its survivors' rows. A batch-2 doc
     near-duplicating a BATCH-1 SURVIVOR proves the appended rows are live."""
-    sys.path.insert(0, "/root/repo")
     import jobs.dedup_job as job
 
     mk = lambda seed, n=40: " ".join(f"{seed}tok{i}" for i in range(n))
@@ -358,7 +349,6 @@ def test_dedup_job_incremental_band_index_cycle(spark, tmp_path, capsys):
 
 
 def test_dedup_job_incremental_requires_base(spark):
-    sys.path.insert(0, "/root/repo")
     import jobs.dedup_job as job
     import pytest
 

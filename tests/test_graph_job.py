@@ -2,13 +2,11 @@
 and anchor rollup over a small planted link graph."""
 
 import json
-import sys
 
 import duckdb
 
 
 def test_graph_job_end_to_end(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo")
     import jobs.graph_job as job
 
     # 0 -> 1 -> 2 -> 0 cycle + 0 -> 3 dangler; duplicate edge and a
@@ -68,7 +66,6 @@ def test_graph_job_end_to_end(spark, tmp_path, capsys):
 
 
 def test_graph_job_requires_an_output(spark, tmp_path):
-    sys.path.insert(0, "/root/repo")
     import pytest
 
     import jobs.graph_job as job

@@ -76,3 +76,18 @@ def test_index_filenames_plan_is_shuffle_lean(spark):
     out = index_filenames(df, start_index=0)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan  # classification stays columnar
+
+
+def test_index_filenames_case_variant_paths_total_order(spark):
+    """Paths that differ only in case tie on the reference's sort key; the
+    path itself breaks the tie, so the indexes are distinct and do not
+    depend on how the input is partitioned."""
+    names = ["d/case.pdf", "d/Case.pdf", "d/CASE.pdf", "d/other.pdf", "d/Other.pdf"]
+    paths = [(p, False) for p in names]
+    runs = []
+    for nparts in (1, 3):
+        df = spark.createDataFrame(paths, ["path", "is_dir"]).repartition(nparts)
+        runs.append({r["path"]: r["code_index"] for r in index_filenames(df).collect()})
+    assert runs[0] == runs[1]
+    assert sorted(runs[0].values()) == list(range(len(paths)))
+    assert runs[0]["d/CASE.pdf"] < runs[0]["d/Case.pdf"] < runs[0]["d/case.pdf"]

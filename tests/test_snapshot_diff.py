@@ -61,9 +61,6 @@ def test_diff_requires_a_comparable_column(spark):
 
 
 def test_diff_job_end_to_end(spark, tmp_path, capsys):
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo")
     import json as _json
 
     import duckdb

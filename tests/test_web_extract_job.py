@@ -13,7 +13,6 @@ from test_warc import _record, _shard_bytes  # reuse the WARC fixtures
 
 
 def test_web_extract_job_warc_end_to_end(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo")
     import jobs.web_extract_job as job
 
     warc_dir = tmp_path / "crawl"
