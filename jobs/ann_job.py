@@ -75,17 +75,13 @@ def main(argv: list[str] | None = None) -> int:
     if args.mode == "query" and not (args.queries and args.output):
         p.error("--mode query requires --queries and --output")
 
-    from modern_document_converter_for_ai_library_spark.plans import get_spark
+    from modern_document_converter_for_ai_library_spark.plans import job_session
     from modern_document_converter_for_ai_library_spark.sources.catalog import (
         read_documents,
         write_documents,
     )
 
-    from pyspark.sql import SparkSession
-
-    pre_existing = SparkSession.getActiveSession() is not None
-    spark = get_spark(app_name=f"mdcal-ann-{args.mode}", master=args.master)
-    try:
+    with job_session(f"mdcal-ann-{args.mode}", master=args.master) as spark:
         corpus = read_documents(spark, args.input)
         if args.mode == "build":
             from modern_document_converter_for_ai_library_spark.operators.pq import pq_build
@@ -175,9 +171,6 @@ def main(argv: list[str] | None = None) -> int:
                 "shortlist": args.shortlist, "m": m, "dim": dim,
             }))
         return 0
-    finally:
-        if not pre_existing:
-            spark.stop()
 
 
 if __name__ == "__main__":

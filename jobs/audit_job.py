@@ -41,17 +41,13 @@ def main(argv: list[str] | None = None) -> int:
                 "row; it is printed, not written)")
 
     from modern_document_converter_for_ai_library_spark.operators.audit import corpus_audit
-    from modern_document_converter_for_ai_library_spark.plans import get_spark
+    from modern_document_converter_for_ai_library_spark.plans import job_session
     from modern_document_converter_for_ai_library_spark.sources.catalog import (
         read_documents,
         write_documents,
     )
 
-    from pyspark.sql import SparkSession
-
-    pre_existing = SparkSession.getActiveSession() is not None
-    spark = get_spark(app_name="mdcal-audit", master=args.master)
-    try:
+    with job_session("mdcal-audit", master=args.master) as spark:
         docs = read_documents(spark, args.input)
         glob = corpus_audit(
             docs, text_col=args.text_col, id_col=args.id_col
@@ -69,9 +65,6 @@ def main(argv: list[str] | None = None) -> int:
             for r in grouped.orderBy(args.group_col).collect():
                 print(json.dumps({"scope": args.group_col, **r.asDict()}))
         return 0
-    finally:
-        if not pre_existing:
-            spark.stop()
 
 
 if __name__ == "__main__":

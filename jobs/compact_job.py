@@ -47,14 +47,10 @@ def main(argv: list[str] | None = None) -> int:
         compact_parquet,
         file_stats,
     )
-    from modern_document_converter_for_ai_library_spark.plans import get_spark
-
-    from pyspark.sql import SparkSession
+    from modern_document_converter_for_ai_library_spark.plans import job_session
 
     target = args.target_mb * 1024 * 1024
-    pre_existing = SparkSession.getActiveSession() is not None
-    spark = get_spark(app_name="mdcal-compact", master=args.master)
-    try:
+    with job_session("mdcal-compact", master=args.master) as spark:
         if args.audit_only:
             print(json.dumps(
                 {"mode": "audit", "input": args.input,
@@ -76,9 +72,6 @@ def main(argv: list[str] | None = None) -> int:
              **result}
         ))
         return 0
-    finally:
-        if not pre_existing:
-            spark.stop()
 
 
 if __name__ == "__main__":

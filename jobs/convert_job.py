@@ -42,7 +42,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--master", default=None, help="override master (default: from spark-submit)")
     args = p.parse_args(argv)
 
-    from modern_document_converter_for_ai_library_spark.plans import get_spark
+    from modern_document_converter_for_ai_library_spark.plans import job_session
     from modern_document_converter_for_ai_library_spark.operators.manifest import (
         run_resumable_convert,
     )
@@ -53,11 +53,7 @@ def main(argv: list[str] | None = None) -> int:
         write_documents,
     )
 
-    from pyspark.sql import SparkSession
-
-    pre_existing = SparkSession.getActiveSession() is not None
-    spark = get_spark(app_name=f"mdcal-{args.mode}", master=args.master)
-    try:
+    with job_session(f"mdcal-{args.mode}", master=args.master) as spark:
         # input/output accept Iceberg identifiers (catalog.db.table) or
         # parquet paths — sources/catalog.py resolves per target
         inp = read_documents(spark, args.input)
@@ -81,10 +77,6 @@ def main(argv: list[str] | None = None) -> int:
             result = {"mode": "rename", "n_docs": out.count()}
         print(json.dumps(result))
         return 0
-    finally:
-        if not pre_existing:
-            # keep an embedding caller's (e.g. test harness) session alive
-            spark.stop()
 
 
 if __name__ == "__main__":

@@ -126,7 +126,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from modern_document_converter_for_ai_library_spark.operators.dedup import (
@@ -148,7 +147,7 @@ def main(argv: list[str] | None = None) -> int:
         parse_spec,
         write_training_layout,
     )
-    from modern_document_converter_for_ai_library_spark.plans import get_spark
+    from modern_document_converter_for_ai_library_spark.plans import job_session
     from modern_document_converter_for_ai_library_spark.queries import STOPWORDS
     from modern_document_converter_for_ai_library_spark.sources.catalog import (
         read_documents,
@@ -157,9 +156,7 @@ def main(argv: list[str] | None = None) -> int:
     id_col, text_col, key_col = args.id_col, args.text_col, args.key_col
     mix_spec = parse_spec(args.mix_spec)
 
-    pre_existing = SparkSession.getActiveSession() is not None
-    spark = get_spark(app_name="mdcal-curate", master=args.master)
-    try:
+    with job_session("mdcal-curate", master=args.master) as spark:
         cur = read_documents(spark, args.input).persist()
         stages: dict[str, dict] = {}
         n_cur = cur.count()
@@ -405,9 +402,6 @@ def main(argv: list[str] | None = None) -> int:
             )
         )
         return 0
-    finally:
-        if not pre_existing:
-            spark.stop()
 
 
 if __name__ == "__main__":

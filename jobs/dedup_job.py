@@ -117,17 +117,13 @@ def main(argv: list[str] | None = None) -> int:
         exact_dedup,
         near_dedup,
     )
-    from modern_document_converter_for_ai_library_spark.plans import get_spark
+    from modern_document_converter_for_ai_library_spark.plans import job_session
     from modern_document_converter_for_ai_library_spark.sources.catalog import (
         read_documents,
         write_documents,
     )
 
-    from pyspark.sql import SparkSession
-
-    pre_existing = SparkSession.getActiveSession() is not None
-    spark = get_spark(app_name=f"mdcal-dedup-{args.tier}", master=args.master)
-    try:
+    with job_session(f"mdcal-dedup-{args.tier}", master=args.master) as spark:
         docs = read_documents(spark, args.input)
         if args.tier == "exact":
             marked = exact_dedup(docs, text_col=args.text_col, id_col=args.id_col)
@@ -229,7 +225,7 @@ def main(argv: list[str] | None = None) -> int:
                 # the selection's extra input consumers are column-pruned
                 # re-scans over the checkpoint-truncated near_dedup output
                 # — measured within run noise of the plain job at 500k
-                # docs (scripts/rep_select_probe.py), so no extra persist
+                # docs (BENCH/BASELINE.md, "Operator suite"), so no extra persist
                 # here; the shared post-selection persist below covers the
                 # job's multiple output actions.
                 # re-derive the drop flag from the score-argmax keeper so
@@ -323,10 +319,6 @@ def main(argv: list[str] | None = None) -> int:
         marked.unpersist()
         print(json.dumps(stats))
         return 0
-    finally:
-        if not pre_existing:
-            # keep an embedding caller's (e.g. test harness) session alive
-            spark.stop()
 
 
 if __name__ == "__main__":

@@ -37,40 +37,40 @@ def main(argv: list[str] | None = None) -> int:
                    help="drop unchanged rows from the output")
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
+    cols = None
+    if args.compare_cols:
+        cols = [c.strip() for c in args.compare_cols.split(",") if c.strip()]
+        if not cols:
+            p.error("--compare-cols given but names no columns")
 
     from pyspark.sql import functions as F
 
     from modern_document_converter_for_ai_library_spark.operators.diff import (
         snapshot_diff,
     )
-    from modern_document_converter_for_ai_library_spark.plans import get_spark
+    from modern_document_converter_for_ai_library_spark.plans import job_session
     from modern_document_converter_for_ai_library_spark.sources.catalog import (
         read_documents,
         write_documents,
     )
 
-    spark = get_spark(app_name="mdcal-diff", master=args.master)
-    old = read_documents(spark, args.old)
-    new = read_documents(spark, args.new)
-    cols = None
-    if args.compare_cols:
-        cols = [c.strip() for c in args.compare_cols.split(",") if c.strip()]
-        if not cols:
-            p.error("--compare-cols given but names no columns")
-    diff = snapshot_diff(
-        old, new, id_col=args.id_col, compare_cols=cols,
-        keep_unchanged=not args.delta_only,
-    ).persist()
-    write_documents(diff, args.output, mode="overwrite")
-    counts = {
-        r["change_type"]: r["n"]
-        for r in diff.groupBy("change_type")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    diff.unpersist()
-    print(json.dumps({"counts": counts, "delta_only": args.delta_only}))
-    return 0
+    with job_session("mdcal-diff", master=args.master) as spark:
+        old = read_documents(spark, args.old)
+        new = read_documents(spark, args.new)
+        diff = snapshot_diff(
+            old, new, id_col=args.id_col, compare_cols=cols,
+            keep_unchanged=not args.delta_only,
+        ).persist()
+        write_documents(diff, args.output, mode="overwrite")
+        counts = {
+            r["change_type"]: r["n"]
+            for r in diff.groupBy("change_type")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        }
+        diff.unpersist()
+        print(json.dumps({"counts": counts, "delta_only": args.delta_only}))
+        return 0
 
 
 if __name__ == "__main__":

@@ -67,7 +67,7 @@ def main(argv: list[str] | None = None) -> int:
         degree_stats,
         pagerank,
     )
-    from modern_document_converter_for_ai_library_spark.plans import get_spark
+    from modern_document_converter_for_ai_library_spark.plans import job_session
     from modern_document_converter_for_ai_library_spark.plans.caching import (
         CacheScope,
     )
@@ -78,84 +78,84 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import types as T
 
-    spark = get_spark(app_name="mdcal-graph", master=args.master)
-    raw = read_documents(spark, args.edges)
-    # fail fast on non-numeric id columns: casting a URL-string src to
-    # bigint yields NULL for every row and the job would "succeed" with an
-    # empty graph — a schema check is free and catches it before any scan
-    for col in (args.src_col, args.dst_col):
-        if not isinstance(raw.schema[col].dataType, T.NumericType):
-            p.error(
-                f"edge column {col!r} has type "
-                f"{raw.schema[col].dataType.simpleString()}; node ids must "
-                "be numeric (map string ids to hashes upstream)"
-            )
-    sel = [
-        F.col(args.src_col).cast("bigint").alias("src"),
-        F.col(args.dst_col).cast("bigint").alias("dst"),
-    ]
-    if args.anchor_col:
-        sel.append(F.col(args.anchor_col).alias("anchor"))
-    edges_full = raw.select(*sel)
+    with job_session("mdcal-graph", master=args.master) as spark:
+        raw = read_documents(spark, args.edges)
+        # fail fast on non-numeric id columns: casting a URL-string src to
+        # bigint yields NULL for every row and the job would "succeed" with an
+        # empty graph — a schema check is free and catches it before any scan
+        for col in (args.src_col, args.dst_col):
+            if not isinstance(raw.schema[col].dataType, T.NumericType):
+                p.error(
+                    f"edge column {col!r} has type "
+                    f"{raw.schema[col].dataType.simpleString()}; node ids must "
+                    "be numeric (map string ids to hashes upstream)"
+                )
+        sel = [
+            F.col(args.src_col).cast("bigint").alias("src"),
+            F.col(args.dst_col).cast("bigint").alias("dst"),
+        ]
+        if args.anchor_col:
+            sel.append(F.col(args.anchor_col).alias("anchor"))
+        edges_full = raw.select(*sel)
 
-    stats: dict = {"outputs": []}
-    with CacheScope() as scope:
-        ea = None
-        if args.no_normalize:
-            edges = edges_full.select("src", "dst")
-            ea = edges_full
-        elif args.anchor_col:
-            # ONE normalization pass serves both frames: the per-(src, dst)
-            # min-anchor aggregate dedups pairs and drops self-loops, and
-            # its (src, dst) projection IS the normalized edge set
-            ea = (
-                edges_full.filter(F.col("src") != F.col("dst"))
-                .groupBy("src", "dst")
-                .agg(F.min("anchor").alias("anchor"))
-            )
-            edges = ea.select("src", "dst")
-        else:
-            edges = (
-                edges_full.select("src", "dst")
-                .filter(F.col("src") != F.col("dst"))
-                .distinct()
-            )
-        # the edge set feeds up to three outputs plus the count stat —
-        # cache it once, released by the scope after all actions
-        edges = scope.persist(edges)
+        stats: dict = {"outputs": []}
+        with CacheScope() as scope:
+            ea = None
+            if args.no_normalize:
+                edges = edges_full.select("src", "dst")
+                ea = edges_full
+            elif args.anchor_col:
+                # ONE normalization pass serves both frames: the per-(src, dst)
+                # min-anchor aggregate dedups pairs and drops self-loops, and
+                # its (src, dst) projection IS the normalized edge set
+                ea = (
+                    edges_full.filter(F.col("src") != F.col("dst"))
+                    .groupBy("src", "dst")
+                    .agg(F.min("anchor").alias("anchor"))
+                )
+                edges = ea.select("src", "dst")
+            else:
+                edges = (
+                    edges_full.select("src", "dst")
+                    .filter(F.col("src") != F.col("dst"))
+                    .distinct()
+                )
+            # the edge set feeds up to three outputs plus the count stat —
+            # cache it once, released by the scope after all actions
+            edges = scope.persist(edges)
 
-        if args.nodes:
-            nodes = read_documents(spark, args.nodes).select(
-                F.col(args.node_col).cast("bigint").alias("node")
-            )
-        else:
-            nodes = (
-                edges.select(F.col("src").alias("node"))
-                .union(edges.select(F.col("dst").alias("node")))
-                .distinct()
-            )
+            if args.nodes:
+                nodes = read_documents(spark, args.nodes).select(
+                    F.col(args.node_col).cast("bigint").alias("node")
+                )
+            else:
+                nodes = (
+                    edges.select(F.col("src").alias("node"))
+                    .union(edges.select(F.col("dst").alias("node")))
+                    .distinct()
+                )
 
-        if args.ranks:
-            ranks = pagerank(
-                nodes,
-                edges,
-                n_iter=args.iterations,
-                damping_micros=int(round(args.damping * 1_000_000)),
-                cache_scope=scope,
-            )
-            write_documents(ranks, args.ranks, mode="overwrite")
-            stats["outputs"].append("ranks")
-            stats["iterations"] = args.iterations
-        if args.degrees:
-            write_documents(degree_stats(edges), args.degrees, mode="overwrite")
-            stats["outputs"].append("degrees")
-        if args.anchors:
-            write_documents(anchor_rollup(ea), args.anchors, mode="overwrite")
-            stats["outputs"].append("anchors")
-        stats["n_edges"] = edges.count()
-        stats["n_nodes"] = nodes.count()
-    print(json.dumps(stats))
-    return 0
+            if args.ranks:
+                ranks = pagerank(
+                    nodes,
+                    edges,
+                    n_iter=args.iterations,
+                    damping_micros=int(round(args.damping * 1_000_000)),
+                    cache_scope=scope,
+                )
+                write_documents(ranks, args.ranks, mode="overwrite")
+                stats["outputs"].append("ranks")
+                stats["iterations"] = args.iterations
+            if args.degrees:
+                write_documents(degree_stats(edges), args.degrees, mode="overwrite")
+                stats["outputs"].append("degrees")
+            if args.anchors:
+                write_documents(anchor_rollup(ea), args.anchors, mode="overwrite")
+                stats["outputs"].append("anchors")
+            stats["n_edges"] = edges.count()
+            stats["n_nodes"] = nodes.count()
+        print(json.dumps(stats))
+        return 0
 
 
 if __name__ == "__main__":

@@ -98,7 +98,6 @@ def main(argv: list[str] | None = None) -> int:
     if args.mode == "shard" and args.shard_tokens <= 0:
         raise SystemExit("--mode shard requires --shard-tokens > 0")
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from modern_document_converter_for_ai_library_spark.operators.sampling import (
@@ -107,14 +106,12 @@ def main(argv: list[str] | None = None) -> int:
         stratified_sample,
         write_training_layout,
     )
-    from modern_document_converter_for_ai_library_spark.plans import get_spark
+    from modern_document_converter_for_ai_library_spark.plans import job_session
     from modern_document_converter_for_ai_library_spark.sources.catalog import (
         read_documents,
     )
 
-    pre_existing = SparkSession.getActiveSession() is not None
-    spark = get_spark(app_name=f"mdcal-mix-{args.mode}", master=args.master)
-    try:
+    with job_session(f"mdcal-mix-{args.mode}", master=args.master) as spark:
         docs = read_documents(spark, args.input)
         common = dict(
             key_col=args.key_col, id_col=args.id_col, salt=args.salt
@@ -193,10 +190,6 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(rep))
         kept.unpersist()
         return 0
-    finally:
-        if not pre_existing:
-            # keep an embedding caller's (e.g. test harness) session alive
-            spark.stop()
 
 
 if __name__ == "__main__":

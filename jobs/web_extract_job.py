@@ -52,7 +52,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from modern_document_converter_for_ai_library_spark.operators.boilerplate import (
@@ -61,7 +60,7 @@ def main(argv: list[str] | None = None) -> int:
     from modern_document_converter_for_ai_library_spark.operators.manifest import (
         run_resumable_convert,
     )
-    from modern_document_converter_for_ai_library_spark.plans import get_spark
+    from modern_document_converter_for_ai_library_spark.plans import job_session
     from modern_document_converter_for_ai_library_spark.sources.catalog import (
         read_documents,
     )
@@ -72,9 +71,7 @@ def main(argv: list[str] | None = None) -> int:
         read_warc_content,
     )
 
-    pre_existing = SparkSession.getActiveSession() is not None
-    spark = get_spark(app_name="mdcal-web-extract", master=args.master)
-    try:
+    with job_session("mdcal-web-extract", master=args.master) as spark:
         if args.input_format == "warc":
             # fused framing+strip: one Arrow stage, raw HTML never crosses
             # the JVM<->Python boundary twice (sources/warc.py)
@@ -100,9 +97,6 @@ def main(argv: list[str] | None = None) -> int:
         )
         print(json.dumps(result))
         return 0
-    finally:
-        if not pre_existing:
-            spark.stop()
 
 
 if __name__ == "__main__":

@@ -38,7 +38,7 @@ from itertools import accumulate
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..reference_semantics.codes import ALPHABET, CODE_LENGTH
+from ..reference_semantics.codes import ALPHABET, CAPACITY, CODE_LENGTH
 
 _PID = "__cg_pid"
 _TAKES = "__cg_takes"
@@ -124,7 +124,9 @@ def assign_codes(
     ``start_index`` continues a previous batch's allocation (recorded in the
     manifest table) — the distributed analogue of the registry's
     ``next_code_index`` row. ``num_partitions`` (default: the context's
-    ``defaultParallelism``) is the number of range buckets.
+    ``defaultParallelism``) is the number of range buckets. Raises the
+    reference's "Registry exhausted" ``RuntimeError`` when an index would
+    reach ``CAPACITY``.
 
     Deterministic under recompute: two materializations of the returned
     DataFrame produce identical (row, code_index) assignments even if no
@@ -143,6 +145,12 @@ def assign_codes(
     )
 
     counts = dict(with_pid.groupBy(_PID).agg(F.sum(_TAKES)).collect())
+    if start_index + sum(n or 0 for n in counts.values()) > CAPACITY:
+        # where the reference's index_to_code stops; the encode would wrap
+        raise RuntimeError(
+            f"Registry exhausted: index {max(start_index, CAPACITY)} "
+            f"exceeds maximum {CAPACITY - 1}."
+        )
     offsets = accumulate(
         (counts.get(pid) or 0 for pid in range(len(bounds))), initial=start_index
     )

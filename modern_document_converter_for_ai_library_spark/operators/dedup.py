@@ -182,8 +182,9 @@ def lsh_candidate_pairs(
     # re-executed the slim subtree up to 2*n_bands times and (with the cap)
     # added two count-filter joins per band — measured 65.4 s vs 19.1 s
     # for the wide tier's bucket-local plan on the 200k candidate-dilution
-    # corpus (scripts/dedup_tier_ab.py); this rewrite closes that gap with
-    # identical output (pinned by the tier-equality and parity tests).
+    # corpus (BENCH/BASELINE.md, "Narrow vs production-width MinHash tier
+    # A/B"); this rewrite closes that gap with identical output (pinned by
+    # the tier-equality and parity tests).
     long = bands.select(
         F.col(id_col),
         F.posexplode(F.array(*[F.col(c) for c in band_cols])).alias(
@@ -681,7 +682,8 @@ def select_representatives(
 
     The input is consumed three times (cluster-id set, argmax scan,
     final width-preserving join). Measured A/B at 500k docs over a
-    parquet corpus (scripts/rep_select_probe.py, BENCH/BASELINE.md):
+    parquet corpus (BENCH/BASELINE.md, "Operator suite", the
+    representative-selection paragraph):
     the three-consumer plan lands WITHIN RUN NOISE of the plain
     near_dedup job — the extra consumers are column-pruned scans over a
     checkpoint-truncated lineage — while force-persisting the slim
@@ -1475,10 +1477,10 @@ def incremental_candidate_pairs(
 ) -> tuple[DataFrame, DataFrame]:
     """Batch-vs-corpus candidate pairs from two wide band frames (each
     ``(id, band_0..band_{n_bands-1}, _is_new)``; ``nb`` flagged True,
-    ``bb`` False). Returns ``(pairs, nb_long)`` — the single candidate
-    kernel shared by ``near_dedup_incremental`` and the ingest A/B
-    (scripts/incr_dedup_ab.py), so the benchmark can never drift from
-    the operator it measures. ``nb_long`` (the persisted batch banding
+    ``bb`` False). Returns ``(pairs, nb_long)`` — the candidate kernel of
+    ``near_dedup_incremental``, whose ingest cost against a full
+    recompute is recorded in BENCH/BASELINE.md ("Incremental ingest
+    dedup vs full recompute A/B"). ``nb_long`` (the persisted batch banding
     subtree — it feeds both the prune key set and the union) is returned
     for the CALLER to release only after the pairs' consumers have
     materialized (releasing before the first action would silently

@@ -177,6 +177,15 @@ def _budget_expr(budgets: dict, key_col: str, default_budget: int) -> F.Column:
     )
 
 
+def _n_tokens(text_col: str) -> F.Column:
+    """A document's token count (quality.py:_tokens) as a bigint, 0 for
+    null text: under ANSI ``size(NULL)`` is NULL, which would leave the
+    row's running sum, shard id and budget verdict NULL."""
+    from .quality import _tokens
+
+    return F.coalesce(F.size(_tokens(text_col)), F.lit(0)).cast("bigint")
+
+
 def _cumulative_tokens(
     df: DataFrame,
     key_col: str,
@@ -190,13 +199,10 @@ def _cumulative_tokens(
     shared by :func:`budget_sample` and :func:`epoch_budget_sample`."""
     from pyspark.sql import Window
 
-    from .quality import _tokens
-
-    toks = _tokens(text_col)
     base = df.select(
         F.col(id_col),
         F.col(key_col),
-        F.size(toks).cast("bigint").alias("n_tokens"),
+        _n_tokens(text_col).alias("n_tokens"),
         hash_micros_col(id_col, salt).alias("hash_micros"),
     ).withColumn(
         "_bucket", (F.col("hash_micros") * n_buckets / MICRO).cast("bigint")
@@ -692,14 +698,9 @@ def shuffled_shard_assign(
     like :func:`corpus_shuffle` (same ``n_rows`` caller-knows-the-count
     shortcut).
     """
-    from .quality import _tokens
-
     if shard_tokens <= 0:
         raise ValueError(f"shard_tokens must be positive, got {shard_tokens}")
-    with_tokens = df.withColumn(
-        "n_tokens",
-        F.coalesce(F.size(_tokens(text_col)), F.lit(0)).cast("bigint"),
-    )
+    with_tokens = df.withColumn("n_tokens", _n_tokens(text_col))
     return _bucketed_rank(
         with_tokens, id_col, salt, n_buckets, n_rows, tokens_col="n_tokens"
     ).withColumn(
@@ -779,7 +780,6 @@ def write_training_layout(
     caller persists it.
     """
     from ..sources.catalog import write_documents
-    from .quality import _tokens
 
     # the operators are called through the module globals, which the
     # perfbench tracer patches to attribute their time
@@ -824,9 +824,7 @@ def write_training_layout(
     if not sharded:
         row = df.agg(
             F.count("*").alias("n_docs"),
-            F.coalesce(
-                F.sum(F.size(_tokens(text_col)).cast("bigint")), F.lit(0)
-            ).alias("tokens_out"),
+            F.coalesce(F.sum(_n_tokens(text_col)), F.lit(0)).alias("tokens_out"),
         ).collect()[0]
         return row.asDict()
     target = manifest or (output + "_manifest")

@@ -1,4 +1,4 @@
-from .session import get_spark, stop_spark
+from .session import get_spark, job_session
 from .salting import with_size_bucket, balance_by_size
 
-__all__ = ["get_spark", "stop_spark", "with_size_bucket", "balance_by_size"]
+__all__ = ["get_spark", "job_session", "with_size_bucket", "balance_by_size"]

@@ -6,7 +6,9 @@ Only a new session is configured, one key at a time in this order: an
 explicit argument, then the launcher's conf (``spark-submit --master`` /
 ``--conf``, ``spark-defaults.conf``), then the defaults below. No master is
 set unless one is passed, so spark-submit's master stands and a bare
-``python`` run gets Spark's own ``local[*]``.
+``python`` run gets Spark's own ``local[*]``. Every job in ``jobs/`` runs
+inside ``job_session``, which stops the session it creates and leaves
+running a session it was given.
 
 The defaults are the execution profile SURVEY.md §4 calls for: AQE with
 partition coalescing and skew-join handling, Arrow-batched Python exchange
@@ -18,7 +20,8 @@ settings apply unchanged on a real multi-executor cluster.
 from __future__ import annotations
 
 import os
-from typing import Mapping
+from contextlib import contextmanager
+from typing import Iterator, Mapping
 
 from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
@@ -111,7 +114,23 @@ def get_spark(
     return SparkSession.builder.config(map=conf).getOrCreate()
 
 
-def stop_spark() -> None:
+@contextmanager
+def job_session(app_name: str, master: str | None = None) -> Iterator[SparkSession]:
+    """The session a job runs on, owned by whoever created it.
+
+    An active session belongs to the caller (a test, a notebook, any code
+    that calls a job's ``main`` in-process): it is yielded as it is and
+    never stopped.
+    Without one (a spark-submit or ``python`` run), a session is created
+    through ``get_spark`` and stopped on exit, also when the body raises;
+    the exception still propagates.
+    """
     active = SparkSession.getActiveSession()
     if active is not None:
-        active.stop()
+        yield active
+        return
+    spark = get_spark(app_name=app_name, master=master)
+    try:
+        yield spark
+    finally:
+        spark.stop()

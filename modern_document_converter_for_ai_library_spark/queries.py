@@ -27,51 +27,21 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .reference_semantics.codes import ALPHABET
+from .reference_semantics.rules import CASELAW_PATTERNS, STATUTE_PATTERNS
 
 # ---------------------------------------------------------------------------
-# shared pattern/weight tables (subset of rules.py that is provably
-# Java-regex/RE2 equivalent; the full Python-re semantics live in the kernels)
+# classification pattern/weight tables, derived from rules.py: every pattern
+# there is valid in both Java regex and RE2, and its case-insensitive flag
+# becomes an inline (?i) (oracle parity runs each one in both engines)
 # ---------------------------------------------------------------------------
 
-CASELAW_SCORED = [
-    (r"(?i)\b\w+\s+v\.\s+\w+|\b\w+\s+versus\s+\w+", 40),
-    (r"(?i)\d+\s+[A-Z][a-z]+\.?\s+(?:App\.\s+)?(?:2d|3d)?\s*\d+", 35),
-    (
-        r"(?i)Court of Appeals|Supreme Court|District Court|Circuit Court"
-        r"|Superior Court|Appellate Court",
-        20,
-    ),
-    (r"(?i)\b(?:LEXIS|Westlaw|WL\s+\d+|West\s+Law)\b", 15),
-    (r"(?i)\b(?:Plaintiff|Defendant|Appellant|Appellee|Petitioner|Respondent)\b", 10),
-    (r"(?i)(?:Decided|Filed|Argued).*\d{4}", 10),
-    (r"\b(?:Opinion|Judgment|ORDER|MOTION|Memorandum|Per Curiam)\b", 5),  # case-sensitive
-    (r"(?i)\b(?:affirm|reverse|remand|vacate|dismiss)(?:ed|ing)?\b", 5),
-    (r"(?i)Case\s+No\.|Docket\s+No\.|Civil\s+Action\s+No\.", 5),
-    (r"(?i)\bJ\.,\s+(?:concurring|dissenting|delivering the opinion)", 5),
-    (r"(?i)This case comes before (?:the court|us)", 3),
-    (r"(?i)\b(?:Section|§)\s+\d+|\bU\.S\.C\.|United States Code", -10),
-]
 
-STATUTE_SCORED = [
-    (r"(?i)Official Code of", 100),
-    (r"§", 35),
-    (r"(?i)O\.\s*C\.\s*G\.\s*A\.", 30),
-    (r"(?i)U\.\s*S\.\s*C\.", 30),
-    (r"(?i)C\.\s*F\.\s*R\.", 30),
-    (r"(?i)TITLE\s+\d+", 50),
-    (r"(?i)Chapter\s+\d+", 15),
-    (r"(?i)\bCode of\b", 10),
-    (r"(?i)(?:Section|Sec\.)\s+\d+", 10),
-    (r"(?i)§\s*\d+", 10),
-    (r"(?i)\b(?:enacted|codified|amended)\b", 5),
-    (r"(?i)Public Law|Pub\.\s*L\.", 5),
-    (r"(?i)\b(?:subsection|subdivision|paragraph)\s*\([a-z0-9]+\)", 5),
-    (r"(?i)\b\w+\s+v\.\s+\w+|\b\w+\s+versus\s+\w+", -5),
-    (r"(?i)Court of Appeals|Supreme Court|District Court|Circuit Court", -5),
-    (r"(?i)\b(?:Plaintiff|Defendant|Appellant|Appellee|Petitioner)\b", -5),
-    (r"(?i)(?:Decided|Filed|Argued).*\d{4}", -5),
-    (r"(?i)\b(?:Opinion|affirm|reverse|remand)\b", -5),
-]
+def _scored(patterns: list[tuple[str, float, bool]]) -> list[tuple[str, int]]:
+    return [(("" if cs else "(?i)") + pat, int(w)) for pat, w, cs in patterns]
+
+
+CASELAW_SCORED = _scored(CASELAW_PATTERNS)
+STATUTE_SCORED = _scored(STATUTE_PATTERNS)
 
 STOPWORDS = ["the", "a", "of", "and", "in", "to", "is", "was", "for", "on"]
 
@@ -1155,7 +1125,7 @@ def spark_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TOKEN_BUDGET_SQL = r"""
 WITH t AS (
   SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
-         CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tokens,
+         CAST(COALESCE(len(list_filter(string_split(text, ' '), x -> x <> '')), 0) AS BIGINT) AS n_tokens,
          CAST(CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
               % 1000000 AS BIGINT) AS hash_micros
   FROM documents
@@ -1200,7 +1170,7 @@ def spark_epoch_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EPOCH_MIX_SQL = r"""
 WITH t AS (
   SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
-         CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tokens,
+         CAST(COALESCE(len(list_filter(string_split(text, ' '), x -> x <> '')), 0) AS BIGINT) AS n_tokens,
          CAST(CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
               % 1000000 AS BIGINT) AS hash_micros
   FROM documents
@@ -1367,7 +1337,7 @@ def spark_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SHARD_BASE_SQL = r"""
 WITH t AS (
   SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
-         CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tokens,
+         CAST(COALESCE(len(list_filter(string_split(text, ' '), x -> x <> '')), 0) AS BIGINT) AS n_tokens,
          CAST(CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
               % 1000000 AS BIGINT) AS hash_micros
   FROM documents
@@ -1908,7 +1878,7 @@ WHERE {hamming} <= 0
 # BRUTE-FORCE all-pairs comparison — a genuinely different plan, so
 # agreement checks both the sketch math and the banded join's pigeonhole
 # completeness. Bucket-cardinality behavior at 510k sketches is measured
-# in BENCH/BASELINE.md (scripts/simhash_bench.py).
+# in BENCH/BASELINE.md ("Production-width SimHash").
 # ---------------------------------------------------------------------------
 
 def spark_simhash64_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,6 +30,7 @@ from modern_document_converter_for_ai_library_spark.reference_semantics import (
     index_to_code,
 )
 from modern_document_converter_for_ai_library_spark.reference_semantics.codes import (
+    CAPACITY,
     DUP_ALLOC_ERR,
     DUP_CLAIM_ERR,
     discover_code,
@@ -68,6 +69,20 @@ def test_assign_codes_start_index_continuation(spark):
     }
     assert out["a"] == index_to_code(249_025)
     assert out["c"] == index_to_code(249_027)
+
+
+def test_assign_codes_raises_at_registry_capacity(spark):
+    """The last index encodes to ZZZZZ; the next one would wrap to AAAAA
+    (index 0), so like the reference's index_to_code it raises instead."""
+    df = spark.createDataFrame([("a",), ("b",)], ["doc_id"])
+    one = assign_codes(df.filter("doc_id = 'a'"), start_index=CAPACITY - 1).collect()
+    assert [(r["code_index"], r["unique_code"]) for r in one] == [
+        (CAPACITY - 1, "ZZZZZ")
+    ]
+    with pytest.raises(RuntimeError, match="Registry exhausted"):
+        assign_codes(df, start_index=CAPACITY - 1)
+    with pytest.raises(RuntimeError, match="Registry exhausted"):
+        index_to_code(CAPACITY)
 
 
 def test_assign_codes_recompute_stability(spark):

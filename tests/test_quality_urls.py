@@ -600,6 +600,33 @@ def test_shard_assign_oversize_doc_skips_ids(spark):
         shard_assign(df, 0)
 
 
+def test_null_text_counts_zero_tokens_in_sampling(spark):
+    """Under ANSI, size(NULL) is NULL: a null-text document still counts 0
+    tokens, gets a shard id and a boolean budget verdict, and takes its
+    copies in every epoch."""
+    from modern_document_converter_for_ai_library_spark.operators.sampling import (
+        budget_sample,
+        epoch_budget_sample,
+        shard_assign,
+    )
+    import collections
+
+    rows = [(1, "a", "w w"), (2, "a", None), (3, "a", "x x x")]
+    df = spark.createDataFrame(rows, "doc_id bigint, source string, text string")
+    shards = {r["doc_id"]: r for r in shard_assign(df, 2).collect()}
+    assert shards[2]["n_tokens"] == 0
+    assert all(
+        r["cum_tokens"] is not None and r["shard_id"] is not None
+        for r in shards.values()
+    )
+    mixed = {r["doc_id"]: r for r in budget_sample(df, {"a": 100}).collect()}
+    assert mixed[2]["n_tokens"] == 0
+    assert mixed[2]["kept"] is True
+    # token mass 5, budget 10: exactly two full epochs of every document
+    epochs = epoch_budget_sample(df, {"a": 10}, default_budget=0).collect()
+    assert collections.Counter(r["doc_id"] for r in epochs) == {1: 2, 2: 2, 3: 2}
+
+
 def test_epoch_budget_exact_multiple_no_zero_token_extra_copy(spark):
     # budget == exact multiple of the source's token mass: remainder is
     # 0, so NO partial epoch may be emitted — a leading zero-token doc
