@@ -3,12 +3,20 @@
 queries plus automated red-flag checks (row-Python nodes, cartesian joins,
 un-pruned scans). The full audit runs in tests/test_plan_audit.py; this
 artifact records the evidence for review.
+
+Each query keeps its node tree and one digest line: a short sha256 of the
+plan's per-node detail section (expressions, arguments, kernel names) with
+the tokens that vary from run to run masked, so an edit that changes only
+expressions still changes the file, and two regenerations of the same code
+are byte-identical.
 """
 
 from __future__ import annotations
 
+import hashlib
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -65,6 +73,24 @@ SHOWCASE = [
 ]
 
 
+# run-varying tokens: expression ids (``#123``, ``#45L``), the Python-side
+# lambda-variable counter (``lambda x_7``) and exchange plan ids
+_VOLATILE = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"(lambda [A-Za-z]\w*?)_\d+\b"), r"\1_N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+)
+
+
+def detail_digest(plan: str) -> str:
+    """Short sha256 of a formatted plan's detail section, volatile tokens
+    masked."""
+    detail = plan.split("\n\n", 1)[1] if "\n\n" in plan else ""
+    for pattern, repl in _VOLATILE:
+        detail = pattern.sub(repl, detail)
+    return hashlib.sha256(detail.encode("utf-8")).hexdigest()[:16]
+
+
 def main() -> None:
     from modern_document_converter_for_ai_library_spark.plans import get_spark
     from modern_document_converter_for_ai_library_spark.queries import SPARK_QUERIES
@@ -79,6 +105,11 @@ def main() -> None:
         "no accidental `CartesianProduct`/`BroadcastNestedLoopJoin`, and",
         "column-pruned parquet scans.",
         "",
+        "Each `detail sha256` is a digest of the plan's per-node detail",
+        "section (expressions and arguments) with expression ids, lambda",
+        "variable suffixes and plan ids masked: it moves when an expression",
+        "does, even if the node tree stays the same.",
+        "",
     ]
     for name, why in SHOWCASE:
         df = SPARK_QUERIES[name](spark, SF_DIR)
@@ -88,7 +119,18 @@ def main() -> None:
         plan = buf.getvalue()
         # keep the node tree, trim the verbose per-node detail section
         tree = plan.split("\n\n")[0]
-        out += [f"## {name}", "", f"*{why}*", "", "```", tree, "```", ""]
+        out += [
+            f"## {name}",
+            "",
+            f"*{why}*",
+            "",
+            "```",
+            tree,
+            "```",
+            "",
+            f"detail sha256: `{detail_digest(plan)}`",
+            "",
+        ]
     spark.stop()
 
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
