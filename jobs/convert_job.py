@@ -68,13 +68,29 @@ def main(argv: list[str] | None = None) -> int:
                 balance_partitions=args.balance_partitions,
             )
         else:
+            from pyspark.sql import Observation
+            from pyspark.sql import functions as F
+
             from modern_document_converter_for_ai_library_spark.operators.rename import (
                 rename_documents,
             )
+            from modern_document_converter_for_ai_library_spark.plans.caching import (
+                CacheScope,
+            )
 
-            out = rename_documents(inp, start_index=args.start_index)
-            write_documents(out, args.output, mode="overwrite")
-            result = {"mode": "rename", "n_docs": out.count()}
+            # the row count rides on the write (no second execution), and
+            # the persisted kernel output is released when the write is done
+            written = Observation("rename")
+            with CacheScope() as scope:
+                out = rename_documents(
+                    inp, start_index=args.start_index, cache_scope=scope
+                )
+                write_documents(
+                    out.observe(written, F.count(F.lit(1)).alias("n_docs")),
+                    args.output,
+                    mode="overwrite",
+                )
+            result = {"mode": "rename", "n_docs": int(written.get["n_docs"])}
         print(json.dumps(result))
         return 0
 

@@ -135,8 +135,10 @@ def main(argv: list[str] | None = None) -> int:
         line_dedup,
         near_dedup,
     )
+    from modern_document_converter_for_ai_library_spark.functions.hashing import (
+        tokens_col,
+    )
     from modern_document_converter_for_ai_library_spark.operators.quality import (
-        _tokens,
         blocklist_filter,
         classifier_score,
         perceptron_train,
@@ -249,7 +251,7 @@ def main(argv: list[str] | None = None) -> int:
         if args.line_dedup:
             if args.line_width > 0:
                 w = F.lit(args.line_width)
-                toks = _tokens(text_col)
+                toks = tokens_col(text_col)
                 lines = F.when(
                     F.size("_ld_toks") > 0,
                     F.transform(

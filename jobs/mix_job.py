@@ -120,15 +120,15 @@ def main(argv: list[str] | None = None) -> int:
             from modern_document_converter_for_ai_library_spark.operators.sampling import (
                 temperature_sample,
             )
-            from modern_document_converter_for_ai_library_spark.operators.quality import (
-                _tokens,
+            from modern_document_converter_for_ai_library_spark.functions.hashing import (
+                tokens_col,
             )
 
             base = docs
             mass_col = None
             if args.mass == "tokens":
                 base = docs.withColumn(
-                    "_n_tokens", F.size(_tokens(args.text_col))
+                    "_n_tokens", F.size(tokens_col(args.text_col))
                 )
                 mass_col = "_n_tokens"
             marked = temperature_sample(

@@ -16,12 +16,10 @@ and resumes idempotently under the manifest protocol.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ..plans.rows import map_rows
 from ..reference_semantics.articles import (
     article_rename_doc,
     format_author_for_filename,
@@ -46,30 +44,22 @@ ARTICLE_KERNEL_SCHEMA = T.StructType(
     ]
 )
 
-_COLS = [f.name for f in ARTICLE_KERNEL_SCHEMA.fields]
+_COLS = ARTICLE_KERNEL_SCHEMA.fieldNames()
 
 
-def _article_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text, source_file in zip(
-            pdf["doc_id"], pdf["text"], pdf["source_file"]
-        ):
-            res = article_rename_doc(
-                str(text) if text is not None else "", str(source_file)
-            )
-            res["doc_id"] = str(doc_id)
-            res["author_slug"] = (
-                format_author_for_filename(res["authors"]) if res["authors"] else None
-            )
-            rows.append({k: res.get(k) for k in _COLS})
-        yield pd.DataFrame(rows, columns=_COLS)
+def _article_row(doc_id, text, source_file):
+    res = article_rename_doc(str(text) if text is not None else "", str(source_file))
+    res["doc_id"] = str(doc_id)
+    res["author_slug"] = (
+        format_author_for_filename(res["authors"]) if res["authors"] else None
+    )
+    return ({k: res.get(k) for k in _COLS},)
 
 
 def extract_article_metadata(df: DataFrame) -> DataFrame:
     """Run the articles rename flow; expects ``doc_id``, ``text`` and
     ``source_file`` columns, returns one row per document with the full
     bibliographic record (ARTICLE_KERNEL_SCHEMA)."""
-    return df.select("doc_id", "text", "source_file").mapInPandas(
-        _article_batches, schema=ARTICLE_KERNEL_SCHEMA
+    return map_rows(
+        df.select("doc_id", "text", "source_file"), _article_row, ARTICLE_KERNEL_SCHEMA
     )

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import tokens_col
+
 MICRO = 1_000_000
 
 
@@ -49,7 +51,7 @@ def corpus_audit(
     text = F.col(text_col)
     is_empty = text.isNull() | (F.trim(text) == "")
     n_tokens = F.when(is_empty, F.lit(0)).otherwise(
-        F.size(F.filter(F.split(text, " "), lambda x: x != ""))
+        F.size(tokens_col(text_col))
     ).cast("bigint")
     chars = F.coalesce(F.length(text), F.lit(0)).cast("bigint")
     pre = df.select(

@@ -44,12 +44,12 @@ from __future__ import annotations
 
 import html as _htmllib
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..plans.rows import map_rows
 
 _HEAD_RE = re.compile(r"(?is)<head\b.*?</head\s*>")
 _SCRIPT_RE = re.compile(r"(?is)<(script|style|noscript|title)\b.*?</\1\s*>")
@@ -111,15 +111,10 @@ def html_to_blocks(
 ) -> DataFrame:
     """(doc_id, block_no, text, n_words, n_link_words) — one Arrow stage."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in BLOCKS_SCHEMA.fields]
-        for pdf in batches:
-            rows: list[dict] = []
-            for doc_id, doc_html in zip(pdf[id_col], pdf[html_col]):
-                rows.extend(html_blocks_py(str(doc_id), doc_html))
-            yield pd.DataFrame(rows, columns=cols)
+    def block_rows(doc_id, doc_html):
+        return html_blocks_py(str(doc_id), doc_html)
 
-    return df.select(id_col, html_col).mapInPandas(_batches, schema=BLOCKS_SCHEMA)
+    return map_rows(df.select(id_col, html_col), block_rows, BLOCKS_SCHEMA)
 
 
 def content_flag_col(
@@ -259,27 +254,20 @@ def strip_boilerplate_html(
     """
     if mode == "kernel":
 
-        def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cols = [f.name for f in STRIP_SCHEMA.fields]
-            for pdf in batches:
-                rows = []
-                for doc_id, doc_html in zip(pdf[id_col], pdf[html_col]):
-                    blocks = html_blocks_py(str(doc_id), doc_html)
-                    flags = classify_blocks_py(blocks, classifier=classifier)
-                    kept = [b["text"] for b, f_ in zip(blocks, flags) if f_]
-                    rows.append(
-                        {
-                            "doc_id": str(doc_id),
-                            "content_text": "\n\n".join(kept),
-                            "n_blocks": len(blocks),
-                            "n_content_blocks": len(kept),
-                        }
-                    )
-                yield pd.DataFrame(rows, columns=cols)
+        def strip_row(doc_id, doc_html):
+            blocks = html_blocks_py(str(doc_id), doc_html)
+            flags = classify_blocks_py(blocks, classifier=classifier)
+            kept = [b["text"] for b, f_ in zip(blocks, flags) if f_]
+            return (
+                {
+                    "doc_id": str(doc_id),
+                    "content_text": "\n\n".join(kept),
+                    "n_blocks": len(blocks),
+                    "n_content_blocks": len(kept),
+                },
+            )
 
-        return df.select(id_col, html_col).mapInPandas(
-            _batches, schema=STRIP_SCHEMA
-        )
+        return map_rows(df.select(id_col, html_col), strip_row, STRIP_SCHEMA)
 
     classified = classify_blocks(
         html_to_blocks(df, html_col, id_col), id_col, classifier=classifier

@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .quality import _tokens
+from ..functions.hashing import tokens_col
 
 
 def _chars(col):
@@ -51,7 +51,7 @@ def word_frequencies(
     shuffle in BPE training; everything after runs on this bounded
     table."""
     wf = (
-        df.select(F.explode(_tokens(text_col)).alias("word"))
+        df.select(F.explode(tokens_col(text_col)).alias("word"))
         .groupBy("word")
         .agg(F.count("*").cast("bigint").alias("freq"))
     )

@@ -23,12 +23,12 @@ columns so downstream ops stay columnar.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ..plans.rows import map_rows
+from ..reference_semantics.case_name_legacy import legacy_case_name_for_doc
+from ..reference_semantics.caselaw_dates import legacy_rename_for_doc
 from ..reference_semantics.caselaw_metadata import extract_case_metadata
 
 _S = T.StringType()
@@ -69,7 +69,6 @@ CASELAW_META_SCHEMA = T.StructType(
     ]
 )
 
-_COLS = [f.name for f in CASELAW_META_SCHEMA.fields]
 _IN_COLS = ["doc_id", "text", "case_name", "court", "year", "reporter", "source_file"]
 
 
@@ -112,24 +111,16 @@ def _flatten(doc_id: str, md: dict) -> dict:
     }
 
 
-def _meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text, case_name, court, year, reporter, source_file in zip(
-            *(pdf[c] for c in _IN_COLS)
-        ):
-            renamer_result = {
-                "case_name": "" if case_name is None else str(case_name),
-                "court": "" if court is None else str(court),
-                "year": "" if year is None else str(year),
-                "reporter": "" if reporter is None else str(reporter),
-                "original_filename": "" if source_file is None else str(source_file),
-            }
-            md = extract_case_metadata(
-                renamer_result, str(text) if text is not None else ""
-            )
-            rows.append(_flatten(str(doc_id), md))
-        yield pd.DataFrame(rows, columns=_COLS)
+def _meta_row(doc_id, text, case_name, court, year, reporter, source_file):
+    renamer_result = {
+        "case_name": "" if case_name is None else str(case_name),
+        "court": "" if court is None else str(court),
+        "year": "" if year is None else str(year),
+        "reporter": "" if reporter is None else str(reporter),
+        "original_filename": "" if source_file is None else str(source_file),
+    }
+    md = extract_case_metadata(renamer_result, str(text) if text is not None else "")
+    return (_flatten(str(doc_id), md),)
 
 
 CASE_NAME_SCHEMA = T.StructType(
@@ -141,21 +132,13 @@ CASE_NAME_SCHEMA = T.StructType(
 )
 
 
-def _case_name_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..reference_semantics.case_name_legacy import legacy_case_name_for_doc
-
-    for pdf in batches:
-        rows = []
-        for doc_id, text, source_file in zip(
-            pdf["doc_id"], pdf["text"], pdf["source_file"]
-        ):
-            res = legacy_case_name_for_doc(
-                str(text) if text is not None else "",
-                str(source_file) if source_file is not None else "",
-            )
-            res["doc_id"] = str(doc_id)
-            rows.append(res)
-        yield pd.DataFrame(rows, columns=[f.name for f in CASE_NAME_SCHEMA.fields])
+def _case_name_row(doc_id, text, source_file):
+    res = legacy_case_name_for_doc(
+        str(text) if text is not None else "",
+        str(source_file) if source_file is not None else "",
+    )
+    res["doc_id"] = str(doc_id)
+    return (res,)
 
 
 def legacy_case_names(df: DataFrame) -> DataFrame:
@@ -163,8 +146,8 @@ def legacy_case_names(df: DataFrame) -> DataFrame:
     filename fallback, abbreviation expansion, smart party formatting);
     expects ``doc_id``, ``text``, ``source_file``. Map-only Arrow stage,
     same scale shape as :func:`extract_deep_metadata`."""
-    return df.select("doc_id", "text", "source_file").mapInPandas(
-        _case_name_batches, schema=CASE_NAME_SCHEMA
+    return map_rows(
+        df.select("doc_id", "text", "source_file"), _case_name_row, CASE_NAME_SCHEMA
     )
 
 
@@ -186,30 +169,22 @@ LEGACY_RENAME_SCHEMA = T.StructType(
 )
 
 _LR_IN = ["doc_id", "text", "file_name", "court", "court_source", "reporter", "reporter_source"]
+_LR_COLS = LEGACY_RENAME_SCHEMA.fieldNames()
 
 
-def _legacy_rename_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..reference_semantics.caselaw_dates import legacy_rename_for_doc
-
-    cols = [f.name for f in LEGACY_RENAME_SCHEMA.fields]
-    for pdf in batches:
-        rows = []
-        for doc_id, text, file_name, court, court_source, reporter, reporter_source in zip(
-            *(pdf[c] for c in _LR_IN)
-        ):
-            res = legacy_rename_for_doc(
-                str(text) if text is not None else "",
-                str(file_name) if file_name is not None else "",
-                None if court is None or court == "" else str(court),
-                None if court_source is None or court_source == "" else str(court_source),
-                None if reporter is None or reporter == "" else str(reporter),
-                None
-                if reporter_source is None or reporter_source == ""
-                else str(reporter_source),
-            )
-            res["doc_id"] = str(doc_id)
-            rows.append({k: res.get(k) for k in cols})
-        yield pd.DataFrame(rows, columns=cols)
+def _legacy_rename_row(
+    doc_id, text, file_name, court, court_source, reporter, reporter_source
+):
+    res = legacy_rename_for_doc(
+        str(text) if text is not None else "",
+        str(file_name) if file_name is not None else "",
+        None if court is None or court == "" else str(court),
+        None if court_source is None or court_source == "" else str(court_source),
+        None if reporter is None or reporter == "" else str(reporter),
+        None if reporter_source is None or reporter_source == "" else str(reporter_source),
+    )
+    res["doc_id"] = str(doc_id)
+    return ({k: res.get(k) for k in _LR_COLS},)
 
 
 def legacy_rename_records(df: DataFrame) -> DataFrame:
@@ -218,9 +193,7 @@ def legacy_rename_records(df: DataFrame) -> DataFrame:
     confidence, the legacy c.-template with sanitize/truncate); expects
     ``doc_id``, ``text``, ``file_name`` plus injected court/reporter
     resolution columns. Map-only Arrow stage."""
-    return df.select(*_LR_IN).mapInPandas(
-        _legacy_rename_batches, schema=LEGACY_RENAME_SCHEMA
-    )
+    return map_rows(df.select(*_LR_IN), _legacy_rename_row, LEGACY_RENAME_SCHEMA)
 
 
 def extract_deep_metadata(df: DataFrame) -> DataFrame:
@@ -229,4 +202,4 @@ def extract_deep_metadata(df: DataFrame) -> DataFrame:
     ``case_name``, ``court``, ``year``, ``reporter``, ``source_file``;
     returns one row per document with the full enrichment record
     (CASELAW_META_SCHEMA)."""
-    return df.select(*_IN_COLS).mapInPandas(_meta_batches, schema=CASELAW_META_SCHEMA)
+    return map_rows(df.select(*_IN_COLS), _meta_row, CASELAW_META_SCHEMA)

@@ -11,34 +11,26 @@ Exactly ONE Python stage. The kernel body is
 ``reference_semantics.convert.convert_spans_doc`` — the same function that
 generates the golden fixtures, so the span-equality gate holds by
 construction. Data crosses the JVM/Python boundary as Arrow record batches
-(mapInPandas); there is no row-at-a-time Python UDF anywhere in the plan
+(``plans.rows.map_rows``); there is no row-at-a-time Python UDF anywhere in the plan
 (north-rule vectorization constraint, BASELINE.md).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ..plans.rows import map_rows, struct_dicts
 from ..reference_semantics.convert import convert_spans_doc
-
-_SPAN_STRUCT = T.StructType(
-    [
-        T.StructField("kind", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("offset", T.IntegerType()),
-    ]
-)
+from ..sources.synth import SPAN_STRUCT, SPANS_SCHEMA
 
 CONVERT_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType()),
         T.StructField("source_file", T.StringType()),
-        T.StructField("spans", T.ArrayType(_SPAN_STRUCT)),
+        T.StructField("spans", SPANS_SCHEMA),
         T.StructField("document_type", T.StringType()),
         T.StructField("confidence", T.DoubleType()),
         T.StructField("lines_removed", T.IntegerType()),
@@ -50,41 +42,22 @@ CONVERT_OUTPUT_SCHEMA = T.StructType(
 )
 
 
-def _as_span_dicts(spans) -> list[dict]:
-    """Arrow hands list<struct> to pandas as an ndarray/list of dicts."""
-    if spans is None:
-        return []
-    return [
-        s if isinstance(s, dict) else dict(zip(("kind", "text", "media_ref", "offset"), s))
-        for s in spans
-    ]
+def _convert_row(has_source: bool, has_hash: bool):
+    """The convert row function for an input with or without the optional
+    ``source_file`` and ``input_hash`` columns (in that order after
+    ``doc_id``, ``spans``); ``input_hash`` passes through unchanged."""
 
-
-def _convert_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        has_source = "source_file" in pdf.columns
-        has_hash = "input_hash" in pdf.columns
-        out_rows = []
-        for i, (doc_id, spans, source_file) in enumerate(
-            zip(
-                pdf["doc_id"],
-                pdf["spans"],
-                pdf["source_file"] if has_source else pdf["doc_id"],
-            )
-        ):
-            res = convert_spans_doc(
-                str(doc_id),
-                _as_span_dicts(spans),
-                source_file=str(source_file) if has_source else None,
-            )
-            res["source_file"] = str(source_file) if has_source else f"{doc_id}.pdf"
-            if has_hash:
-                res["input_hash"] = pdf["input_hash"].iloc[i]
-            out_rows.append(res)
-        cols = [f.name for f in CONVERT_OUTPUT_SCHEMA.fields]
+    def convert_row(doc_id, spans, *optional):
+        source_file = str(optional[0]) if has_source else None
+        res = convert_spans_doc(
+            str(doc_id), struct_dicts(spans, SPAN_STRUCT), source_file=source_file
+        )
+        res["source_file"] = source_file if has_source else f"{doc_id}.pdf"
         if has_hash:
-            cols = cols + ["input_hash"]
-        yield pd.DataFrame(out_rows, columns=cols)
+            res["input_hash"] = optional[-1]
+        return (res,)
+
+    return convert_row
 
 
 def convert_documents(
@@ -98,6 +71,8 @@ def convert_documents(
     size-aware placement from plans/salting before the kernel stage (worth it
     when the corpus has a heavy size tail; costs one shuffle).
     """
+    has_source = "source_file" in df.columns
+    has_hash = "input_hash" in df.columns
     cols = ["doc_id", "spans"] + [
         c for c in ("source_file", "input_hash") if c in df.columns
     ]
@@ -107,8 +82,8 @@ def convert_documents(
 
         pruned = balance_by_size(pruned, balance_partitions)
     schema = CONVERT_OUTPUT_SCHEMA
-    if "input_hash" in df.columns:
+    if has_hash:
         schema = T.StructType(
             schema.fields + [T.StructField("input_hash", T.StringType())]
         )
-    return pruned.mapInPandas(_convert_batches, schema=schema)
+    return map_rows(pruned, _convert_row(has_source, has_hash), schema)

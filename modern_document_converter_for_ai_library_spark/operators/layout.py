@@ -11,7 +11,7 @@ calls. Distributed, the input is a table of per-page word boxes
           words array<struct<text string, x0 float, y0 float,
                              x1 float, y1 float>>)
 
-and the recovery runs as ONE Arrow-batched kernel (mapInPandas) whose body
+and the recovery runs as ONE Arrow-batched kernel (``plans.rows.map_rows``) whose body
 is pure NumPy:
 
   1. **column detection** — sort distinct word x-centers; a gap wider than
@@ -32,12 +32,13 @@ the convert kernel.
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..plans.rows import map_rows, struct_dicts
 
 WORD_STRUCT = T.StructType(
     [
@@ -131,35 +132,18 @@ def recover_reading_order(
     return n_columns, out_lines
 
 
-def _layout_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, page, words in zip(pdf["doc_id"], pdf["page"], pdf["words"]):
-            wlist = [
-                w
-                if isinstance(w, dict)
-                else dict(zip(("text", "x0", "y0", "x1", "y1"), w))
-                for w in (words if words is not None else [])
-            ]
-            n_cols, lines = recover_reading_order(wlist)
-            rows.append(
-                {
-                    "doc_id": str(doc_id),
-                    "page": int(page),
-                    "n_columns": n_cols,
-                    "lines": lines,
-                }
-            )
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in LAYOUT_OUTPUT_SCHEMA.fields]
-        )
+def _layout_row(doc_id, page, words):
+    n_cols, lines = recover_reading_order(struct_dicts(words, WORD_STRUCT))
+    return (
+        {"doc_id": str(doc_id), "page": int(page), "n_columns": n_cols, "lines": lines},
+    )
 
 
 def parse_layout(df: DataFrame) -> DataFrame:
     """Distributed reading-order recovery over a PAGES_SCHEMA table —
     map-only, one Arrow stage, same plan shape as the convert kernel."""
     pruned = df.select("doc_id", "page", "words")
-    return pruned.mapInPandas(_layout_batches, schema=LAYOUT_OUTPUT_SCHEMA)
+    return map_rows(pruned, _layout_row, LAYOUT_OUTPUT_SCHEMA)
 
 
 def layout_to_spans(layout_df: DataFrame) -> DataFrame:

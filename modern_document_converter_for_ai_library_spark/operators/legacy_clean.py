@@ -11,12 +11,10 @@ as the convert kernel.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ..plans.rows import map_rows
 from ..reference_semantics.legacy import (
     build_paragraphs,
     collect_running_headers,
@@ -43,22 +41,18 @@ def clean_doc_lines(lines: list[str]) -> tuple[list[str], int]:
     return build_paragraphs(marked), len(running)
 
 
-def _legacy_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            lines = (text or "").split("\n")
-            paras, n_headers = clean_doc_lines(lines)
-            rows.append(
-                {
-                    "doc_id": str(doc_id),
-                    "cleaned_text": "\n".join(paras),
-                    "n_lines_in": len(lines),
-                    "n_paragraphs_out": len(paras),
-                    "n_running_headers": n_headers,
-                }
-            )
-        yield pd.DataFrame(rows, columns=[f.name for f in LEGACY_OUTPUT_SCHEMA.fields])
+def _legacy_row(doc_id, text):
+    lines = (text or "").split("\n")
+    paras, n_headers = clean_doc_lines(lines)
+    return (
+        {
+            "doc_id": str(doc_id),
+            "cleaned_text": "\n".join(paras),
+            "n_lines_in": len(lines),
+            "n_paragraphs_out": len(paras),
+            "n_running_headers": n_headers,
+        },
+    )
 
 
 def legacy_clean_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -69,7 +63,7 @@ def legacy_clean_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
         F.col("doc_id").cast("string").alias("doc_id"),
         F.col(text_col).alias("text"),
     )
-    return pruned.mapInPandas(_legacy_batches, schema=LEGACY_OUTPUT_SCHEMA)
+    return map_rows(pruned, _legacy_row, LEGACY_OUTPUT_SCHEMA)
 
 
 MARKDOWN_NORM_SCHEMA = T.StructType(
@@ -87,17 +81,11 @@ def markdown_normalize_documents(df: DataFrame, text_col: str = "text") -> DataF
 
     from ..reference_semantics.markdown_norm import clean_markdown
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": [str(d) for d in pdf["doc_id"]],
-                    "markdown": [clean_markdown(t or "") for t in pdf["text"]],
-                }
-            )
+    def _markdown_row(doc_id, text):
+        return ({"doc_id": str(doc_id), "markdown": clean_markdown(text or "")},)
 
     pruned = df.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.col(text_col).alias("text"),
     )
-    return pruned.mapInPandas(_batches, schema=MARKDOWN_NORM_SCHEMA)
+    return map_rows(pruned, _markdown_row, MARKDOWN_NORM_SCHEMA)

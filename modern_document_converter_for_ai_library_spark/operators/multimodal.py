@@ -3,7 +3,7 @@
 Media content is carried as opaque ``binary`` columns with typed metadata —
 never materialized into driver memory, never stringified. The decode /
 feature-extract / resize / frame-sample steps run as Arrow-batched kernels
-over ``mapInPandas`` so the Spark-side shape (schema, partitioning, batch
+through ``plans.rows.map_rows`` so the Spark-side shape (schema, partitioning, batch
 boundaries) is production-real; the pixel/sample work itself is STUBBED
 because image/audio libraries are not in this container:
 
@@ -20,11 +20,11 @@ media span, joined back on (doc_id, media_ref).
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..plans.rows import map_rows
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -85,36 +85,28 @@ def decode_media(df: DataFrame, decoder: str = "fake") -> DataFrame:
     """Decode/feature-extract a MEDIA_SCHEMA table via one Arrow stage."""
     decode = _fake_decode if decoder == "fake" else _real_decode
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, media_ref, media_type, content in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["media_type"], pdf["content"]
-            ):
-                try:
-                    res = decode(bytes(content) if content is not None else b"", media_type)
-                except NotImplementedError:
-                    raise
-                except Exception as exc:  # corrupt blob -> result-typed error
-                    res = {
-                        "n_bytes": len(content or b""),
-                        "content_hash": None,
-                        "width": None,
-                        "height": None,
-                        "n_frames": None,
-                        "features": None,
-                        "decode_ok": False,
-                        "decode_error": f"{type(exc).__name__}: {exc}",
-                    }
-                res.update(
-                    doc_id=str(doc_id), media_ref=str(media_ref), media_type=str(media_type)
-                )
-                rows.append(res)
-            yield pd.DataFrame(rows, columns=[f.name for f in DECODED_SCHEMA.fields])
+    def decode_row(doc_id, media_ref, media_type, content):
+        try:
+            res = decode(bytes(content) if content is not None else b"", media_type)
+        except NotImplementedError:
+            raise
+        except Exception as exc:  # corrupt blob -> result-typed error
+            res = {
+                "n_bytes": len(content or b""),
+                "content_hash": None,
+                "width": None,
+                "height": None,
+                "n_frames": None,
+                "features": None,
+                "decode_ok": False,
+                "decode_error": f"{type(exc).__name__}: {exc}",
+            }
+        res.update(
+            doc_id=str(doc_id), media_ref=str(media_ref), media_type=str(media_type)
+        )
+        return (res,)
 
-    return df.select([f.name for f in MEDIA_SCHEMA.fields]).mapInPandas(
-        _batches, schema=DECODED_SCHEMA
-    )
+    return map_rows(df.select(MEDIA_SCHEMA.fieldNames()), decode_row, DECODED_SCHEMA)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -161,47 +153,24 @@ def resize_media(
     if decoder != "fake":
         _real_decode(b"", "image")  # raises the documented stub marker
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in RESIZED_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for doc_id, media_ref, media_type, content in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["media_type"], pdf["content"]
-            ):
-                try:
-                    blob = _fake_resize(
-                        bytes(content) if content is not None else b"", width, height
-                    )
-                    rows.append(
-                        {
-                            "doc_id": str(doc_id),
-                            "media_ref": str(media_ref),
-                            "media_type": str(media_type),
-                            "content": blob,
-                            "width": width,
-                            "height": height,
-                            "resize_ok": True,
-                            "resize_error": None,
-                        }
-                    )
-                except Exception as exc:
-                    rows.append(
-                        {
-                            "doc_id": str(doc_id),
-                            "media_ref": str(media_ref),
-                            "media_type": str(media_type),
-                            "content": None,
-                            "width": None,
-                            "height": None,
-                            "resize_ok": False,
-                            "resize_error": f"{type(exc).__name__}: {exc}",
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def resize_row(doc_id, media_ref, media_type, content):
+        row = {
+            "doc_id": str(doc_id),
+            "media_ref": str(media_ref),
+            "media_type": str(media_type),
+        }
+        try:
+            blob = _fake_resize(
+                bytes(content) if content is not None else b"", width, height
+            )
+            row.update(content=blob, width=width, height=height)
+            row.update(resize_ok=True, resize_error=None)
+        except Exception as exc:
+            row.update(content=None, width=None, height=None)
+            row.update(resize_ok=False, resize_error=f"{type(exc).__name__}: {exc}")
+        return (row,)
 
-    return df.select([f.name for f in MEDIA_SCHEMA.fields]).mapInPandas(
-        _batches, schema=RESIZED_SCHEMA
-    )
+    return map_rows(df.select(MEDIA_SCHEMA.fieldNames()), resize_row, RESIZED_SCHEMA)
 
 
 def sample_frames(
@@ -219,39 +188,30 @@ def sample_frames(
     if decoder != "fake":
         _real_decode(b"", "video")
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in FRAMES_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for doc_id, media_ref, media_type, content in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["media_type"], pdf["content"]
-            ):
-                if str(media_type) != "video":
-                    continue
-                blob = bytes(content) if content is not None else b""
-                meta = _fake_decode(blob, "video")
-                taken = 0
-                for frame_no in range(0, meta["n_frames"], every_n):
-                    if max_frames is not None and taken >= max_frames:
-                        break
-                    frame = hashlib.md5(
-                        meta["content_hash"].encode() + frame_no.to_bytes(4, "big")
-                    ).digest()
-                    rows.append(
-                        {
-                            "doc_id": str(doc_id),
-                            "media_ref": str(media_ref),
-                            "frame_no": frame_no,
-                            "ts_micros": frame_no * 1_000_000 // _FAKE_FPS,
-                            "frame": frame,
-                        }
-                    )
-                    taken += 1
-            yield pd.DataFrame(rows, columns=cols)
+    def frame_rows(doc_id, media_ref, media_type, content):
+        if str(media_type) != "video":
+            return []
+        blob = bytes(content) if content is not None else b""
+        meta = _fake_decode(blob, "video")
+        rows = []
+        for frame_no in range(0, meta["n_frames"], every_n):
+            if max_frames is not None and len(rows) >= max_frames:
+                break
+            frame = hashlib.md5(
+                meta["content_hash"].encode() + frame_no.to_bytes(4, "big")
+            ).digest()
+            rows.append(
+                {
+                    "doc_id": str(doc_id),
+                    "media_ref": str(media_ref),
+                    "frame_no": frame_no,
+                    "ts_micros": frame_no * 1_000_000 // _FAKE_FPS,
+                    "frame": frame,
+                }
+            )
+        return rows
 
-    return df.select([f.name for f in MEDIA_SCHEMA.fields]).mapInPandas(
-        _batches, schema=FRAMES_SCHEMA
-    )
+    return map_rows(df.select(MEDIA_SCHEMA.fieldNames()), frame_rows, FRAMES_SCHEMA)
 
 
 def media_features_join(docs_df: DataFrame, decoded_df: DataFrame) -> DataFrame:

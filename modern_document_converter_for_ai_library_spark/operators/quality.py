@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import tokens_col
+
 MICRO = 1_000_000
 
 
@@ -65,10 +67,6 @@ GOPHER_MIN_ALPHA_RATIO_MICROS = 800_000  # 80% words need a letter
 GOPHER_MIN_STOPWORDS = 2
 TOP2_MAX_FRAC_MICROS = 200_000  # top word-2-gram chars <= 0.20
 DUP5_MAX_FRAC_MICROS = 150_000  # duplicated word-5-gram chars <= 0.15
-
-
-def _tokens(text_col: str):
-    return F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
 
 
 def gopher_signal_exprs(text_col: str, toks_col: str) -> dict:
@@ -124,7 +122,7 @@ def gopher_quality_signals(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Adds the Gopher quality columns + ``gopher_pass``. Map-only."""
-    out = df.withColumn("_toks", _tokens(text_col))
+    out = df.withColumn("_toks", tokens_col(text_col))
     exprs = gopher_signal_exprs(text_col, "_toks")
     return out.select(
         F.col(id_col), *[c.alias(name) for name, c in exprs.items()]
@@ -229,7 +227,7 @@ def ngram_repetition_stats(
     not the corpus. Docs too short to form a gram of a width get
     fraction 0 for it (nothing repeated).
     """
-    out = df.withColumn("_toks", _tokens(text_col)).select(
+    out = df.withColumn("_toks", tokens_col(text_col)).select(
         F.col(id_col),
         *[c.alias(name) for name, c in repetition_exprs("_toks").items()],
     )
@@ -272,7 +270,7 @@ def quality_funnel(
     the join-back quality stage scaled ~2.4x at 4x cores because the
     shuffle, not the map work, was the marginal cost).
     """
-    base = df.withColumn("_toks", _tokens(text_col))
+    base = df.withColumn("_toks", tokens_col(text_col))
     gopher_pass = gopher_signal_exprs(text_col, "_toks")["gopher_pass"]
     rep = repetition_exprs("_toks")
     rep_pass = (rep["top2_frac_micros"] <= TOP2_MAX_FRAC_MICROS) & (
@@ -340,7 +338,7 @@ def classifier_score(
     Integer-micro weights keep the score exact (no float summation-order
     sensitivity across partitionings).
     """
-    toks = _tokens(text_col)
+    toks = tokens_col(text_col)
     ex = df.select(F.col(id_col), F.explode(toks).alias("_tok"))
     if weights is None:
         w = (
@@ -389,7 +387,7 @@ def _doc_bigram_counts(
     shared bottom level of the hashed-LM aggregation pyramids
     (:func:`bigram_lm_scores`, :func:`dsir_importance`). h1 hashes the
     context token, h12 the (w1, w2) pair, both into ``n_buckets``."""
-    toks = _tokens(text_col)
+    toks = tokens_col(text_col)
     pairs = F.expr(
         "transform(slice(_toks, 1, greatest(size(_toks)-1, 0)), "
         "(x, i) -> struct(x AS w1, element_at(_toks, i+2) AS w2))"
@@ -752,7 +750,7 @@ def perceptron_train(
     exploded = df.repartition(F.col(id_col)).select(
         F.col(id_col),
         F.col(label_col).cast("bigint").alias("_y"),
-        F.explode(_tokens(text_col)).alias("_tok"),
+        F.explode(tokens_col(text_col)).alias("_tok"),
     )
     if hash_tokens:
         exploded = exploded.select(
@@ -895,7 +893,7 @@ def perceptron_train(
     # corpus tokens shared a cell, i.e. every epoch merged their
     # weights — raise rather than return silently corrupted training.
     vocab = (
-        df.select(F.explode(_tokens(text_col)).alias("_tok"))
+        df.select(F.explode(tokens_col(text_col)).alias("_tok"))
         .groupBy(F.xxhash64("_tok").alias("_tokh"))
         .agg(F.min("_tok").alias("_lo"), F.max("_tok").alias("_hi"))
         .persist()

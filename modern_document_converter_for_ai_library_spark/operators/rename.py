@@ -50,18 +50,18 @@ assign_codes' window.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
+from ..plans.rows import map_rows, struct_dicts
 from ..reference_semantics.codes import DUP_ALLOC_ERR, DUP_CLAIM_ERR
 from ..reference_semantics.convert import rename_doc
+from ..sources.synth import SPAN_STRUCT
 from .codes import assign_codes, index_from_code_col
-from .convert import _as_span_dicts
 
 RENAME_KERNEL_SCHEMA = T.StructType(
     [
@@ -81,18 +81,10 @@ RENAME_KERNEL_SCHEMA = T.StructType(
     ]
 )
 
-def _rename_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, spans, source_file in zip(
-            pdf["doc_id"], pdf["spans"], pdf["source_file"]
-        ):
-            res = rename_doc(str(doc_id), _as_span_dicts(spans), str(source_file))
-            res["source_file"] = str(source_file)
-            rows.append(res)
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in RENAME_KERNEL_SCHEMA.fields]
-        )
+def _rename_row(doc_id, source_file, spans):
+    res = rename_doc(str(doc_id), struct_dicts(spans, SPAN_STRUCT), str(source_file))
+    res["source_file"] = str(source_file)
+    return (res,)
 
 
 def rename_documents(
@@ -116,8 +108,10 @@ def rename_documents(
     from ..plans.caching import scoped_persist
 
     base = scoped_persist(
-        df.select("doc_id", "source_file", "spans").mapInPandas(
-            _rename_batches, schema=RENAME_KERNEL_SCHEMA
+        map_rows(
+            df.select("doc_id", "source_file", "spans"),
+            _rename_row,
+            RENAME_KERNEL_SCHEMA,
         ),
         cache_scope,
         StorageLevel.MEMORY_AND_DISK,

@@ -136,7 +136,7 @@ def budget_sample(
     is again monotone in the budget and reproducible on any engine).
 
     Token count is the single-space-split non-empty token count (the
-    repo-wide convention, quality.py:_tokens).
+    repo-wide convention, functions/hashing.py:tokens_col).
 
     Skew-safe two-phase cumulative sum (no per-source global window): a
     document's priority bucket is ``hash_micros * n_buckets // 1e6`` —
@@ -178,12 +178,12 @@ def _budget_expr(budgets: dict, key_col: str, default_budget: int) -> F.Column:
 
 
 def _n_tokens(text_col: str) -> F.Column:
-    """A document's token count (quality.py:_tokens) as a bigint, 0 for
-    null text: under ANSI ``size(NULL)`` is NULL, which would leave the
-    row's running sum, shard id and budget verdict NULL."""
-    from .quality import _tokens
+    """A document's token count (``functions/hashing.py:tokens_col``) as a
+    bigint, 0 for null text: under ANSI ``size(NULL)`` is NULL, which would
+    leave the row's running sum, shard id and budget verdict NULL."""
+    from ..functions.hashing import tokens_col
 
-    return F.coalesce(F.size(_tokens(text_col)), F.lit(0)).cast("bigint")
+    return F.coalesce(F.size(tokens_col(text_col)), F.lit(0)).cast("bigint")
 
 
 def _cumulative_tokens(

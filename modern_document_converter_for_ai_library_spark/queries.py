@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions.hashing import tokens_col
 from .reference_semantics.codes import ALPHABET
 from .reference_semantics.rules import CASELAW_PATTERNS, STATUTE_PATTERNS
 
@@ -191,7 +192,7 @@ FROM p
 # ---------------------------------------------------------------------------
 
 def spark_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tokens = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    tokens = tokens_col("text")
     df = _docs(spark, sf_dir).withColumn("tokens", tokens)
     n = F.size("tokens").cast("bigint")
     nd = F.size(F.array_distinct("tokens")).cast("bigint")
@@ -334,7 +335,7 @@ FROM sc
 # ---------------------------------------------------------------------------
 
 def spark_quality_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tokens = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    tokens = tokens_col("text")
     df = _docs(spark, sf_dir).withColumn("tokens", tokens)
     n = F.size("tokens").cast("bigint")
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
@@ -399,7 +400,7 @@ _BPE_ISH_PATTERN = " ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 ]+"
 
 
 def spark_token_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ws = F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != "")).cast(
+    ws = F.size(tokens_col("text")).cast(
         "bigint"
     )
     bpe = F.regexp_count(F.col("text"), F.lit(_BPE_ISH_PATTERN)).cast("bigint")
@@ -516,7 +517,7 @@ def spark_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.bloom import bloom_build, bloom_member
 
     prefix = F.array_join(
-        F.slice(F.filter(F.split("text", " "), lambda x: x != ""), 1, 8),
+        F.slice(tokens_col("text"), 1, 8),
         " ",
     )
     d = _docs(spark, sf_dir).select("doc_id", F.md5(prefix).alias("h"))
@@ -578,7 +579,7 @@ _PACK_BUDGET = 512
 def spark_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.packing import pack_sequences
 
-    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    toks = tokens_col("text")
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.size(toks).cast("bigint").alias("n_tokens"),
@@ -1735,7 +1736,7 @@ _ODD_NIBBLES = ["1", "3", "5", "7", "9", "b", "d", "f"]
 
 
 def spark_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tokens = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    tokens = tokens_col("text")
     ex = (
         _docs(spark, sf_dir)
         .select(F.col("doc_id").cast("bigint").alias("doc_id"), tokens.alias("tokens"))
@@ -2314,7 +2315,7 @@ _HEAD_RE = "^(spark|window|sort|merge)( |$)"
 
 def spark_line_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _docs(spark, sf_dir).withColumn(
-        "tokens", F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+        "tokens", tokens_col("text")
     )
     df = df.withColumn("lines", F.expr(_LINES_EXPR.format(w=8)))
     kept = F.expr("filter(lines, l -> not l rlike '%s')" % _NOISE_RE)
@@ -2371,7 +2372,7 @@ FROM k
 def spark_running_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.posexplode(F.filter(F.split(F.col("text"), " "), lambda x: x != "")).alias(
+        F.posexplode(tokens_col("text")).alias(
             "pos", "tok"
         ),
     )
@@ -2428,7 +2429,7 @@ GROUP BY doc_id
 
 def spark_multizone(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _docs(spark, sf_dir).withColumn(
-        "tokens", F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+        "tokens", tokens_col("text")
     )
     df = df.withColumn("pages", F.expr(_LINES_EXPR.format(w=10)))
     n_pages = F.size("pages")
@@ -2589,7 +2590,7 @@ FROM g
 
 def spark_heading_context(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _docs(spark, sf_dir).withColumn(
-        "tokens", F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+        "tokens", tokens_col("text")
     )
     df = df.withColumn("lines", F.expr(_LINES_EXPR.format(w=8)))
     ex = df.select(
@@ -2764,7 +2765,7 @@ _NEARDUP_SQL = _neardup_sql()
 
 def spark_metadata_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _docs(spark, sf_dir).withColumn(
-        "tokens", F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+        "tokens", tokens_col("text")
     )
     cap = F.expr(
         "concat(upper(substring(element_at(tokens, 1), 1, 1)), "
@@ -2903,7 +2904,7 @@ def spark_markdown_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.markdown import strip_markdown
 
     df = _docs(spark, sf_dir).withColumn(
-        "tokens", F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+        "tokens", tokens_col("text")
     )
     tok = lambda i: F.expr(f"element_at(tokens, {i})")  # noqa: E731
     rest = F.expr(
@@ -3161,7 +3162,7 @@ def spark_near_dedup_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "text"
     )
-    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    toks = tokens_col("text")
     out = near_dedup(docs, threshold_micros=500_000, n_bands=1, band_rows=2)
     scored = out.withColumn("score", F.size(toks).cast("bigint"))
     reps = select_representatives(scored, "score")
@@ -4002,7 +4003,7 @@ def spark_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.posexplode(
-            F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+            tokens_col("text")
         ).alias("pos", "token"),
     )
     b = F.floor(F.col("pos") / 8).cast("int")
@@ -4086,7 +4087,7 @@ def spark_boilerplate_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.posexplode(
-            F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+            tokens_col("text")
         ).alias("pos", "token"),
     )
     b = F.floor(F.col("pos") / 8).cast("int")
@@ -4275,7 +4276,7 @@ def rename_input_py(doc_id: int, text: str) -> tuple[str, str]:
 def _rename_input_cols(df: DataFrame) -> DataFrame:
     """Columnar twin of :func:`rename_input_py` (pure JVM expressions)."""
     did = F.col("doc_id").cast("bigint")
-    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    toks = tokens_col("text")
     t1 = F.element_at(toks, 1)
     t2 = F.element_at(toks, 2)
     cap = F.concat(F.upper(F.substring(t1, 1, 1)), F.substring(t1, 2, 1 << 24))
@@ -4393,7 +4394,7 @@ def spark_article_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.articles import extract_article_metadata
 
     df = _docs(spark, sf_dir).withColumn(
-        "tokens", F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+        "tokens", tokens_col("text")
     )
     did = F.col("doc_id").cast("bigint")
 
@@ -4515,7 +4516,7 @@ def spark_filename_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.indexer import index_filenames
 
     df = _docs(spark, sf_dir).withColumn(
-        "tokens", F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+        "tokens", tokens_col("text")
     )
     did = F.col("doc_id").cast("bigint")
     w = F.substring(
@@ -4694,7 +4695,7 @@ def spark_filename_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "text"
     )
-    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    toks = tokens_col("text")
     t1 = F.coalesce(F.element_at(toks, 1), F.lit("x"))
     t2 = F.coalesce(F.element_at(toks, 2), F.lit("y"))
     cap = lambda c: F.concat(F.upper(F.substring(c, 1, 1)), F.lower(F.substring(c, 2, 100)))
@@ -5612,7 +5613,7 @@ def spark_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _docs(spark, sf_dir)
     toks = df.select(
         F.col("doc_id").cast("bigint").alias("did"),
-        F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias("item"),
+        F.explode(tokens_col("text")).alias("item"),
     )
     sketch = cms_build(toks, "item")
     cands = toks.filter(F.col("did") < 3).select("item").distinct()
@@ -5667,7 +5668,7 @@ def spark_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _docs(spark, sf_dir)
     toks = df.select(
         "source",
-        F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias("item"),
+        F.explode(tokens_col("text")).alias("item"),
     )
     hll = hll_register_table(toks, "item", group_col="source")
     exact = toks.groupBy("source").agg(
@@ -6249,7 +6250,7 @@ _LINE_W, _LINE_MIN_COUNT = 6, 3
 def spark_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import line_dedup
 
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = tokens_col("text")
     w = F.lit(_LINE_W)
     lines = F.when(
         F.size("_toks") > 0,
@@ -6491,7 +6492,7 @@ ORDER BY round
 def spark_perceptron(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.quality import perceptron_train
 
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = tokens_col("text")
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "text",

@@ -1,12 +1,10 @@
 from .synth import synth_documents, synth_documents_pandas, SPANS_SCHEMA, DOCS_SCHEMA
-from .io import read_span_documents, flat_to_spans, write_span_documents
+from .io import flat_to_spans
 
 __all__ = [
     "synth_documents",
     "synth_documents_pandas",
     "SPANS_SCHEMA",
     "DOCS_SCHEMA",
-    "read_span_documents",
     "flat_to_spans",
-    "write_span_documents",
 ]

@@ -6,7 +6,7 @@ BASELINE.json input_hint); THIS module is the upstream job that would
 produce it from raw files on a cluster:
 
     spark.read.format("binaryFile")           one row per file, content ->
-      -> mapInPandas extract kernel           spans (one Arrow stage)
+      -> map_rows extract kernel              spans (one Arrow stage)
       -> span-shaped table (doc_id, source_file, spans, n_pages,
          success, error_message)
 
@@ -39,12 +39,12 @@ from __future__ import annotations
 
 import os
 import shutil
-from typing import Callable, Iterator, Optional
+from typing import Callable, Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..plans.rows import map_rows
 from .synth import SPANS_SCHEMA
 
 INGEST_SCHEMA = T.StructType(
@@ -175,41 +175,26 @@ def ingest_binary_documents(
     """
     ex = extractor or default_extractor(strategy)
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                name = os.path.basename(str(p))
-                doc_id = os.path.splitext(name)[0]
-                try:
-                    pages, n_pages = ex(name, bytes(content))
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "source_file": name,
-                            "spans": _pages_to_spans(pages),
-                            "n_pages": n_pages,
-                            "success": True,
-                            "error_message": None,
-                        }
-                    )
-                except Exception as exc:
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "source_file": name,
-                            "spans": [],
-                            "n_pages": 0,
-                            "success": False,
-                            "error_message": f"{exc}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in INGEST_SCHEMA.fields]
-            )
+    def extract_row(path, content):
+        name = os.path.basename(str(path))
+        try:
+            pages, n_pages = ex(name, bytes(content))
+            spans, success, error = _pages_to_spans(pages), True, None
+        except Exception as exc:
+            spans, n_pages, success, error = [], 0, False, f"{exc}"
+        return (
+            {
+                "doc_id": os.path.splitext(name)[0],
+                "source_file": name,
+                "spans": spans,
+                "n_pages": n_pages,
+                "success": success,
+                "error_message": error,
+            },
+        )
 
     reader = spark.read.format("binaryFile")
     if path_glob:
         reader = reader.option("pathGlobFilter", path_glob)
     files = reader.load(path).select("path", "content")
-    return files.mapInPandas(_batches, schema=INGEST_SCHEMA)
+    return map_rows(files, extract_row, INGEST_SCHEMA)

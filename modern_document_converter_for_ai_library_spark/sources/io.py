@@ -1,4 +1,4 @@
-"""Readers/writers and schema adapters.
+"""Schema adapters (reading and writing tables is ``sources/catalog.py``).
 
 The production source is an Iceberg table in the input_hint shape; in this
 sandbox the same columns live in parquet. ``flat_to_spans`` adapts the
@@ -10,21 +10,10 @@ functions only), so Catalyst still prunes and pushes down underneath it.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .synth import DOCS_SCHEMA, SPANS_SCHEMA  # noqa: F401  (re-exported)
-
-
-def read_span_documents(spark: SparkSession, path: str) -> DataFrame:
-    """Read a span-shaped documents table from parquet (Iceberg in prod)."""
-    return spark.read.parquet(path)
-
-
-def write_span_documents(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write span-shaped output. On a cluster this is
-    ``df.writeTo(table).append()`` against Iceberg; parquet here."""
-    df.write.mode(mode).parquet(path)
 
 
 def flat_to_spans(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -243,13 +243,6 @@ def _make_html_doc(rng: np.random.RandomState, i: int) -> tuple[str, str]:
     return doc_id, html
 
 
-def synth_html_pandas(n_docs: int, seed: int = 42) -> pd.DataFrame:
-    """Deterministic synthetic HTML corpus (doc_id, html)."""
-    rng = np.random.RandomState(seed)
-    rows = [_make_html_doc(rng, i) for i in range(n_docs)]
-    return pd.DataFrame(rows, columns=["doc_id", "html"])
-
-
 def synth_documents_pandas(n_docs: int, seed: int = 42) -> pd.DataFrame:
     """Generate the corpus as a pandas DataFrame (used by tests + goldens)."""
     rng = np.random.RandomState(seed)

@@ -21,11 +21,11 @@ these corpora are actually laid out. Records stream out as individual rows.
 from __future__ import annotations
 
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from ..plans.rows import map_rows
 
 WARC_SCHEMA = T.StructType(
     [
@@ -133,20 +133,15 @@ def read_warc_documents(
 ) -> DataFrame:
     """One row per WARC record of the kept types; single Arrow stage."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in WARC_SCHEMA.fields]
-        for pdf in batches:
-            rows: list[dict] = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                shard = str(p).rsplit("/", 1)[-1]
-                for rec in parse_warc_bytes(bytes(content), shard=shard):
-                    if rec["warc_type"] in keep_types:
-                        rows.append(rec)
-            yield pd.DataFrame(rows, columns=cols)
+    def record_rows(path, content):
+        shard = str(path).rsplit("/", 1)[-1]
+        return [
+            rec
+            for rec in parse_warc_bytes(bytes(content), shard=shard)
+            if rec["warc_type"] in keep_types
+        ]
 
-    return _binary_shards(spark, path, path_glob).mapInPandas(
-        _batches, schema=WARC_SCHEMA
-    )
+    return map_rows(_binary_shards(spark, path, path_glob), record_rows, WARC_SCHEMA)
 
 
 STRIPPED_SCHEMA = T.StructType(
@@ -169,7 +164,7 @@ def parse_and_strip_warc(
     """FUSED WARC framing + HTTP split + boilerplate strip in ONE Arrow
     stage over (path, content) binaryFile rows.
 
-    Why fuse: parse-then-strip as two mapInPandas operators ships every
+    Why fuse: parse-then-strip as two Arrow stages ships every
     page's raw HTML JVM->Python->JVM->Python — double the Arrow traffic —
     and runs two Python workers per task slot; with the convert kernel
     downstream that is 3 workers/slot, which oversubscribes the host at
@@ -179,33 +174,30 @@ def parse_and_strip_warc(
     unfused operators use (parse_warc_bytes, html_blocks_py,
     classify_blocks_py); tests assert record-for-record equality."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..operators.boilerplate import classify_blocks_py, html_blocks_py
+    from ..operators.boilerplate import classify_blocks_py, html_blocks_py
 
-        cols = [f.name for f in STRIPPED_SCHEMA.fields]
-        for pdf in batches:
-            rows: list[dict] = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                shard = str(p).rsplit("/", 1)[-1]
-                for rec in parse_warc_bytes(bytes(content), shard=shard):
-                    if rec["warc_type"] not in keep_types:
-                        continue
-                    blocks = html_blocks_py(rec["doc_id"], rec["html"])
-                    flags = classify_blocks_py(blocks, classifier=classifier)
-                    kept = [b["text"] for b, f_ in zip(blocks, flags) if f_]
-                    rows.append(
-                        {
-                            "doc_id": rec["doc_id"],
-                            "url": rec["url"],
-                            "shard": shard,
-                            "content_text": "\n\n".join(kept),
-                            "n_blocks": len(blocks),
-                            "n_content_blocks": len(kept),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def stripped_rows(path, content):
+        shard = str(path).rsplit("/", 1)[-1]
+        rows = []
+        for rec in parse_warc_bytes(bytes(content), shard=shard):
+            if rec["warc_type"] not in keep_types:
+                continue
+            blocks = html_blocks_py(rec["doc_id"], rec["html"])
+            flags = classify_blocks_py(blocks, classifier=classifier)
+            kept = [b["text"] for b, f_ in zip(blocks, flags) if f_]
+            rows.append(
+                {
+                    "doc_id": rec["doc_id"],
+                    "url": rec["url"],
+                    "shard": shard,
+                    "content_text": "\n\n".join(kept),
+                    "n_blocks": len(blocks),
+                    "n_content_blocks": len(kept),
+                }
+            )
+        return rows
 
-    return binary_df.mapInPandas(_batches, schema=STRIPPED_SCHEMA)
+    return map_rows(binary_df.select("path", "content"), stripped_rows, STRIPPED_SCHEMA)
 
 
 def read_warc_content(

@@ -24,27 +24,15 @@ negatives. State size never grows with stream length.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.bloom import bloom_build, bloom_merge
-
-_CURRENT = "CURRENT"
+from ._versioned import read_pointer, write_next_version
 
 _BLOOM_SCHEMA = "shard bigint, bloom array<bigint>"
-
-
-def _read_pointer(state_path: str) -> str | None:
-    ptr = os.path.join(state_path, _CURRENT)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr, encoding="utf-8") as f:
-        name = f.read().strip()
-    version_dir = os.path.join(state_path, name)
-    return version_dir if name and os.path.exists(version_dir) else None
 
 
 def merge_bloom_state(state_path: str, batch_filter: DataFrame) -> None:
@@ -52,25 +40,14 @@ def merge_bloom_state(state_path: str, batch_filter: DataFrame) -> None:
     versioned-pointer swap (see module docstring); idempotent because
     ``x | x = x``."""
     spark = batch_filter.sparkSession
-    os.makedirs(state_path, exist_ok=True)
-    prev_dir = _read_pointer(state_path)
-    if prev_dir is not None:
+
+    def merged(prev_dir):
+        if prev_dir is None:
+            return batch_filter
         prev = spark.read.schema(_BLOOM_SCHEMA).parquet(prev_dir)
-        merged = bloom_merge(prev, batch_filter)
-        next_version = int(os.path.basename(prev_dir).lstrip("v")) + 1
-    else:
-        merged = batch_filter
-        next_version = 1
-    new_name = "v%d" % next_version
-    merged.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(state_path, new_name)
-    )
-    ptr_tmp = os.path.join(state_path, _CURRENT + ".tmp")
-    with open(ptr_tmp, "w", encoding="utf-8") as f:
-        f.write(new_name)
-    os.replace(ptr_tmp, os.path.join(state_path, _CURRENT))
-    if prev_dir is not None:
-        shutil.rmtree(prev_dir, ignore_errors=True)
+        return bloom_merge(prev, batch_filter)
+
+    write_next_version(state_path, merged)
 
 
 def bloom_from_state(
@@ -83,7 +60,7 @@ def bloom_from_state(
     expects. A not-yet-written state yields the all-zero filter (every
     probe answers False), not an error — so a gate composed on top of
     this keeps everything on the first batch."""
-    current = _read_pointer(state_dir)
+    current = read_pointer(state_dir)
     if current is None:
         n_words = m // 64
         return spark.range(n_shards).select(

@@ -32,7 +32,6 @@ control) never touch raw history.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,60 +43,37 @@ from ..operators.sketches import (
     log2_histogram,
 )
 
+from ._versioned import read_pointer, write_next_version
+
 _REG_SCHEMA = "group string, bucket int, register bigint"
-_CURRENT = "CURRENT"
-
-
-def _read_pointer(state_path: str) -> str | None:
-    ptr = os.path.join(state_path, _CURRENT)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr, encoding="utf-8") as f:
-        name = f.read().strip()
-    version_dir = os.path.join(state_path, name)
-    return version_dir if name and os.path.exists(version_dir) else None
 
 
 def merge_hll_state(state_path: str, batch_regs: DataFrame) -> None:
     """Fold a batch's register table into the persisted state with
-    register-wise MAX. Crash-safe versioned-pointer protocol: the merged
-    table is written to a NEW version directory, then a tiny CURRENT
-    pointer file is swapped with os.replace (atomic on POSIX) — a crash
-    at any point leaves CURRENT referencing a complete older version,
-    never a partial or deleted one. Stale versions are removed
-    best-effort after the pointer moves. Idempotent: max(x, x) = x, so
-    batch replays are absorbed."""
+    register-wise MAX, through the crash-safe versioned-pointer swap of
+    ``streaming/_versioned.py``. Idempotent: max(x, x) = x, so batch
+    replays are absorbed."""
     spark = batch_regs.sparkSession
-    os.makedirs(state_path, exist_ok=True)
-    prev_dir = _read_pointer(state_path)
-    if prev_dir is not None:
+    regs = batch_regs.select("group", "bucket", "register")
+
+    def merged(prev_dir):
+        if prev_dir is None:
+            return regs
         prev = spark.read.schema(_REG_SCHEMA).parquet(prev_dir)
-        merged = (
-            prev.union(batch_regs.select("group", "bucket", "register"))
+        return (
+            prev.union(regs)
             .groupBy("group", "bucket")
             .agg(F.max("register").cast("bigint").alias("register"))
         )
-        next_version = int(os.path.basename(prev_dir).lstrip("v")) + 1
-    else:
-        merged = batch_regs.select("group", "bucket", "register")
-        next_version = 1
-    new_name = "v%d" % next_version
-    merged.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(state_path, new_name)
-    )
-    ptr_tmp = os.path.join(state_path, _CURRENT + ".tmp")
-    with open(ptr_tmp, "w", encoding="utf-8") as f:
-        f.write(new_name)
-    os.replace(ptr_tmp, os.path.join(state_path, _CURRENT))
-    if prev_dir is not None:
-        shutil.rmtree(prev_dir, ignore_errors=True)
+
+    write_next_version(state_path, merged)
 
 
 def hll_estimate_from_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """Cardinality estimates from the persisted registers — the same
     exact-integer arithmetic as the batch hll_register_table. An empty
     or not-yet-written state yields an empty frame, not an error."""
-    current = _read_pointer(os.path.join(state_dir, "hll_registers"))
+    current = read_pointer(os.path.join(state_dir, "hll_registers"))
     if current is None:
         regs = spark.createDataFrame([], _REG_SCHEMA)
     else:

@@ -14,8 +14,10 @@ from modern_document_converter_for_ai_library_spark.operators.bloom import (
     bloom_build,
     bloom_member,
 )
+from modern_document_converter_for_ai_library_spark.streaming._versioned import (
+    read_pointer as _read_pointer,
+)
 from modern_document_converter_for_ai_library_spark.streaming.bloom_stream import (
-    _read_pointer,
     bloom_from_state,
     bloom_stream,
     merge_bloom_state,

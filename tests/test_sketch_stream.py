@@ -78,8 +78,8 @@ def test_stream_matches_batch_sketches(spark):
 
 
 def test_hll_replay_is_absorbed(spark):
-    from modern_document_converter_for_ai_library_spark.streaming.sketch_stream import (
-        _read_pointer,
+    from modern_document_converter_for_ai_library_spark.streaming._versioned import (
+        read_pointer as _read_pointer,
     )
 
     state = tempfile.mkdtemp(prefix="skstream_replay_")
@@ -102,8 +102,8 @@ def test_crash_between_write_and_pointer_swap_keeps_old_state(spark):
     """A version directory written WITHOUT the pointer swap (the crash
     window) must be invisible: readers and the next merge keep using the
     pointed-to version."""
-    from modern_document_converter_for_ai_library_spark.streaming.sketch_stream import (
-        _read_pointer,
+    from modern_document_converter_for_ai_library_spark.streaming._versioned import (
+        read_pointer as _read_pointer,
     )
 
     state = tempfile.mkdtemp(prefix="skstream_crash_")
