@@ -360,12 +360,7 @@ def main(argv: list[str] | None = None) -> int:
                 salt=args.salt,
                 default_budget=args.mix_default,
             )
-            nxt = cur.join(
-                sampled.filter(F.col("kept")).select(id_col),
-                on=id_col,
-                how="left_semi",
-            )
-            advance("mix", nxt)
+            advance("mix", sampled.filter(F.col("kept")).select(cur.columns))
 
         sharded = args.shard_tokens > 0
         shuffled = args.shuffle_salt is not None

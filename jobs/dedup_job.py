@@ -67,7 +67,7 @@ def main(argv: list[str] | None = None) -> int:
                    help="incremental tier: stored LSH band-index target "
                         "(read if present, bootstrapped from --base if "
                         "missing; batch survivors' rows appended after)")
-    p.add_argument("--prune", choices=["broadcast", "shuffle", "none"],
+    p.add_argument("--prune", choices=["broadcast", "shuffle"],
                    default="broadcast",
                    help="incremental tier: base-side touched-bucket prune "
                         "strategy — broadcast while 16 x batch band keys "

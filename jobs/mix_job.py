@@ -149,21 +149,19 @@ def main(argv: list[str] | None = None) -> int:
             )
             kept = marked.filter("sampled").drop("hash_micros", "sampled")
         elif args.mode == "budget":
-            sel = budget_sample(
-                docs, spec, text_col=args.text_col,
-                default_budget=args.default, **common
-            ).filter("kept")
-            kept = docs.join(
-                sel.select(args.id_col), on=args.id_col, how="leftsemi"
+            kept = (
+                budget_sample(
+                    docs, spec, text_col=args.text_col,
+                    default_budget=args.default, **common
+                )
+                .filter("kept")
+                .select(docs.columns)
             )
         elif args.mode == "epochs":  # one output row per emitted COPY
-            sel = epoch_budget_sample(
+            kept = epoch_budget_sample(
                 docs, spec, text_col=args.text_col,
                 default_budget=args.default, **common
-            )
-            kept = docs.join(
-                sel.select(args.id_col, "epoch"), on=args.id_col, how="inner"
-            )
+            ).select(*docs.drop("epoch").columns, "epoch")
         else:  # shuffle / shard: the terminal layout of the whole input
             kept = docs
         kept = kept.persist()

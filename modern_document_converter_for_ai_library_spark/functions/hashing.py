@@ -33,56 +33,6 @@ def shingle_hashes_col(tokens: Column, width: int = 3) -> Column:
     return F.transform(shingles, lambda s: F.md5(s))
 
 
-def simhash_col(tokens: Column, n_bits: int = 64) -> Column:
-    """Production-width SimHash bit-string from whitespace tokens.
-
-    Classic Charikar sketch: bit b of the sketch is the sign of
-    sum over tokens of (+1 if bit b of md5(token) else -1). Bit b is read
-    from md5 hex nibble b//4 with mask 8 >> (b % 4), so n_bits <= 128.
-    Pure columnar (conv + bitwise AND + aggregate over the token array) —
-    map-only, no shuffle; the groupBy formulation in q_simhash is the
-    exploded equivalent for cross-engine oracle checks. 64 bits with
-    16-bit bands is the standard near-dup shape (Manku et al., WWW'07):
-    4 band equi-joins with 2^16-cardinality keys.
-    """
-    if not 1 <= n_bits <= 128:
-        raise ValueError("md5 provides at most 128 bits")
-    hashed = F.transform(tokens, lambda t: F.md5(t))
-
-    def _contribs(h):
-        out = []
-        for b in range(n_bits):
-            nib, mask = b // 4, 8 >> (b % 4)
-            out.append(
-                F.when(
-                    F.conv(F.substring(h, nib + 1, 1), 16, 10)
-                    .cast("int")
-                    .bitwiseAND(mask)
-                    != 0,
-                    F.lit(1).cast("bigint"),
-                ).otherwise(F.lit(-1).cast("bigint"))
-            )
-        return F.array(*out)
-
-    # single fold with a finish lambda: md5 runs once per token and the
-    # 64-sum accumulator is referenced through a lambda variable, so the
-    # expression tree stays linear (64 separate aggregates would duplicate
-    # the token-hash transform per bit)
-    return F.aggregate(
-        hashed,
-        F.array_repeat(F.lit(0).cast("bigint"), n_bits),
-        lambda acc, h: F.zip_with(acc, _contribs(h), lambda a, c: a + c),
-        lambda acc: F.concat(
-            *[
-                F.when(F.element_at(acc, b + 1) > 0, F.lit("1")).otherwise(
-                    F.lit("0")
-                )
-                for b in range(n_bits)
-            ]
-        ),
-    )
-
-
 MERSENNE_31 = 2_147_483_647
 """Modulus for the 2-universal minhash permutation family: the Mersenne
 prime 2^31 - 1. With x reduced mod p first and a < p, the product a*x stays

@@ -2,15 +2,14 @@
 (north rule: "batched HTML boilerplate stripping via text-density +
 link-density DOM heuristics (Readability/Boilerpipe-style block scoring)").
 
-Three layers, separable so the classifier is pure-columnar:
+Three layers:
 
-  html_to_blocks         Arrow kernel (mapInPandas): regex-segment raw HTML
-                         into text blocks at block-level tag boundaries,
-                         strip tags/scripts/comments, decode basic
-                         entities, and count words + anchor-text words per
-                         block. One vectorized stage; no DOM library
-                         (regex segmentation is the Boilerpipe "atomic text
-                         block" model, not a browser parse).
+  html_blocks_py         regex-segment raw HTML into text blocks at
+                         block-level tag boundaries, strip
+                         tags/scripts/comments, decode basic entities,
+                         and count words + anchor-text words per block. No
+                         DOM library (regex segmentation is the Boilerpipe
+                         "atomic text block" model, not a browser parse).
   classify_blocks        PURE-COLUMN implementation of the published
                          NumWordsRulesClassifier decision tree
                          (Kohlschuetter, Fankhauser, Nejdl: "Boilerplate
@@ -30,14 +29,16 @@ Three layers, separable so the classifier is pure-columnar:
                          Link-density thresholds are evaluated by INTEGER
                          CROSS-MULTIPLICATION (1e6*links vs 333333*words),
                          so every engine agrees exactly — no float division.
+                         (``classify_blocks_py`` is its sequential twin.)
   strip_boilerplate_html end-to-end: blocks -> classify -> keep content ->
                          reassemble cleaned text per document ("\\n\\n"
                          joined, block order preserved).
 
-Scale shape: the kernel is one Arrow stage; the classifier shuffles once on
-doc_id for the per-document window (block adjacency is the whole point of
-the WSDM-2010 features); reassembly rides the same partitioning
-(groupBy doc_id directly after the window reuses the exchange under AQE).
+Scale shape: a document's blocks are colocated inside its own row, so the
+strip runs segmentation and the (prev, curr, next) classification in one
+Arrow stage — map-only, zero shuffles. ``classify_blocks`` serves inputs
+that already are block tables (the queries); it shuffles once on doc_id
+for the per-document window.
 """
 
 from __future__ import annotations
@@ -61,18 +62,6 @@ _BLOCK_TAG_RE = re.compile(
 )
 _A_RE = re.compile(r"(?is)<a\b[^>]*>(.*?)</a\s*>")
 _TAG_RE = re.compile(r"(?s)<[^>]+>")
-
-BLOCKS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("block_no", T.IntegerType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("n_words", T.IntegerType()),
-        T.StructField("n_link_words", T.IntegerType()),
-        T.StructField("n_chars", T.IntegerType()),
-    ]
-)
-
 
 def _words(s: str) -> list[str]:
     return [w for w in s.split() if w]
@@ -104,17 +93,6 @@ def html_blocks_py(doc_id: str, html: str) -> list[dict]:
             }
         )
     return out
-
-
-def html_to_blocks(
-    df: DataFrame, html_col: str = "html", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc_id, block_no, text, n_words, n_link_words) — one Arrow stage."""
-
-    def block_rows(doc_id, doc_html):
-        return html_blocks_py(str(doc_id), doc_html)
-
-    return map_rows(df.select(id_col, html_col), block_rows, BLOCKS_SCHEMA)
 
 
 def content_flag_col(
@@ -238,54 +216,29 @@ def strip_boilerplate_html(
     html_col: str = "html",
     id_col: str = "doc_id",
     classifier: str = "num_words",
-    mode: str = "kernel",
 ) -> DataFrame:
     """(doc_id, content_text, n_blocks, n_content_blocks): cleaned main
     content per document, boilerplate blocks dropped, order preserved.
 
-    ``mode="kernel"`` (default, the 100 TB path): a document's blocks are
-    already colocated inside its own row, so segmentation AND the
-    (prev, curr, next) classification run in ONE Arrow stage — the whole
-    strip is map-only, zero shuffles. ``mode="columnar"`` routes through the
-    exploded block table + lag/lead windows + groupBy reassembly (two
-    shuffles of block rows) — for inputs that are already block tables or
-    when per-block flags must be inspected. Both modes share the same
-    classifier code paths and are asserted equal in tests.
+    A document's blocks are already colocated inside its own row, so
+    segmentation AND the (prev, curr, next) classification run in ONE
+    Arrow stage — the whole strip is map-only, zero shuffles.
     """
-    if mode == "kernel":
 
-        def strip_row(doc_id, doc_html):
-            blocks = html_blocks_py(str(doc_id), doc_html)
-            flags = classify_blocks_py(blocks, classifier=classifier)
-            kept = [b["text"] for b, f_ in zip(blocks, flags) if f_]
-            return (
-                {
-                    "doc_id": str(doc_id),
-                    "content_text": "\n\n".join(kept),
-                    "n_blocks": len(blocks),
-                    "n_content_blocks": len(kept),
-                },
-            )
-
-        return map_rows(df.select(id_col, html_col), strip_row, STRIP_SCHEMA)
-
-    classified = classify_blocks(
-        html_to_blocks(df, html_col, id_col), id_col, classifier=classifier
-    )
-    kept = F.array_sort(
-        F.collect_list(
-            F.when(
-                F.col("is_content"), F.struct("block_no", "text")
-            )
+    def strip_row(doc_id, doc_html):
+        blocks = html_blocks_py(str(doc_id), doc_html)
+        flags = classify_blocks_py(blocks, classifier=classifier)
+        kept = [b["text"] for b, f_ in zip(blocks, flags) if f_]
+        return (
+            {
+                "doc_id": str(doc_id),
+                "content_text": "\n\n".join(kept),
+                "n_blocks": len(blocks),
+                "n_content_blocks": len(kept),
+            },
         )
-    )
-    return classified.groupBy(id_col).agg(
-        F.count("*").cast("bigint").alias("n_blocks"),
-        F.sum(F.col("is_content").cast("bigint")).alias("n_content_blocks"),
-        F.array_join(
-            F.transform(kept, lambda s: s["text"]), "\n\n"
-        ).alias("content_text"),
-    )
+
+    return map_rows(df.select(id_col, html_col), strip_row, STRIP_SCHEMA)
 
 
 def classify_blocks_py(

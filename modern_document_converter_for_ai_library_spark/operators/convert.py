@@ -45,14 +45,19 @@ CONVERT_OUTPUT_SCHEMA = T.StructType(
 def _convert_row(has_source: bool, has_hash: bool):
     """The convert row function for an input with or without the optional
     ``source_file`` and ``input_hash`` columns (in that order after
-    ``doc_id``, ``spans``); ``input_hash`` passes through unchanged."""
+    ``doc_id``, ``spans``); ``input_hash`` passes through unchanged. A null
+    ``source_file`` is treated like a missing column."""
 
     def convert_row(doc_id, spans, *optional):
-        source_file = str(optional[0]) if has_source else None
+        source_file = optional[0] if has_source else None
+        if source_file is not None:
+            source_file = str(source_file)
         res = convert_spans_doc(
             str(doc_id), struct_dicts(spans, SPAN_STRUCT), source_file=source_file
         )
-        res["source_file"] = source_file if has_source else f"{doc_id}.pdf"
+        res["source_file"] = (
+            f"{doc_id}.pdf" if source_file is None else source_file
+        )
         if has_hash:
             res["input_hash"] = optional[-1]
         return (res,)

@@ -1113,16 +1113,18 @@ def simhash_sketches(
     id_col: str = "doc_id",
     n_bits: int = 64,
 ) -> DataFrame:
-    """(id, simhash_bits): production-width SimHash via explode + groupBy.
+    """(id, simhash_bits): production-width SimHash via explode + groupBy,
+    the only SimHash builder.
 
-    Same math as functions/hashing.py:simhash_col (token-md5 bit parity,
-    bit b read from hex nibble b//4 with mask 8 >> b%4) but a different
-    plan: exploded token rows + 64 SUM(CASE) aggregates, all of which
-    whole-stage-codegen, versus the map-only higher-order fold that Spark
-    evaluates interpretively (measured 26.5 s -> ~2 s at sf0.1). Costs one
-    shuffle of (id, 64 ints) partial aggregates — map-side combine keeps
-    the exchange slim. Use simhash_col only when a shuffle is genuinely
-    unaffordable; equality of the two is pinned by test."""
+    Classic Charikar sketch: bit b is the sign of the sum over tokens of
+    (+1 if bit b of md5(token) else -1), bit b read from hex nibble b//4
+    with mask 8 >> b%4. Exploded token rows + 64 SUM(CASE) aggregates,
+    all of which whole-stage-codegen; a map-only higher-order fold over
+    the token array computes the same bits but Spark evaluates it
+    interpretively (measured 26.5 s vs ~2 s at sf0.1).
+    Costs one shuffle of (id, 64 ints) partial aggregates — map-side
+    combine keeps the exchange slim. A document with no token gets no
+    row. Pinned against a pure-Python twin by test."""
     if not 1 <= n_bits <= 128:
         raise ValueError("md5 provides at most 128 bits")
     toks = tokens_col(text_col)
@@ -1503,7 +1505,6 @@ def incremental_candidate_pairs(
       index shuffles ONCE and the bucket aggregation reuses that
       exchange — never worse than the unpruned plan, for batches too
       large to broadcast.
-    - ``"none"``: no pruning (the pre-index plan); kept for A/Bs.
 
     (The 10^12-row endgame for huge batches is the band-prefix-partitioned
     LONG index — ``band_index_long`` + ``read_band_index_pruned`` — whose
@@ -1512,7 +1513,7 @@ def incremental_candidate_pairs(
     is still applied on top to shrink touched-partition rows to touched
     BUCKETS before the aggregation.)
     """
-    if prune not in ("broadcast", "shuffle", "none"):
+    if prune not in ("broadcast", "shuffle"):
         raise ValueError(f"unknown prune strategy: {prune!r}")
     band_cols = [f"band_{k}" for k in range(n_bands)]
 
@@ -1533,13 +1534,10 @@ def incremental_candidate_pairs(
         )
     else:
         bb_long = _long(bb)
-    if prune != "none":
-        touched = nb_long.select("band_idx", "band_value").distinct()
-        if prune == "broadcast":
-            touched = F.broadcast(touched)
-        bb_long = bb_long.join(
-            touched, ["band_idx", "band_value"], "leftsemi"
-        )
+    touched = nb_long.select("band_idx", "band_value").distinct()
+    if prune == "broadcast":
+        touched = F.broadcast(touched)
+    bb_long = bb_long.join(touched, ["band_idx", "band_value"], "leftsemi")
     pairs = _bucket_local_pairs(
         nb_long.unionByName(bb_long), id_col, max_bucket_size,
         flag_col="_is_new",

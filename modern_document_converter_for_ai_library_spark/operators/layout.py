@@ -35,6 +35,7 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -133,9 +134,15 @@ def recover_reading_order(
 
 
 def _layout_row(doc_id, page, words):
+    # a null page arrives as NaN once its batch has a null; it stays null
     n_cols, lines = recover_reading_order(struct_dicts(words, WORD_STRUCT))
     return (
-        {"doc_id": str(doc_id), "page": int(page), "n_columns": n_cols, "lines": lines},
+        {
+            "doc_id": str(doc_id),
+            "page": None if pd.isna(page) else int(page),
+            "n_columns": n_cols,
+            "lines": lines,
+        },
     )
 
 

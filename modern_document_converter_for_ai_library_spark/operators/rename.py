@@ -82,8 +82,10 @@ RENAME_KERNEL_SCHEMA = T.StructType(
 )
 
 def _rename_row(doc_id, source_file, spans):
-    res = rename_doc(str(doc_id), struct_dicts(spans, SPAN_STRUCT), str(source_file))
-    res["source_file"] = str(source_file)
+    # a null source_file names the document like convert does: <doc_id>.pdf
+    source_file = f"{doc_id}.pdf" if source_file is None else str(source_file)
+    res = rename_doc(str(doc_id), struct_dicts(spans, SPAN_STRUCT), source_file)
+    res["source_file"] = source_file
     return (res,)
 
 

@@ -138,27 +138,29 @@ def budget_sample(
     Token count is the single-space-split non-empty token count (the
     repo-wide convention, functions/hashing.py:tokens_col).
 
-    Skew-safe two-phase cumulative sum (no per-source global window): a
+    Skew-safe cumulative sum (no per-source global window): a
     document's priority bucket is ``hash_micros * n_buckets // 1e6`` —
-    bucket order IS hash order, so the global running sum decomposes as
-    (sum of all earlier buckets) + (running sum within my bucket).
-    Phase 1 aggregates per-(source, bucket) token sums — a
-    sources x n_buckets frame whose prefix offsets come from a window
-    over that TINY frame; phase 2 runs the cumulative window partitioned
-    by (source, bucket), so a 100-TB single-source corpus spreads over
-    n_buckets partitions instead of one. Raise ``n_buckets`` to spread
-    hotter sources further; determinism is unaffected (tested two-phase
-    == one-window).
+    bucket order IS hash order, so the per-source running sum is the
+    bucketed prefix pass of :func:`_bucketed_prefix` partitioned by
+    source: a 100-TB single-source corpus spreads over n_buckets
+    partitions instead of one. Raise ``n_buckets`` to spread hotter
+    sources further; determinism is unaffected (tested two-phase ==
+    one-window).
+
+    Output: every column of ``df`` plus ``n_tokens``, ``hash_micros``,
+    ``cum_tokens`` and ``kept`` (stale columns of those names are
+    replaced), so a caller keeps the payload with ``.filter("kept")``
+    and no join back on the id.
     """
     thr = _budget_expr(budgets, key_col, default_budget)
+    cum = _priority_prefix(
+        df.drop("kept"), key_col, id_col, text_col, salt, n_buckets
+    )
     # the thr > 0 guard keeps zero-token documents out of EXCLUDED
     # (budget-0) sources — their inclusive cum_tokens of 0 would
     # otherwise satisfy 0 <= 0 and leak empty docs into the mix
-    out = _cumulative_tokens(
-        df, key_col, id_col, text_col, salt, n_buckets
-    ).withColumn("kept", (F.col("cum_tokens") <= thr) & (thr > F.lit(0)))
-    return out.select(
-        id_col, key_col, "n_tokens", "hash_micros", "cum_tokens", "kept"
+    return cum.withColumn(
+        "kept", (F.col("cum_tokens") <= thr) & (thr > F.lit(0))
     )
 
 
@@ -186,7 +188,61 @@ def _n_tokens(text_col: str) -> F.Column:
     return F.coalesce(F.size(tokens_col(text_col)), F.lit(0)).cast("bigint")
 
 
-def _cumulative_tokens(
+def _bucketed_prefix(
+    df: DataFrame,
+    bucket_col: str,
+    order_cols: list[str],
+    partition_cols: tuple[str, ...] = (),
+    sum_col: str | None = None,
+    rank_col: str | None = None,
+) -> DataFrame:
+    """The one skew-safe prefix pass behind every rank and running token
+    sum in this module. ``bucket_col`` must be a monotone prefix of
+    ``order_cols`` (bucket order IS key order — the range encoding of
+    *Global Range Encoding*, EDBT 2018), so a row's prefix within its
+    partition is (the totals of the earlier buckets) + (the prefix inside
+    its own bucket):
+
+      1. one per-(partition, bucket) aggregate: <= n_buckets rows per key;
+      2. one offsets window over that small frame. With no
+         ``partition_cols`` it holds <= n_buckets rows and is joined
+         back broadcast; per key it is a plain join, because the number
+         of keys is unbounded;
+      3. one window partitioned by (partition, bucket) in ``order_cols``
+         order, so one hot key spreads over n_buckets tasks.
+
+    Adds ``rank_col`` (the 0-based rank, when given) and ``cum_tokens``
+    (the inclusive running sum of ``sum_col``, when given) after every
+    column of ``df``, which must have neither yet.
+    """
+    from pyspark.sql import Window
+
+    keys = [*partition_cols, bucket_col]
+    w_off = (
+        Window.partitionBy(*partition_cols)
+        .orderBy(bucket_col)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    w_local = Window.partitionBy(*keys).orderBy(*order_cols)
+    aggs, offs, added = [], [], []
+    if rank_col is not None:
+        aggs.append(F.count("*").alias("_n"))
+        offs.append(F.coalesce(F.sum("_n").over(w_off), F.lit(0)).alias("_roff"))
+        rank = F.col("_roff") + F.row_number().over(w_local) - 1
+        added.append(rank.cast("bigint").alias(rank_col))
+    if sum_col is not None:
+        aggs.append(F.sum(sum_col).alias("_t"))
+        offs.append(F.coalesce(F.sum("_t").over(w_off), F.lit(0)).alias("_toff"))
+        w_run = w_local.rowsBetween(Window.unboundedPreceding, 0)
+        running = F.col("_toff") + F.sum(sum_col).over(w_run)
+        added.append(running.cast("bigint").alias("cum_tokens"))
+    offsets = df.groupBy(*keys).agg(*aggs).select(*keys, *offs)
+    if not partition_cols:
+        offsets = F.broadcast(offsets)
+    return df.join(offsets, keys, "left").select(*df.columns, *added)
+
+
+def _priority_prefix(
     df: DataFrame,
     key_col: str,
     id_col: str,
@@ -194,49 +250,30 @@ def _cumulative_tokens(
     salt: str,
     n_buckets: int,
 ) -> DataFrame:
-    """(id, key, n_tokens, hash_micros, cum_tokens): the skew-safe
-    two-phase per-key running token sum in (hash_micros, id) order —
-    shared by :func:`budget_sample` and :func:`epoch_budget_sample`."""
-    from pyspark.sql import Window
-
-    base = df.select(
-        F.col(id_col),
-        F.col(key_col),
-        _n_tokens(text_col).alias("n_tokens"),
-        hash_micros_col(id_col, salt).alias("hash_micros"),
-    ).withColumn(
-        "_bucket", (F.col("hash_micros") * n_buckets / MICRO).cast("bigint")
-    )
-
-    per_bucket = base.groupBy(key_col, "_bucket").agg(
-        F.sum("n_tokens").alias("_bucket_tokens")
-    )
-    w_off = (
-        Window.partitionBy(key_col)
-        .orderBy("_bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = per_bucket.select(
-        key_col,
-        "_bucket",
-        F.coalesce(F.sum("_bucket_tokens").over(w_off), F.lit(0)).alias(
-            "_offset"
-        ),
-    )
-
-    w_local = (
-        Window.partitionBy(key_col, "_bucket")
-        .orderBy("hash_micros", id_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        base.join(offsets, on=[key_col, "_bucket"], how="left")
+    """``df`` plus ``n_tokens``, ``hash_micros`` and ``cum_tokens``, the
+    per-key running token sum in (hash_micros, id) order (stale columns
+    of those names are replaced). The bucket is ``hash_micros * n_buckets
+    // 1e6``, a monotone prefix of the order."""
+    base = (
+        df.drop("n_tokens", "hash_micros", "cum_tokens")
+        .withColumn("n_tokens", _n_tokens(text_col))
+        .withColumn("hash_micros", hash_micros_col(id_col, salt))
         .withColumn(
-            "cum_tokens",
-            F.col("_offset") + F.sum("n_tokens").over(w_local),
+            "_bucket", (F.col("hash_micros") * n_buckets / MICRO).cast("bigint")
         )
-        .drop("_bucket", "_offset")
     )
+    return _bucketed_prefix(
+        base, "_bucket", ["hash_micros", id_col], (key_col,), sum_col="n_tokens"
+    ).drop("_bucket")
+
+
+def _shard_id(shard_tokens: int) -> F.Column:
+    """Start-offset shard id: ``(cum_tokens - n_tokens) div shard_tokens``."""
+    if shard_tokens <= 0:
+        raise ValueError(f"shard_tokens must be positive, got {shard_tokens}")
+    return F.expr(
+        "(cum_tokens - n_tokens) div CAST(%d AS BIGINT)" % shard_tokens
+    ).cast("bigint")
 
 
 def epoch_budget_sample(
@@ -262,15 +299,18 @@ def epoch_budget_sample(
       cum_tokens <= R) as epoch n_full.
 
     With B <= T this degenerates to exactly :func:`budget_sample`'s kept
-    set at epoch 0. Output one row per EMITTED COPY: (id, key, epoch,
-    n_tokens) — fan-out per document is n_full+1, i.e. bounded by the
-    caller's chosen upsampling factor, never by corpus size. The
-    per-source totals frame is one partial-aggregated groupBy of
-    sources-many rows; everything else reuses the two-phase cumulative
-    machinery (no global windows).
+    set at epoch 0. Output one row per EMITTED COPY: every column of
+    ``df`` plus ``n_tokens``, ``hash_micros``, ``cum_tokens`` and
+    ``epoch`` (stale columns of those names are replaced) — fan-out per
+    document is n_full+1, i.e. bounded by the caller's chosen upsampling
+    factor, never by corpus size. The per-source totals frame is one
+    partial-aggregated groupBy of sources-many rows; the running sum is
+    :func:`budget_sample`'s bucketed prefix pass (no global windows).
     """
     thr = _budget_expr(budgets, key_col, default_budget)
-    cum = _cumulative_tokens(df, key_col, id_col, text_col, salt, n_buckets)
+    cum = _priority_prefix(
+        df.drop("epoch"), key_col, id_col, text_col, salt, n_buckets
+    )
     totals = cum.groupBy(key_col).agg(F.sum("n_tokens").alias("_total"))
     j = cum.join(totals, on=key_col, how="left").withColumn(
         "_budget", thr
@@ -310,9 +350,7 @@ def epoch_budget_sample(
             & (F.col("_budget") > 0)
         )
     )
-    return out.select(
-        id_col, key_col, "epoch", "n_tokens", "hash_micros", "cum_tokens"
-    )
+    return out.select(*cum.columns, "epoch")
 
 
 def exact_isqrt(x: F.Column) -> F.Column:
@@ -511,52 +549,25 @@ def _auto_buckets(df: DataFrame, n_rows: int | None) -> int:
     return max(32, min(1 << 20, want))
 
 
-def _bucketed_rank(
+def _shuffle_bucket(
     df: DataFrame,
     id_col: str,
     salt: str,
     n_buckets: int | None,
     n_rows: int | None,
-    tokens_col: str | None = None,
 ) -> DataFrame:
-    """The bucketed rank body shared by :func:`corpus_shuffle` and
-    :func:`shuffled_shard_assign` (scale shape: see corpus_shuffle).
-    Adds ``shuffle_rank`` and, with ``tokens_col``, ``cum_tokens``: the
-    running sum of ``tokens_col`` in rank order, current row included."""
-    from pyspark.sql import Window
-
+    """``df`` plus the 60-bit shuffle key ``_hm`` and its leading-bits
+    bucket ``_bucket`` (a monotone floor-div, so bucket order IS key
+    order) — the input of the global prefix pass shared by
+    :func:`corpus_shuffle` and :func:`shuffled_shard_assign`."""
     if n_buckets is None:
         n_buckets = _auto_buckets(df, n_rows)
     if n_buckets <= 0:
         raise ValueError(f"n_buckets must be positive, got {n_buckets}")
     bucket_width = -(-SHUFFLE_KEY_SPACE // n_buckets)  # ceil: bucket < n_buckets
-    base = df.withColumn("_hm", shuffle_key_col(id_col, salt)).withColumn(
+    return df.withColumn("_hm", shuffle_key_col(id_col, salt)).withColumn(
         "_bucket", F.expr(f"_hm div CAST({bucket_width} AS BIGINT)")
     )
-    w_off = Window.orderBy("_bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    # the rank offset keeps each operator's historic alias so the
-    # optimized plans recorded in BENCH/PLANS.md stay byte-identical
-    roff = "_offset" if tokens_col is None else "_roff"
-    aggs = [F.count("*").alias("_n")]
-    offs = [F.coalesce(F.sum("_n").over(w_off), F.lit(0)).alias(roff)]
-    if tokens_col is not None:
-        aggs.append(F.sum(tokens_col).alias("_t"))
-        offs.append(F.coalesce(F.sum("_t").over(w_off), F.lit(0)).alias("_toff"))
-    offsets = base.groupBy("_bucket").agg(*aggs).select("_bucket", *offs)
-    w_local = Window.partitionBy("_bucket").orderBy("_hm", id_col)
-    ranked = base.join(F.broadcast(offsets), "_bucket", "left").withColumn(
-        "shuffle_rank",
-        (F.col(roff) + F.row_number().over(w_local) - 1).cast("bigint"),
-    )
-    if tokens_col is not None:
-        w_run = w_local.rowsBetween(Window.unboundedPreceding, 0)
-        ranked = ranked.withColumn(
-            "cum_tokens",
-            (F.col("_toff") + F.sum(tokens_col).over(w_run)).cast("bigint"),
-        )
-    return ranked.drop("_hm", "_bucket", roff, "_toff")
 
 
 def corpus_shuffle(
@@ -609,8 +620,16 @@ def corpus_shuffle(
     values by id; duplicate ids would share BOTH keys and their relative
     ranks would fall to row_number's arbitrary order — nondeterministic
     across partitionings. Run exact_dedup/assign ids upstream first.
+
+    Output: every column of ``df`` plus ``shuffle_rank`` (a stale one is
+    replaced).
     """
-    return _bucketed_rank(df, id_col, salt, n_buckets, n_rows)
+    keyed = _shuffle_bucket(
+        df.drop("shuffle_rank"), id_col, salt, n_buckets, n_rows
+    )
+    return _bucketed_prefix(
+        keyed, "_bucket", ["_hm", id_col], rank_col="shuffle_rank"
+    ).drop("_hm", "_bucket")
 
 
 def shard_assign(
@@ -644,25 +663,20 @@ def shard_assign(
     (:func:`shard_manifest`) records actual masses.
 
     Scale shape: identical to :func:`budget_sample` — the skew-safe
-    two-phase bucketed cumulative sum (``_cumulative_tokens``), no
-    per-key global window; a 100-TB single-source corpus spreads over
-    ``n_buckets`` partitions. Pure function of row values: same corpus
-    => same shards under any partitioning, caching, or recompute.
+    bucketed prefix pass, no per-key global window; a 100-TB
+    single-source corpus spreads over ``n_buckets`` partitions. Pure
+    function of row values: same corpus => same shards under any
+    partitioning, caching, or recompute.
+
+    Output: every column of ``df`` plus ``n_tokens``, ``hash_micros``,
+    ``cum_tokens`` and ``shard_id`` (stale columns of those names are
+    replaced).
     """
-    if shard_tokens <= 0:
-        raise ValueError(f"shard_tokens must be positive, got {shard_tokens}")
-    cum = _cumulative_tokens(df, key_col, id_col, text_col, salt, n_buckets)
-    shard = F.expr(
-        "(cum_tokens - n_tokens) div CAST(%d AS BIGINT)" % shard_tokens
-    ).cast("bigint")
-    return cum.select(
-        id_col,
-        key_col,
-        "n_tokens",
-        "hash_micros",
-        "cum_tokens",
-        shard.alias("shard_id"),
+    shard = _shard_id(shard_tokens)
+    cum = _priority_prefix(
+        df.drop("shard_id"), key_col, id_col, text_col, salt, n_buckets
     )
+    return cum.withColumn("shard_id", shard)
 
 
 def shuffled_shard_assign(
@@ -676,7 +690,8 @@ def shuffled_shard_assign(
 ) -> DataFrame:
     """The composed terminal training layout in ONE bucketed pass:
     global seeded shuffle + fixed-token-mass shards that are PREFIXES of
-    the shuffled order. Adds ``n_tokens``, ``shuffle_rank`` (exactly
+    the shuffled order. Adds (replacing stale columns of these names)
+    ``n_tokens``, ``shuffle_rank`` (exactly
     :func:`corpus_shuffle`'s rank — same 60-bit key, same tie-break),
     ``cum_tokens`` (running token sum in shuffle order), and
 
@@ -698,16 +713,19 @@ def shuffled_shard_assign(
     like :func:`corpus_shuffle` (same ``n_rows`` caller-knows-the-count
     shortcut).
     """
-    if shard_tokens <= 0:
-        raise ValueError(f"shard_tokens must be positive, got {shard_tokens}")
-    with_tokens = df.withColumn("n_tokens", _n_tokens(text_col))
-    return _bucketed_rank(
-        with_tokens, id_col, salt, n_buckets, n_rows, tokens_col="n_tokens"
-    ).withColumn(
-        "shard_id",
-        F.expr(
-            "(cum_tokens - n_tokens) div CAST(%d AS BIGINT)" % shard_tokens
-        ).cast("bigint"),
+    shard = _shard_id(shard_tokens)
+    base = df.drop("n_tokens", "shuffle_rank", "cum_tokens", "shard_id")
+    keyed = _shuffle_bucket(
+        base.withColumn("n_tokens", _n_tokens(text_col)),
+        id_col, salt, n_buckets, n_rows,
+    )
+    return (
+        _bucketed_prefix(
+            keyed, "_bucket", ["_hm", id_col],
+            sum_col="n_tokens", rank_col="shuffle_rank",
+        )
+        .drop("_hm", "_bucket")
+        .withColumn("shard_id", shard)
     )
 
 
@@ -759,15 +777,19 @@ def write_training_layout(
     """Write ``df`` (overwrite) as the terminal training layout and return
     its accounting: ``n_docs``, ``tokens_out``, plus ``n_shards``,
     ``max_shard_tokens`` and ``manifest`` when sharded (``shard_tokens >
-    0``). Stale ``shard_id``/``shuffle_rank`` columns are replaced.
+    0``). Stale ``shard_id``/``shuffle_rank`` columns are replaced. The
+    operators carry every column of ``df``, so no branch joins back by id
+    (a join-back would scatter every shard over every task); their
+    scratch columns (``n_tokens``, ``cum_tokens``, ``hash_micros``) stay
+    out of the written files.
 
       - shard + shuffle: :func:`shuffled_shard_assign`'s frame written as
         computed, PARTITIONED BY shard_id. Its partitions hold buckets of
         contiguous ranks, so the data files are at most n_shards +
-        n_buckets; an id join-back would scatter every shard over every
-        task.
-      - shard: :func:`shard_assign` joined back by id, repartitioned and
-        PARTITIONED BY (key_col, shard_id) — one file per directory.
+        n_buckets.
+      - shard: :func:`shard_assign`'s frame written as computed,
+        repartitioned and PARTITIONED BY (key_col, shard_id) — one file
+        per directory.
       - shuffle: :func:`corpus_shuffle`; neither: ``df`` as is.
 
     The manifest (default ``<output>_manifest``) is the matching
@@ -787,7 +809,7 @@ def write_training_layout(
     parts = None
     if sharded and shuffle_salt is not None:
         assigned = shuffled_shard_assign(
-            df.drop("shard_id", "shuffle_rank"),
+            df,
             shard_tokens,
             id_col=id_col,
             text_col=text_col,
@@ -807,16 +829,13 @@ def write_training_layout(
             salt=salt,
         ).persist()
         parts = [key_col, "shard_id"]
-        out = (
-            df.drop("shard_id")
-            .join(assigned.select(id_col, "shard_id"), on=id_col, how="inner")
-            .repartition(*parts)
+        out = assigned.drop("n_tokens", "hash_micros", "cum_tokens").repartition(
+            *parts
         )
         man = shard_manifest(assigned, key_col=key_col)
     elif shuffle_salt is not None:
         out = corpus_shuffle(
-            df.drop("shuffle_rank"), id_col=id_col, salt=shuffle_salt,
-            n_rows=n_rows,
+            df, id_col=id_col, salt=shuffle_salt, n_rows=n_rows
         )
     else:
         out = df

@@ -1120,7 +1120,7 @@ def spark_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return budget_sample(
         docs, _BUDGETS, default_budget=_BUDGET_DEFAULT
-    )
+    ).select("doc_id", "source", "n_tokens", "hash_micros", "cum_tokens", "kept")
 
 
 _TOKEN_BUDGET_SQL = r"""
@@ -1165,7 +1165,9 @@ def spark_epoch_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "source", "text"
     )
-    return epoch_budget_sample(docs, _EPOCH_BUDGETS, default_budget=0)
+    return epoch_budget_sample(docs, _EPOCH_BUDGETS, default_budget=0).select(
+        "doc_id", "source", "epoch", "n_tokens", "hash_micros", "cum_tokens"
+    )
 
 
 _EPOCH_MIX_SQL = r"""
@@ -1323,7 +1325,9 @@ def spark_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "source", "text"
     )
-    return shard_assign(docs, _SHARD_TOKENS)
+    return shard_assign(docs, _SHARD_TOKENS).select(
+        "doc_id", "source", "n_tokens", "hash_micros", "cum_tokens", "shard_id"
+    )
 
 
 def spark_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1872,7 +1876,7 @@ WHERE {hamming} <= 0
 
 # ---------------------------------------------------------------------------
 # q_simhash64_pairs — PRODUCTION-width SimHash near-dup pairs: 64-bit
-# sketches (functions/hashing.py:simhash_col — token-md5 bit parity), 4
+# sketches (operators/dedup.py:simhash_sketches — token-md5 bit parity), 4
 # bands of 16 bits (2^16-cardinality band keys, the Manku WWW'07 shape),
 # pairs within Hamming distance 3 via packed-word XOR+bit_count verify.
 # The oracle computes the identical sketches in DuckDB but finds pairs by
@@ -1885,10 +1889,9 @@ WHERE {hamming} <= 0
 def spark_simhash64_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import simhash_pairs, simhash_sketches
 
-    # explode+groupBy sketch build (whole-stage codegen) — the map-only
-    # higher-order fold simhash_col computes identical bits but evaluates
-    # interpretively (26.5 s vs ~2 s here at sf0.1, equality pinned by
-    # tests/test_simhash64.py)
+    # explode+groupBy sketch build (whole-stage codegen; a map-only
+    # higher-order fold computed identical bits interpretively, 26.5 s vs
+    # ~2 s here at sf0.1)
     sk = simhash_sketches(
         _docs(spark, sf_dir).select(
             F.col("doc_id").cast("bigint").alias("doc_id"), "text"

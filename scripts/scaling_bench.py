@@ -438,15 +438,14 @@ def run_job(d, balance=None):
         nxt.count(); cur.unpersist(); cur = nxt; _mark("near")
         # flat per-source token budget: the skewed big sources get capped
         # (~1/3 of src0 survives), the small ones keep everything — a
-        # BINDING mixture, not a pass-through. budget_sample returns the
-        # slim accounting frame; survivors join back left_semi (the
-        # curate_job shape)
-        mix_keep = budget_sample(
-            cur, dict(), default_budget=n * 25).filter("kept").select("doc_id")
-        mixed = cur.join(mix_keep, "doc_id", "left_semi")
+        # BINDING mixture, not a pass-through. budget_sample carries the
+        # payload, so survivors are a filter of its frame (the curate_job
+        # shape)
+        mixed = budget_sample(
+            cur, dict(), default_budget=n * 25).filter("kept").select(cur.columns)
         final = shuffled_shard_assign(
-            mixed.select("doc_id", "source", "text"), 100000, salt="probe",
-            n_rows=n)  # upper bound: skips a full re-pass of the mix join
+            mixed, 100000, salt="probe",
+            n_rows=n)  # upper bound: skips a full re-pass of the mix stage
         out = final.select("doc_id", "source", "shuffle_rank", "shard_id")
         # the mix + shuffle+shard stages materialize in the outer timed
         # noop write; their wall = rep total - sum(front stages)

@@ -10,7 +10,6 @@ from modern_document_converter_for_ai_library_spark.operators.boilerplate import
     classify_blocks,
     classify_blocks_py,
     html_blocks_py,
-    html_to_blocks,
     strip_boilerplate_html,
 )
 
@@ -103,25 +102,25 @@ def test_columnar_tree_equals_sequential(spark):
     assert got == expected
 
 
-def test_kernel_mode_equals_columnar_mode(spark):
-    """The map-only kernel strip (zero shuffles) and the exploded
-    block-table path must produce identical documents."""
+def test_kernel_strip_equals_python_twin(spark):
+    """The map-only kernel strip produces exactly the documents the
+    pure-Python segmenter + sequential classifier give, for both
+    classifiers."""
     rows = [(f"d{i}", _page(i, n_paras=2 + i % 3)) for i in range(8)]
     df = spark.createDataFrame(rows, ["doc_id", "html"]).repartition(3)
     for classifier in ("num_words", "density"):
         kernel = {
             r["doc_id"]: (r["content_text"], r["n_blocks"], r["n_content_blocks"])
-            for r in strip_boilerplate_html(
-                df, classifier=classifier, mode="kernel"
-            ).collect()
+            for r in strip_boilerplate_html(df, classifier=classifier).collect()
         }
-        columnar = {
-            r["doc_id"]: (r["content_text"], r["n_blocks"], r["n_content_blocks"])
-            for r in strip_boilerplate_html(
-                df, classifier=classifier, mode="columnar"
-            ).collect()
-        }
-        assert kernel == columnar
+        twin = {}
+        for doc_id, html in rows:
+            blocks = html_blocks_py(doc_id, html)
+            flags = classify_blocks_py(blocks, classifier=classifier)
+            kept = [b["text"] for b, f in zip(blocks, flags) if f]
+            twin[doc_id] = ("\n\n".join(kept), len(blocks), len(kept))
+        assert kernel == twin
+        assert all(n_kept < n for _, n, n_kept in twin.values())
 
 
 def test_kernel_mode_is_map_only(spark):
@@ -181,13 +180,6 @@ def test_strip_boilerplate_density_classifier(spark):
         r = out[f"d{i}"]
         assert "standard of review" in r["content_text"]
         assert "Home News About" not in r["content_text"]
-
-
-def test_html_to_blocks_plan_is_one_arrow_stage(spark):
-    df = spark.createDataFrame([("d0", _page(0))], ["doc_id", "html"])
-    plan = html_to_blocks(df)._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert plan.count("MapInPandas") == 1
 
 
 def test_html_blocks_fuzz_invariants():

@@ -112,3 +112,31 @@ def test_plan_has_single_python_stage(spark, corpus):
     plan = convert_documents(df)._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     assert "BatchEvalPython" not in plan  # row-oriented Python UDF node
+
+
+def test_null_source_file_is_like_a_missing_column(spark, corpus):
+    """A null source_file never reaches a kernel as the string "None":
+    convert treats it like a missing column, rename names the document
+    <doc_id>.pdf, and both write <doc_id>.pdf."""
+    from pyspark.sql import functions as F
+
+    from modern_document_converter_for_ai_library_spark.operators.rename import (
+        rename_documents,
+    )
+
+    row = corpus.iloc[[0]].copy()
+    doc_id = row.doc_id.iloc[0]
+    row["source_file"] = None
+    df = spark.createDataFrame(row, schema=DOCS_SCHEMA)
+
+    got = convert_documents(df).collect()[0].asDict(recursive=True)
+    missing = convert_documents(df.drop("source_file")).collect()[0]
+    assert got == missing.asDict(recursive=True)
+    assert got["source_file"] == f"{doc_id}.pdf"
+
+    renamed = rename_documents(df).collect()[0].asDict(recursive=True)
+    named = rename_documents(
+        df.withColumn("source_file", F.lit(f"{doc_id}.pdf"))
+    ).collect()[0]
+    assert renamed == named.asDict(recursive=True)
+    assert renamed["source_file"] == f"{doc_id}.pdf"

@@ -135,3 +135,16 @@ def test_parse_layout_spark(spark):
         ]
     plan = parse_layout(df)._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan and "BatchEvalPython" not in plan
+
+
+def test_parse_layout_null_page_keeps_the_row(spark):
+    """A null page number yields a row with a null page instead of
+    failing the task."""
+    words = [("alpha", 0.0, 0.0, 40.0, 10.0)]
+    df = spark.createDataFrame(
+        [("d0", None, words), ("d1", 2, words)], schema=PAGES_SCHEMA
+    )
+    out = {r["doc_id"]: r for r in parse_layout(df).collect()}
+    assert out["d0"]["page"] is None
+    assert list(out["d0"]["lines"]) == ["alpha"]
+    assert out["d1"]["page"] == 2

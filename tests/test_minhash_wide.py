@@ -226,8 +226,9 @@ def test_near_dedup_incremental_rejects_malformed_index(spark):
 
 
 def test_near_dedup_incremental_prune_strategies_identical(spark):
-    """broadcast / shuffle / none pruning are pure plan choices — outputs
-    are identical (and an unknown strategy is rejected)."""
+    """broadcast / shuffle pruning are pure plan choices — outputs are
+    identical (and an unknown strategy, or the removed unpruned "none",
+    is rejected)."""
     from modern_document_converter_for_ai_library_spark.operators.dedup import (
         near_dedup_incremental,
     )
@@ -247,10 +248,11 @@ def test_near_dedup_incremental_prune_strategies_identical(spark):
         for r in near_dedup_incremental(new, base, prune=p).collect()
     )
     got = key("broadcast")
-    assert got == key("shuffle") == key("none")
+    assert got == key("shuffle")
     assert got[0] == (101, 10, True)
-    with pytest.raises(ValueError, match="prune"):
-        near_dedup_incremental(new, base, prune="bogus")
+    for bad in ("bogus", "none"):
+        with pytest.raises(ValueError, match="prune"):
+            near_dedup_incremental(new, base, prune=bad)
 
 
 def test_near_dedup_incremental_randomized_equality(spark):

@@ -10,12 +10,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from modern_document_converter_for_ai_library_spark.functions.hashing import (
-    simhash_col,
-    tokens_col,
-)
 from modern_document_converter_for_ai_library_spark.operators.dedup import (
     simhash_pairs,
+    simhash_sketches,
 )
 
 
@@ -30,6 +27,10 @@ def _py_simhash(text: str, n_bits: int = 64) -> str:
     return "".join("1" if s > 0 else "0" for s in sums)
 
 
+def _sketches(df) -> dict:
+    return {r["doc_id"]: r["simhash_bits"] for r in simhash_sketches(df).collect()}
+
+
 def test_simhash64_matches_pure_python(spark):
     texts = [
         "the quick brown fox jumps over the lazy dog",
@@ -38,12 +39,7 @@ def test_simhash64_matches_pure_python(spark):
         "single",
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], ["doc_id", "text"])
-    got = {
-        r["doc_id"]: r["sh"]
-        for r in df.select(
-            "doc_id", simhash_col(tokens_col("text")).alias("sh")
-        ).collect()
-    }
+    got = _sketches(df)
     for i, t in enumerate(texts):
         assert got[i] == _py_simhash(t), t
         assert len(got[i]) == 64
@@ -53,10 +49,9 @@ def test_simhash64_similar_docs_close_random_docs_far(spark):
     a = "the court denied the motion for summary judgment in the case"
     b = a + " today"  # one extra token: most bit-sums keep their sign
     c = "completely unrelated text about quantum chromodynamics lattice"
-    df = spark.createDataFrame(
-        [(0, a), (1, b), (2, c)], ["doc_id", "text"]
-    ).select("doc_id", simhash_col(tokens_col("text")).alias("sh"))
-    sh = {r["doc_id"]: r["sh"] for r in df.collect()}
+    sh = _sketches(
+        spark.createDataFrame([(0, a), (1, b), (2, c)], ["doc_id", "text"])
+    )
     d_ab = sum(x != y for x, y in zip(sh[0], sh[1]))
     d_ac = sum(x != y for x, y in zip(sh[0], sh[2]))
     assert d_ab < d_ac
@@ -122,13 +117,10 @@ def test_simhash_pairs_production_width_guardrail(spark, sketches64):
         simhash_pairs(df, n_bits=64, n_bands=4, max_hamming=4)
 
 
-def test_simhash_sketches_equals_simhash_col(spark):
-    """The codegen explode+groupBy builder and the map-only fold must
-    produce identical bit-strings (they share the nibble-mask math)."""
-    from modern_document_converter_for_ai_library_spark.operators.dedup import (
-        simhash_sketches,
-    )
-
+def test_simhash_sketches_match_pure_python_on_corpus(spark):
+    """The explode+groupBy sketch builder equals the pure-Python twin on
+    real corpus text. A document with no token gets no sketch row, so
+    only documents with at least one token are compared."""
     df = spark.read.parquet("/root/testdata/sf0.01/documents.parquet").select(
         "doc_id", "text"
     ).limit(100)
@@ -137,9 +129,8 @@ def test_simhash_sketches_equals_simhash_col(spark):
         for r in simhash_sketches(df).collect()
     }
     slow = {
-        r["doc_id"]: r["sh"]
-        for r in df.select(
-            "doc_id", simhash_col(tokens_col("text")).alias("sh")
-        ).collect()
+        r["doc_id"]: _py_simhash(r["text"])
+        for r in df.collect()
+        if r["text"] and any(r["text"].split(" "))
     }
-    assert fast == slow and len(fast) == 100
+    assert fast == slow and len(slow) > 90
